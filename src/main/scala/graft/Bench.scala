@@ -24,10 +24,10 @@ import org.apache.spark.sql.SparkSession
   *     under-measure; the DuckDB baseline fetches all rows too).
   *
   * Artifact contract: the final stdout line must survive a ~2 KB tail
-  * capture, so it uses SHORT keys ("q01".."q81") and 3-decimal seconds
-  * (~1.1 KB for 81 queries). The full-name, full-precision per-run detail
-  * (all three timed runs + min/median) goes to BENCH_DETAIL.json
-  * (override with SPARK_GRAFT_BENCH_DETAIL), which is committed per round.
+  * capture, so it uses short keys and short values (see the emission
+  * below). The full-name, full-precision per-run detail (all three timed
+  * runs + min/median) goes to BENCH_DETAIL.json (override with
+  * SPARK_GRAFT_BENCH_DETAIL), which is committed per round.
   */
 object Bench {
   private val Warmups = 2
@@ -38,24 +38,8 @@ object Bench {
     graft.tools.EngineLog.echoToConsole = false
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // benchmark outputs are report-sized by contract → single-partition
-      // final sort instead of a range exchange + its sampling job
-      .config("spark.graft.smallResultSort", "true")
-      // single-row-group fixtures otherwise scan single-threaded (a row
-      // group is the minimum split); one memoized ingest rewrite — absorbed
-      // by the warmups — lets every scan parallelize. See Tables.sourcePath.
-      .config("spark.graft.compactScans", "true")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = benchCpus
+    val spark = session(cpus)
 
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -230,41 +214,14 @@ object Bench {
     Files.move(tmp, Paths.get(detailPath), StandardCopyOption.REPLACE_EXISTING,
       StandardCopyOption.ATOMIC_MOVE)
 
-    // Compact final line: short keys ("q01") + 2dp seconds so the
-    // driver's ~2 KB tail capture always parses at 124 queries (full
-    // 6dp precision lives in the detail file; BASELINE's table prints
-    // 2dp). `queries` stays name→seconds (the driver contract);
-    // run-to-run noise surfaces in `noisy` — the ≤6 queries with the
-    // largest (max-min)/median percentage at ≥30% — so a drifting host
-    // is self-evident in the artifact without blowing the tail budget
-    // (r7's q21/q82 adjudication needed exactly this). RegistrySpec
-    // guards the worst-case line width.
-    // adaptive precision: 2dp below 10 s, 1dp to 100 s, integer seconds
-    // above — worst-case value width stays 4 chars through 9999 s
-    // ("9.99"/"99.9"/"9999"), which is what keeps the 144-query line
-    // under the tail budget (a 1dp "100.0" would be the first 5-char
-    // value and silently break the width guard's model); micro-queries
-    // keep their 10 ms resolution where it matters
-    // since r15 the line value CLAMPS at 999 s (3-char worst case — a
-    // query past 16 minutes is a stall, and its true median is in the
-    // detail file): the 4-char "9999" model was the per-query byte that
-    // priced the 165th query out of the tail budget.
-    // r16 (186 queries): the r15 line's TYPICAL width already overflowed
-    // the capture (sub-10 s queries print 4-char "0.52" 2dp values; the
-    // r15 BENCH artifact shows parsed=null — the committed detail file
-    // carried the round). Two levers restore a parseable line with
-    // headroom: map keys drop the redundant "q" prefix ("01".."186" —
-    // full names live in the detail file; −1 byte × every query) and the
-    // value ladder flattens to 1dp below 10 s / integer seconds to 98 /
-    // clamp "99" (a per-query 99 s median at sf0.1 is a stall; suite
-    // total is ~150 s) — worst-case value width is now 3 chars REAL, not
-    // just modelled. RegistrySpec guards the new model.
+    // The final stdout line is the driver contract: it must survive the
+    // driver's ~2 KB tail capture at the full query surface, and
+    // RegistrySpec's width guard models its worst case. Hence keys are
+    // the query ordinal in base 36 ("q197" → "5h"; full names and
+    // full-precision runs live in the detail file), values are 1dp below
+    // 10 s, integer seconds to 98 and clamp at "99" (3 chars at worst),
+    // and the run-noise flags print only when set.
     val qs = results.map { t =>
-      // r18 (200 queries): the decimal key model ("1".."200") priced the
-      // 200th query at exactly the 2000 B guard — keys are now the query
-      // ORDINAL IN BASE 36 ("q197" → "5h"; derivation is one
-      // Integer.parseInt(k, 36) away, and full names live in the detail
-      // file). 1-2 chars through q1295 — ~127 B back at 200 queries.
       val short = Integer.toString(
         t.name.takeWhile(_ != '_').stripPrefix("q").toInt, 36)
       // boundary: a median in [9.95, 10) would %.1f-print 4-char "10.0",
@@ -276,36 +233,41 @@ object Bench {
       "\"" + short + "\":" + v
     }.mkString("{", ",", "}")
     val noisyCount = results.filterNot(_.failed).count(spreadPct(_) >= NoisySpreadPct)
-    // min_total/stat/detail-path live ONLY in the detail artifact now:
-    // at 136 queries the line hit 1978 B of the driver's ~2 KB tail
-    // capture, and those keys are the only droppable bytes — removing
-    // them bought ~6 queries of surface headroom under the width guard;
-    // at 156 queries the builder-added aux keys shrank
-    // (retried→rtry, contended→cont, n_queries→nq, n_failed→nf), at
-    // 159 the per-query NOISY MAP collapsed to a COUNT and `sf` to its
-    // basename, and at 161 the fully-DERIVABLE aux keys dropped
-    // entirely (rtry = detail's noisy_retried; nq = |queries|; nf = the
-    // count of -1 values in `queries`) — the per-query spreads are in
-    // BENCH_DETAIL.json's runs_sec (committed every round), so the
-    // r7-style host-drift adjudication still has its data; the line
-    // keeps only the flags that say "go look" ("noisy">0 or "cont").
-    // The driver contract keys (metric/value/unit/queries/sf) stay.
     val sfShort = sfDir.split('/').last
-    // r17 headroom: at 196 queries the line reads 1965 B of the ~2 KB
-    // capture — the "go look" flags now print ONLY when they say go look
-    // ("noisy":0 and "cont":false are the overwhelmingly common values
-    // and carry no information; absence means the same thing), buying
-    // ~24 B ≈ 3 queries of surface before the next recalibration.
-    // RegistrySpec's width guard models the flags-present worst case.
     val flags = (if (noisyCount > 0) s""","noisy":$noisyCount""" else "") +
       (if (contended) s""","cont":true""" else "")
-    // "kb":36 is the key-schema marker (r18 ADVICE): base-36 ordinal
-    // keys silently collide with r17's decimal keys on multi-digit
-    // values ("10" = q10 decimal but q36 base-36), so the line declares
-    // its key base — longitudinal tooling mixing rounds can dispatch on
-    // the marker (absent = decimal, the pre-r18 encoding) instead of
-    // misattributing timings with no error.
+    // "kb":36 declares the key base: artifacts without it use decimal
+    // keys, which collide with base-36 ones on multi-digit values
     println(s"""{"metric":"total_warm_sec","value":${f"$total%.2f"},"unit":"sec","kb":36,"queries":$qs$flags,"sf":"$sfShort"}""")
     spark.stop()
+  }
+
+  /** Local cores the bench session uses: SPARK_GRAFT_CPUS, else the
+    * host's, capped at 32.
+    */
+  def benchCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+
+  /** The benchmark session — shared with [[graft.tools.ProfileOne]] so a
+    * profile measures the configuration the bench times.
+    */
+  def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      // benchmark outputs are report-sized by contract → single-partition
+      // final sort instead of a range exchange + its sampling job
+      .config("spark.graft.smallResultSort", "true")
+      // single-row-group fixtures otherwise scan single-threaded (a row
+      // group is the minimum split); one memoized ingest rewrite — absorbed
+      // by the warmups — lets every scan parallelize. See Tables.sourcePath.
+      .config("spark.graft.compactScans", "true")
+      .withExtensions(new graft.functions.GraftExtensions)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

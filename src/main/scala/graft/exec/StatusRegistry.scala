@@ -15,9 +15,13 @@ final class StatusRegistry extends SparkListener {
   private val records = TrieMap.empty[String, TaskRecord]
   private val jobsByTask = TrieMap.empty[String, Vector[Int]]
 
+  /** Register `spec` as running. An id that is already registered is
+    * refused, never overwritten: the first task's record stays intact.
+    */
   def markRunning(spec: TaskSpec): Unit =
-    records.put(spec.taskId,
-      TaskRecord(spec, "running", Instant.now(), None, None)): Unit
+    if (records.putIfAbsent(spec.taskId,
+        TaskRecord(spec, "running", Instant.now(), None, None)).isDefined)
+      throw new InvalidTaskSpec(s"task id '${spec.taskId}' is already registered")
 
   def markFinished(taskId: String, outcome: TaskOutcome): Unit =
     records.updateWith(taskId) {

@@ -45,9 +45,12 @@ object Tasks {
       finished: Option[Instant],
       outcome: Option[TaskOutcome])
 
-  /** 5-char task id (governor.py:405-419 uses a 5-char random ident). */
+  /** Random task id: the full 128-bit UUID in hex. The reference's
+    * 5-char ident (governor.py:405-419) spans only ~1 M ids, so a busy
+    * node collides (birthday bound ~1.2 k tasks for even odds).
+    */
   def newTaskId(): String =
-    java.util.UUID.randomUUID().toString.replace("-", "").take(5)
+    java.util.UUID.randomUUID().toString.replace("-", "")
 
   /** Raised when a subtask exhausts its retries; carries the origin id the
     * parent's TaskFailed must expose (process.py:113-141).

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Overlap
 
 /** Connected components over a pair graph by iterated min-label
   * propagation — the transitive-closure step a near-dup dedup pipeline
@@ -82,7 +83,7 @@ object Components {
     */
   private[ops] final class LiveFrames {
     // registrations synchronize: contraction materialises two round
-    // frames CONCURRENTLY (see [[par2]]), so the tracker must admit two
+    // frames CONCURRENTLY ([[Overlap]]), so the tracker must admit two
     // threads (IdentityHashMap alone is not thread-safe)
     private val live = new java.util.IdentityHashMap[DataFrame, Unit]()
     def mat(df: DataFrame): DataFrame = {
@@ -100,30 +101,6 @@ object Components {
       live.keySet.forEach(df => df.unpersist(): Unit)
       live.clear()
     }
-  }
-
-  /** Run two INDEPENDENT materialising actions concurrently (the
-    * optimization guide's §2.6: actions are only sequential because the
-    * driver calls them sequentially). Contraction's per-round label
-    * rewrite and quotient-edge rewrite both read only the (already
-    * materialised) `g`, so overlapping them fills each job's task tail
-    * with the other's tasks and halves the per-round scheduling floor.
-    * Both futures are always awaited; the first thunk's failure is
-    * rethrown first (the sequential order's error), and the results are
-    * the same frames the sequential calls produced.
-    */
-  private def par2[A, B](fa: => A, fb: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val f1 = scala.concurrent.Future(fa)
-      val f2 = scala.concurrent.Future(fb)
-      val inf = scala.concurrent.duration.Duration.Inf
-      val r1 = scala.concurrent.Await.ready(f1, inf).value.get
-      val r2 = scala.concurrent.Await.ready(f2, inf).value.get
-      (r1.get, r2.get)
-    } finally pool.shutdown()
   }
 
   /** Run `body` with a [[LiveFrames]] tracker; any throw releases every
@@ -292,7 +269,7 @@ object Components {
       // of the inputs — materialise them concurrently (§2.6); the
       // materialising count doubles as round 0's convergence probe
       // (formerly a second count job over the fresh cache)
-      val (labels0, qe0) = par2(
+      val (labels0, qe0) = Overlap(
         lf.mat(nodes.select(col("id"), col("id").as("cluster"))),
         lf.matCount(edges
           .select(least(col("a"), col("b")).as("a"),
@@ -328,7 +305,7 @@ object Components {
         // the materialised g — two independent actions, run concurrently
         // (§2.6); the edge side's materialise + convergence probe stay
         // fused in ONE action (matCount)
-        val (newLabels, newQeN) = par2(
+        val (newLabels, newQeN) = Overlap(
           lf.mat(labels
             .join(g, labels("cluster") === g("c"), "left")
             .select(labels("id"),

@@ -358,29 +358,17 @@ object MinHashDedup {
       // sequential because the driver calls them sequentially) so the
       // tail of one point's stage back-fills with the next point's
       // tasks; results are deterministic scalars combined in knob order
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(rowsPerBands.size, 3))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try {
-        val futs = rowsPerBands.map { r =>
-          scala.concurrent.Future {
-            // one job per point: candidate volume and caught-truth count
-            // off the same candidate scan (truth is cached and pair-set
-            // sized)
-            val counts = crossCandidatesFromSigs(pSigs, cSigs, idCol, r)
-              .filter(col("in_id") =!= col("ex_id"))
-              .join(truth.select(col("__p").as("in_id"), col("__c").as("ex_id"),
-                lit(1).as("__hit")), Seq("in_id", "ex_id"), "left")
-              .agg(count(lit(1)).as("n_cand"), count(col("__hit")).as("n_caught"))
-              .head()
-            BandingMeasurement(r, nTrue, counts.getLong(1), counts.getLong(0))
-          }
-        }
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(futs),
-          scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
+      graft.core.Overlap.all(rowsPerBands.map { r => () =>
+        // one job per point: candidate volume and caught-truth count off
+        // the same candidate scan (truth is cached and pair-set sized)
+        val counts = crossCandidatesFromSigs(pSigs, cSigs, idCol, r)
+          .filter(col("in_id") =!= col("ex_id"))
+          .join(truth.select(col("__p").as("in_id"), col("__c").as("ex_id"),
+            lit(1).as("__hit")), Seq("in_id", "ex_id"), "left")
+          .agg(count(lit(1)).as("n_cand"), count(col("__hit")).as("n_caught"))
+          .head()
+        BandingMeasurement(r, nTrue, counts.getLong(1), counts.getLong(0))
+      }, threads = 3)
     } finally {
       truth.unpersist(): Unit
       pSigs.unpersist(): Unit

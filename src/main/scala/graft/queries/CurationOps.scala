@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.core.Overlap
 import graft.core.Tables._
 import graft.ops.{Components, MinHashDedup, Similarity, TextOps}
 
@@ -219,7 +220,7 @@ object CurationOps {
     // the two artifact writes are independent actions (assignments read
     // the fit's cached corpus, centroids are a driver-local k-row
     // relation) — overlap them (guide §2.6)
-    LlmOps.par2(
+    Overlap(
       assignments.repartition(col("cell")).write.mode("overwrite")
         .partitionBy("cell").parquet(s"$out/assignments"),
       centroids.write.mode("overwrite").parquet(s"$out/centroids"))

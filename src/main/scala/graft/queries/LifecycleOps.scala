@@ -5,12 +5,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{EngineContext, Tables}
+import graft.core.{EngineContext, Overlap, Tables}
 import graft.core.Tables.t
 import graft.exec.{JobRunner, StatusRegistry, TaskRegistry}
 import graft.exec.Tasks.TaskSpec
 import graft.model.EtlModel
-import graft.ops.{MinHashDedup, TextOps}
+import graft.ops.{IndexKind, MinHashDedup, TextOps}
 import graft.streaming.StreamOps
 
 /** Q141 — the END-TO-END CORPUS LIFECYCLE: the full training-corpus
@@ -86,7 +86,7 @@ object LifecycleOps {
       // the metadata rollup (reads the stats artifacts) and the corpus
       // count (reads the committed segments) are independent scalar
       // actions — overlapped (guide §2.6)
-      val (rolled, corpusDocs) = LlmOps.par2(
+      val (rolled, corpusDocs) = Overlap(
         StreamingQueries.statsRollup(spark, dedupRoot, statsRoot)
           .agg(sum($"n_docs")).head.getLong(0),
         survivors.count())
@@ -276,7 +276,7 @@ object LifecycleOps {
       val spark = ctx.spark
       import spark.implicits._
       import java.nio.file.{Files, Paths}
-      import graft.ops.{Components, Similarity, VersionedTarget}
+      import graft.ops.{Components, VersionedTarget}
       val dir = ctx.resolve("{data_dir}")
       val out = graft.core.Scratch.deleteOnExit(ctx.resolve("{output}"))
       val docs = t(spark, dir, "documents")
@@ -332,15 +332,10 @@ object LifecycleOps {
         partitionCols = Seq("cell"), clusterCommits = true)
       val centT = VersionedTarget.Rewrite(croot)
       try {
-        val (assign, cent0) = Similarity.kmeansFit(keptEmb, "vec_id",
-          "embedding", k = 8, iters = 2, materialize = false, withVec = true)
-        // two commits on DIFFERENT roots (per-root pointer locks) —
-        // independent actions, overlapped (guide §2.6) beside the
+        // two commits on DIFFERENT roots, overlapped beside the
         // helper-thread chunk write above
-        LlmOps.par2(
-          centT.commit(cent0, 0L),
-          assignT.commit(Similarity.quantizeInt8(assign, "vec_id", "embedding",
-            warnOnDrops = true), 0L, tag = Some("v0")))
+        IndexKind.Sq8.commitBase(IndexKind.Sq8.fit(keptEmb, dim = 64),
+          assignT, centT, warnOnDrops = true)
       } finally {
         // the serve below reads the chunk artifact: join the write before
         // either continuing or propagating a stage-3 failure
@@ -356,13 +351,9 @@ object LifecycleOps {
 
       // stage 4 — hybrid serve off the live pointer; every hit carries
       // its chunk summary read back from the stage-2 artifact
-      val idx8 = assignT.current(spark)
-        .getOrElse(sys.error("int8 index target committed no version"))
-      val c = Similarity.pairedQuantizer(spark, assignT, centT)
-        .getOrElse(sys.error("no centroid version paired with the index"))
-      val dense = Similarity.ivfTopKServedInt8(idx8, keptEmb, c,
-          "vec_id", "embedding", keptEmb.filter($"vec_id" < 10),
-          k = 10, prefetch = 20, nprobe = 2)
+      val dense = IndexKind.Sq8.served(spark, assignT, centT)
+        .topK(keptEmb, keptEmb.filter($"vec_id" < 10), k = 10, prefetch = 20,
+          nprobe = 2)
         .select($"probe_id", $"cand_id", $"rn".as("rn_d"))
       val served = LlmOps.rrfFuse(dense, LlmOps.lexicalTopKOf(kept))
         .join(csum.select($"doc_id".as("cand_id"), $"n_chunks", $"head_md5"),

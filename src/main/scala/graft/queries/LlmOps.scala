@@ -3,8 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.core.Overlap
 import graft.core.Tables._
-import graft.ops.{Components, MinHashDedup, Similarity, TextOps, TopK}
+import graft.ops.{Components, IndexKind, MinHashDedup, Similarity, TextOps, TopK}
 import graft.sources.Multimodal
 
 /** SURVEY.md §2B.11 + the training-data-pipeline additions (Q58–Q69):
@@ -547,7 +548,7 @@ object LlmOps {
       Similarity.kmeansFit(e, "vec_id", "embedding", k = 8, iters = 2,
         materialize = false, withVec = true)
     // two independent artifact writes — overlap them (guide §2.6)
-    par2(
+    Overlap(
       assignments.repartition(col("cell")).write.mode("overwrite")
         .partitionBy("cell").parquet(s"$out/assignments"),
       centroids.write.mode("overwrite").parquet(s"$out/centroids"))
@@ -1132,7 +1133,7 @@ object LlmOps {
     // segment 1 — existing segment untouched; the persisted quantizer is
     // pinned onto the driver ONCE (k rows) and threaded through the
     // placement and the wave — one read job, not one per use
-    val (_, centLocal) = par2(
+    val (_, centLocal) = Overlap(
       baseAssign.repartition(col("cell")).write.mode("overwrite")
         .partitionBy("cell").parquet(s"$out/assignments/seg0"),
       {
@@ -1294,7 +1295,7 @@ object LlmOps {
         materialize = false, withVec = true)
     // segment-0 commit and the centroids artifact write are independent
     // actions on disjoint paths — overlap them (guide §2.6)
-    par2(
+    Overlap(
       target.commit(baseAssign, 0L),
       cent.write.mode("overwrite").parquet(s"$out/centroids"))
     // pin the persisted quantizer onto the driver ONCE (k rows): every
@@ -1323,8 +1324,8 @@ object LlmOps {
     // mutates only the index target; the brute-force truth reads only the
     // corpus — independent, overlapped (guide §2.6). Declared order is
     // preserved inside the chain (its requires fire first on a double
-    // violation, the par2 contract).
-    val ((served, servedSchema), truth) = par2(
+    // violation, the Overlap contract).
+    val ((served, servedSchema), truth) = Overlap(
       {
         val wave1 = probeWave()
         // maintenance: fold base + deltas into ONE cell-partitioned segment
@@ -1448,11 +1449,7 @@ object LlmOps {
     // placement, both probe waves and the brute-force truth): cache it
     // once — at scale the probe corpus is exactly what a serving node
     // pins in memory across waves
-    val aug = e.select($"vec_id", concat(Similarity.toDouble($"embedding"),
-        array((0 until 5).map(c =>
-          when(pmod($"vec_id", lit(5)) === c, lit(1.0)).otherwise(lit(0.0))): _*))
-      .as("embedding"))
-      .persist()
+    val aug = augmentedEmbeddings(e, 5).persist()
     val cluster = pmod($"vec_id", lit(5))
     val out = PipelineOps.layoutDir(spark, dir, "ivfrefit")
     val aroot = Paths.get(out, "assignments")
@@ -1473,7 +1470,7 @@ object LlmOps {
     // the refit's rebase replaces it (transactional with the swap).
     // Two DIFFERENT roots (per-root pointer locks) — independent
     // actions, overlapped (guide §2.6)
-    par2(
+    Overlap(
       centT.commit(cent0, 0L),
       assignT.commit(baseAssign, 0L, tag = Some("v0")))
     // drift: one O(delta) append places the UNSEEN clusters {2,3,4} into
@@ -1506,7 +1503,7 @@ object LlmOps {
     // The degraded wave (reads the served index) and the truth (reads
     // only the cached corpus) are independent reads of immutable state —
     // overlapped (guide §2.6); the refit mutates the index only AFTER both
-    val ((degraded, _), truth) = par2(
+    val ((degraded, _), truth) = Overlap(
       wave(),
       Similarity.bruteForceTopK(
           aug.filter($"vec_id" < 20), aug, "vec_id", "embedding", k = 3)
@@ -1523,7 +1520,7 @@ object LlmOps {
       Similarity.refitIndex(aug, "vec_id", "embedding", k = 8, iters = 2,
         assignT, centT, batchId = 3L, withVec = true)
       // vacuums on DIFFERENT roots — independent, overlapped (§2.6)
-      par2(assignT.vacuum(1), centT.vacuum(1))
+      Overlap(assignT.vacuum(1), centT.vacuum(1))
       require(VersionedTarget.currentVersion(aroot).contains("v3") &&
           assignT.segmentsOf("v3") == Seq("seg3"),
         "refit must serve from ONE fresh base segment")
@@ -1597,7 +1594,7 @@ object LlmOps {
         materialize = false, withVec = true)
     // segment-0 commit and the centroids artifact write are independent
     // actions on disjoint paths — overlap them (guide §2.6)
-    par2(
+    Overlap(
       target.commit(baseAssign, 0L),
       cent.write.mode("overwrite").parquet(s"$out/centroids"))
     // quantizer pinned once (k rows), threaded through placement + wave
@@ -1683,7 +1680,7 @@ object LlmOps {
     val (baseAssign, cent0) =
       Similarity.kmeansFit(base, "vec_id", "embedding", k = 8, iters = 2,
         materialize = false, withVec = true)
-    par2(
+    Overlap(
       centT.commit(cent0, 0L),
       assignT.commit(baseAssign, 0L, tag = Some("v0")))
     // the continuous half: the delta arrives as micro-batches; each one
@@ -2139,7 +2136,7 @@ object LlmOps {
       Similarity.kmeansFit(e, "vec_id", "embedding", k = 8, iters = 2,
         materialize = false, withVec = true)
     // two independent artifact writes — overlap them (guide §2.6)
-    par2(
+    Overlap(
       assignments.repartition(col("cell")).write.mode("overwrite")
         .partitionBy("cell").parquet(s"$out/assignments"),
       centroids.write.mode("overwrite").parquet(s"$out/centroids"))
@@ -2183,69 +2180,6 @@ object LlmOps {
        |      ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY cos6 DESC, cand_id ASC) AS rn_d
        |    FROM dpairs) WHERE rn_d <= 10),
        |$rrfFusionSql""".stripMargin
-
-  /** Q162 — INT8-STORED SERVING INDEX (SQ8 + exact re-rank): q98 proved
-    * the symmetric int8 reconstruction rule; THIS applies it to the index
-    * PAYLOAD — the persisted cell-partitioned index stores one byte per
-    * dimension plus a per-vector scale ([[Similarity.quantizeInt8]]),
-    * ~8× fewer vector bytes than the float64 q142 index, which at 100 TB
-    * of embeddings is the difference between a memory-resident and a
-    * disk-bound serving node. The wave is the standard two-stage SQ8
-    * search ([[Similarity.ivfTopKServedInt8]]): candidates ranked on
-    * DEQUANTIZED vectors (prefetch = 2k per probe), then only the
-    * winners fetch full-precision vectors for the EXACT re-rank — the
-    * returned scores carry no quantization error, and the recall cost of
-    * the int8 stage is measured in-query against the full-precision wave
-    * (q147's report arithmetic) and gated at ≥ 0.9.
-    *
-    * The oracle replays the unrolled k-means, the integer quantization
-    * (floor(x/scale + 0.5) — exactly representable, engine-portable) and
-    * both ranking stages.
-    */
-  def q162(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val out = PipelineOps.layoutDir(spark, dir, "ivfint8")
-    val (assignments, centroids) =
-      Similarity.kmeansFit(e, "vec_id", "embedding", k = 8, iters = 2,
-        materialize = false, withVec = true)
-    // the int8 index IS the persisted artifact (1 byte/dim + scale);
-    // its write materialises the fit
-    // two independent artifact writes (the int8 index materialises the
-    // fit off its cached corpus; centroids are a driver-local k-row
-    // relation) — overlap them (guide §2.6)
-    par2(
-      Similarity.quantizeInt8(assignments, "vec_id", "embedding")
-        .repartition(col("cell")).write.mode("overwrite")
-        .partitionBy("cell").parquet(s"$out/assignments8"),
-      centroids.write.mode("overwrite").parquet(s"$out/centroids"))
-    val idx8 = spark.read.parquet(s"$out/assignments8")
-    val cent = Similarity.localize(spark.read.parquet(s"$out/centroids"))
-    val probes = e.filter($"vec_id" < 20)
-    val res = Similarity.ivfTopKServedInt8(idx8, e, cent,
-        "vec_id", "embedding", probes, k = 3, prefetch = 6, nprobe = 2)
-      .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-    val rows = res.collect().toSeq
-    // recall of the int8-prefetch stage vs the full-precision wave over
-    // the SAME quantizer/nprobe — both k-bounded, so the report is
-    // driver-side arithmetic (the q153 pattern). The truth side excludes
-    // zero vectors: quantizeInt8 cannot represent them (documented drop),
-    // so a corpus containing them would fail the >= 0.9 gate spuriously
-    // for ids that are unservable at ANY prefetch — mirror the index's
-    // candidacy rule, don't grade against the unservable.
-    val fullIdx = Similarity.assignToCentroids(
-      e.filter(array_max(transform($"embedding", x => abs(x))) > 0), cent,
-      "vec_id", "embedding", withVec = true)
-    val fullWave = Similarity.ivfTopKServed(fullIdx, cent,
-        "vec_id", "embedding", probeFilter = $"vec_id" < 20, k = 3, nprobe = 2)
-      .select($"probe_id", $"cand_id")
-      .collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
-    val hits = Similarity.recallHits(fullWave,
-      rows.map(r => (r.getLong(0), r.getLong(1))))
-    require(!Similarity.refitDecision(hits.map(_._2), k = 3, minRecall = 0.9),
-      "int8 serving recall fell below 0.9 of the full-precision wave")
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), res.schema)
-  }
 
   /** Unrolled k-means (fitted on `fitWhere`, assignment covering the
     * whole table) + int8 quantization (q98's rule on the assigned
@@ -2470,42 +2404,6 @@ object LlmOps {
       |FROM hp p JOIN named a ON a.f = p.d1 JOIN named b ON b.f = p.d2
       |ORDER BY f1 NULLS FIRST, f2 NULLS FIRST""".stripMargin
 
-  /** Q164 — HYBRID RETRIEVAL SERVED FROM THE INT8 INDEX: the q161
-    * composition with the q162 index — the full production stack of a
-    * RAG serving node at 100 TB: the dense side reads the ~8×-smaller
-    * SQ8 index (dequantized prefetch over each probe's nprobe cells,
-    * exact float re-rank of the winners — returned dense ranks carry no
-    * quantization error), the lexical side stays banded, RRF fuses at
-    * |probes|·k. q161 proves the fusion over the float index; THIS
-    * proves the memory-resident variant end-to-end against an oracle
-    * that replays the integer math through both ranking stages into the
-    * same fusion arithmetic.
-    */
-  def q164(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val out = PipelineOps.layoutDir(spark, dir, "hybridint8")
-    val (assignments, centroids) =
-      Similarity.kmeansFit(e, "vec_id", "embedding", k = 8, iters = 2,
-        materialize = false, withVec = true)
-    // two independent artifact writes (the int8 index materialises the
-    // fit off its cached corpus; centroids are a driver-local k-row
-    // relation) — overlap them (guide §2.6)
-    par2(
-      Similarity.quantizeInt8(assignments, "vec_id", "embedding")
-        .repartition(col("cell")).write.mode("overwrite")
-        .partitionBy("cell").parquet(s"$out/assignments8"),
-      centroids.write.mode("overwrite").parquet(s"$out/centroids"))
-    val idx8 = spark.read.parquet(s"$out/assignments8")
-    val cent = Similarity.localize(spark.read.parquet(s"$out/centroids"))
-    val dense = Similarity.ivfTopKServedInt8(idx8, e, cent,
-        "vec_id", "embedding", e.filter($"vec_id" < 10),
-        k = 10, prefetch = 20, nprobe = 2)
-      .select($"probe_id", $"cand_id", $"rn".as("rn_d"))
-    rrfFuse(dense, lexicalTopK(spark, dir))
-      .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-  }
-
   /** q162's quantized two-stage wave at k=10/prefetch=20 for probes
     * vec_id < 10, fused with q159's lexical lists by the identical RRF
     * arithmetic.
@@ -2566,175 +2464,11 @@ object LlmOps {
        |$sq8DenseTopKCtes,
        |$rrfFusionSql""".stripMargin
 
-  /** Q165 — INT8 INDEX LIFECYCLE (streaming SQ8 ingest + serve): q162
-    * proved the int8-stored serving SHAPE; THIS gives it the versioned
-    * lifecycle the float index has had since q142–q158 — because at
-    * 100 TB the memory-resident SQ8 index is the one actually served,
-    * so IT is the artifact that needs atomic pointers, O(delta)
-    * appends, redelivery skip, and refit-safe placement, not the float
-    * copy. The nightly build fits the quantizer on the base and commits
-    * segment 0 ALREADY QUANTIZED (1 byte/dim + per-vector scale — no
-    * float copy of the payload ever lands on disk; `warnOnDrops` makes
-    * a zero-vector corpus shrink loudly); tonight's arrivals flow in as
-    * Structured Streaming micro-batches through the refit-safe append
-    * verb with the int8 placement path ([[Similarity.appendToIndex]]
-    * `int8 = true`: argmin against the served quantizer tag, then SQ8
-    * MAP-SIDE in the same pass), each landing as one immutable O(batch)
-    * int8 segment behind the pointer transaction's tag re-validation.
-    * Redelivered micro-batches are detected by the target's epoch and
-    * skipped. The closing wave is q162's two-stage SQ8 search
-    * (dequantized prefetch, exact float re-rank) served from the live
-    * pointer across ALL segments.
-    *
-    * Scale shape: per micro-batch the work is one map-only
-    * argmin+quantize against k plan-literal centroids plus one O(batch)
-    * clustered segment write — nothing rescans or rewrites the existing
-    * index, and the segment lands ~8× smaller than the float
-    * equivalent. Batch boundaries cannot change a tag-pinned placement
-    * or the per-vector scale rule, so the streamed index equals q162's
-    * one-shot quantization over the same fit — that oracle with the
-    * fit-on-base split, replayed through the streaming door (the q158
-    * pattern).
-    */
-  def q165(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    import graft.ops.VersionedTarget
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val base = e.filter($"vec_id" % 10 =!= 0)
-    val out = PipelineOps.layoutDir(spark, dir, "ivfint8stream")
-    val aroot = Paths.get(out, "assignments8")
-    val croot = Paths.get(out, "centroids")
-    Seq(aroot, croot).foreach { r => // fresh targets per invocation
-      if (Files.exists(r)) VersionedTarget.rmTree(r.toFile)
-      Files.createDirectories(r): Unit
-    }
-    val assignT = VersionedTarget.Segmented(aroot,
-      partitionCols = Seq("cell"), clusterCommits = true)
-    val centT = VersionedTarget.Rewrite(croot)
-    val (baseAssign, cent0) =
-      Similarity.kmeansFit(base, "vec_id", "embedding", k = 8, iters = 2,
-        materialize = false, withVec = true)
-    // two base commits on DIFFERENT roots (per-root pointer locks) —
-    // independent actions, overlapped (guide §2.6)
-    par2(
-      centT.commit(cent0, 0L),
-      assignT.commit(Similarity.quantizeInt8(baseAssign, "vec_id", "embedding",
-        warnOnDrops = true), 0L, tag = Some("v0")))
-    val arrivals = graft.streaming.StreamOps
-      .embeddingsStream(spark, dir, maxFilesPerTrigger = 8)
-      .filter($"vec_id" % 10 === 0)
-    graft.streaming.StreamOps.runForeachBatch(arrivals,
-      ingestIndexBatchInt8(assignT, centT), outputMode = "append")
-    val idx8 = assignT.current(spark)
-      .getOrElse(sys.error("int8 index target committed no version"))
-    val curVer = VersionedTarget.currentVersion(aroot)
-      .getOrElse(sys.error("int8 index target has no CURRENT pointer"))
-    require(assignT.segmentsOf(curVer).size >= 2,
-      "streaming ingestion must have appended at least one int8 segment")
-    val c = Similarity.pairedQuantizer(spark, assignT, centT)
-      .getOrElse(sys.error("no centroid version paired with the served index"))
-    val res = Similarity.ivfTopKServedInt8(idx8, e, c, "vec_id", "embedding",
-        e.filter($"vec_id" < 20), k = 3, prefetch = 6, nprobe = 2)
-      .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-    // k-bounded result; materialise so nothing holds the index scan open
-    val rows = res.collect().toSeq
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), res.schema)
-  }
-
   /** q162's SQ8 two-stage oracle with the fit-on-base / assign-everyone
     * split (the q144 rule) — the streamed int8 index equals the one-shot
     * quantized placement.
     */
   val q165Sql: String = sq8WaveSql("vec_id % 10 <> 0")
-
-  /** Q170 — IVF-PQ SERVING INDEX (product quantization + ADC + exact
-    * re-rank): the payload step BEYOND q162's SQ8 — instead of 1 byte
-    * per dimension, each vector stores m=4 one-byte CODES into
-    * per-subspace 16-entry codebooks ([[Similarity.pqFit]]/[[Similarity.pqEncode]],
-    * Jégou et al. 2011): 4 bytes/vector vs 64 for SQ8 (16×) vs 512 for
-    * float64 (128×) — at 100 TB the difference between an index that
-    * fits one serving node's RAM and one that doesn't. The wave is
-    * [[Similarity.ivfTopKServedPQ]]: per-probe ADC lookup tables
-    * (m·codes dots computed ONCE per probe, so each candidate costs m
-    * array lookups + adds), prefetch on the reconstructed cosine, exact
-    * float re-rank of the winners (returned scores carry no
-    * quantization error). Coarse cells prune exactly as q142/q162.
-    * PQ is the LOSSIEST stage of the family by design — the in-query
-    * recall gate vs the full-precision wave is set at the measured
-    * operating floor (see OpsSpec for prefetch=all exactness: the knob
-    * recovers brute force, so recall is purely a prefetch trade).
-    *
-    * The oracle unrolls the coarse k-means AND all four per-subspace
-    * codebook fits (the same CTEs, prefixed), re-derives every
-    * candidate's codes, and replays both ranking stages with identical
-    * left-fold float arithmetic.
-    */
-  def q170(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val out = PipelineOps.layoutDir(spark, dir, "ivfpq")
-    // build: coarse quantizer + m per-subspace codebooks, then ONE
-    // map-only encode pass writes the PQ index in the probe-pruning
-    // cell layout; codebooks + centroids persist beside it
-    // fused bundle fit: coarse + m codebooks in one loop — one
-    // corpus cache, one map+agg job per round (bit-identical to the
-    // separate kmeansFit + pqFit the oracle CTEs replay)
-    val (coarse, books) = Similarity.pqFitBundle(e, "vec_id",
-      "embedding", k = 8, iters = 2, dim = 64, m = 4, codes = 16)
-    // three independent artifact writes (codes materialise the encode
-    // off the fit's cached corpus; coarse + books are driver-local
-    // relations) — overlap them (guide §2.6)
-    par3(
-      Similarity.pqEncode(e, "vec_id", "embedding", books, coarse, dim = 64,
-          warnOnDrops = true)
-        .repartition(col("cell")).write.mode("overwrite")
-        .partitionBy("cell").parquet(s"$out/codes"),
-      coarse.toDF("__cell", "__centroid")
-        .write.mode("overwrite").parquet(s"$out/centroids"),
-      books.zipWithIndex.flatMap { case (book, s) =>
-        book.map { case (c, cv) => (s, c, cv) }
-      }.toDF("subspace", "code", "centroid")
-        .write.mode("overwrite").parquet(s"$out/books"))
-    // serve: everything read back from the artifacts (codebooks are
-    // m·codes rows — driver-size BY DESIGN, like the coarse localize)
-    val idx = spark.read.parquet(s"$out/codes")
-    val servedCoarse = Similarity.localize(spark.read.parquet(s"$out/centroids"))
-    val servedBooks = spark.read.parquet(s"$out/books").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2)))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.toSeq.map(t => (t._2, t._3)).sortBy(_._1))
-    val probes = e.filter($"vec_id" < 20)
-    // prefetch = max(48, n/10): the PQ recall knob at THIS fixture's
-    // measured operating point. The n/10 term is FIXTURE compensation,
-    // not the production shape — near-uniform random vectors are PQ's
-    // worst case (4 bytes of code carry almost no signal, so ADC ranking
-    // recall at fixed prefetch decays as the corpus grows: measured
-    // 0.87/0.97/0.70 at sf0.001/0.01/0.1 with prefetch=48, back to 1.0
-    // at n/10); on real clustered embeddings the codes carry signal and
-    // prefetch stays k-bounded — which is the whole point of PQ.
-    val prefetch = math.max(48L, e.count() / 10L).toInt
-    val res = Similarity.ivfTopKServedPQ(idx, e, servedBooks, servedCoarse,
-        "vec_id", "embedding", probes, k = 3, prefetch = prefetch,
-        nprobe = 2, dim = 64)
-      .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-    val rows = res.collect().toSeq
-    // in-query recall gate vs the full-precision wave over the same
-    // quantizer/nprobe (q162's pattern; measured 0.87 at sf0.001, 0.97
-    // at sf0.01 — the floor is the declared PQ-vs-SQ8 trade for 16×
-    // fewer payload bytes)
-    val fullIdx = Similarity.assignToCentroids(e, servedCoarse,
-      "vec_id", "embedding", withVec = true)
-    val fullWave = Similarity.ivfTopKServed(fullIdx, servedCoarse,
-        "vec_id", "embedding", probeFilter = $"vec_id" < 20, k = 3, nprobe = 2)
-      .select($"probe_id", $"cand_id")
-      .collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
-    val hits = Similarity.recallHits(fullWave,
-      rows.map(r => (r.getLong(0), r.getLong(1))))
-    require(!Similarity.refitDecision(hits.map(_._2), k = 3, minRecall = 0.8),
-      "IVF-PQ serving recall fell below 0.8 of the full-precision wave")
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), res.schema)
-  }
 
   /** The IVF-PQ two-stage oracle (coarse k-means + m prefixed codebook
     * fits + code re-derivation + ADC prefetch + exact re-rank), fitted
@@ -2836,166 +2570,10 @@ object LlmOps {
 
   val q170Sql: String = pqWaveSql("TRUE")
 
-  /** Q174 — PQ INDEX LIFECYCLE (streaming PQ ingest + serve): q170
-    * proved the PQ-coded serving SHAPE; THIS gives it the q165
-    * treatment — at 100 TB the m-bytes-per-vector PQ index is the most
-    * memory-lean serving artifact of the family, so IT needs the atomic
-    * pointer, O(delta) appends, redelivery skip and refit-safe
-    * placement. The nightly build fits the coarse quantizer AND all m
-    * codebooks on the base and commits them as ONE versioned bundle
-    * ([[Similarity.pqBundleDF]] — one version name pairs the whole
-    * quantizer with the assignments, the same tag invariant as the
-    * float/SQ8 paths), with segment 0 already PQ-coded. Micro-batches
-    * append through [[Similarity.appendToIndexPq]]: coarse argmin + m
-    * code argmins in ONE map-only pass against the SERVED bundle,
-    * in-transaction tag re-validation, epoch redelivery skip. The
-    * closing wave is q170's ADC + exact re-rank off the live pointer
-    * across all segments.
-    */
-  def q174(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    import graft.ops.VersionedTarget
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val base = e.filter($"vec_id" % 10 =!= 0)
-    val out = PipelineOps.layoutDir(spark, dir, "ivfpqstream")
-    val aroot = Paths.get(out, "codes")
-    val broot = Paths.get(out, "bundle")
-    Seq(aroot, broot).foreach { r => // fresh targets per invocation
-      if (Files.exists(r)) VersionedTarget.rmTree(r.toFile)
-      Files.createDirectories(r): Unit
-    }
-    val assignT = VersionedTarget.Segmented(aroot,
-      partitionCols = Seq("cell"), clusterCommits = true)
-    val bundleT = VersionedTarget.Rewrite(broot)
-    // fused bundle fit: coarse + m codebooks in one loop — one
-    // corpus cache, one map+agg job per round (bit-identical to the
-    // separate kmeansFit + pqFit the oracle CTEs replay)
-    val (coarse, books) = Similarity.pqFitBundle(base, "vec_id",
-      "embedding", k = 8, iters = 2, dim = 64, m = 4, codes = 16)
-    bundleT.commit(Similarity.pqBundleDF(spark, coarse, books), 0L)
-    assignT.commit(
-      Similarity.pqEncode(base, "vec_id", "embedding", books, coarse,
-        dim = 64, warnOnDrops = true),
-      0L, tag = Some("v0"))
-    val arrivals = graft.streaming.StreamOps
-      .embeddingsStream(spark, dir, maxFilesPerTrigger = 8)
-      .filter($"vec_id" % 10 === 0)
-    graft.streaming.StreamOps.runForeachBatch(arrivals,
-      ingestIndexBatchPq(assignT, bundleT), outputMode = "append")
-    val idx = assignT.current(spark)
-      .getOrElse(sys.error("PQ index target committed no version"))
-    val curVer = VersionedTarget.currentVersion(aroot)
-      .getOrElse(sys.error("PQ index target has no CURRENT pointer"))
-    require(assignT.segmentsOf(curVer).size >= 2,
-      "streaming ingestion must have appended at least one PQ segment")
-    val (sc, sb) = Similarity.pairedPqBundle(spark, assignT, bundleT)
-      .getOrElse(sys.error("no bundle version paired with the served index"))
-    // same fixture-compensating prefetch rule as q170 (the oracle bakes
-    // the identical GREATEST(48, n/10) cutoff)
-    val prefetch = math.max(48L, e.count() / 10L).toInt
-    val res = Similarity.ivfTopKServedPQ(idx, e, sb, sc, "vec_id", "embedding",
-        e.filter($"vec_id" < 20), k = 3, prefetch = prefetch,
-        nprobe = 2, dim = 64)
-      .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-    // k-bounded result; materialise so nothing holds the index scan open
-    val rows = res.collect().toSeq
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), res.schema)
-  }
-
   /** q170's PQ two-stage oracle with the fit-on-base / assign-everyone
     * split — the streamed PQ index equals the one-shot encode.
     */
   val q174Sql: String = pqWaveSql("vec_id % 10 <> 0")
-
-  /** Q176 — INT8 INDEX TAKEDOWN + COMPACTION (unlearning on the QUANTIZED
-    * serving payload): q156 proved `deleteWhere` and q151 proved `compact`
-    * on the FLOAT index — but at 100 TB the artifact actually served is
-    * the memory-resident SQ8 one (q165), so the maintenance verbs must be
-    * proven against ITS segment shape (byte arrays + per-vector scales
-    * under the `cell=` hive layout). Build = q165's lifecycle (base
-    * quantized at commit, one O(delta) int8 append through the refit-safe
-    * verb), then: (1) TAKEDOWN — [[graft.ops.VersionedTarget.Segmented.deleteWhere]]
-    * rewrites only the touched int8 segments copy-on-write, quantizer
-    * UNTOUCHED (deletion changes candidacy, never geometry — q156's
-    * contract), layout preserved, tag carried through; a revoked id stays
-    * legal as a QUERY but can never be returned. (2) COMPACTION — the
-    * post-takedown segments fold into one bin-packed segment behind the
-    * same pointer, and the verb is proven PROBE-IDENTICAL in-query: the
-    * wave re-served from the folded index must equal the pre-fold wave
-    * row-for-row (compaction is physical, never semantic). The closing
-    * wave is q162's two-stage SQ8 search off the live pointer.
-    *
-    * The oracle is q165's fit-on-base SQ8 wave with the takedown set
-    * removed from CANDIDACY only — a revoked vector surviving any
-    * segment, an innocent neighbor lost by either rewrite, or a fold
-    * that changed one approx6 rank flips the hash.
-    */
-  def q176(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    import graft.ops.VersionedTarget
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val base = e.filter($"vec_id" % 10 =!= 0)
-    val out = PipelineOps.layoutDir(spark, dir, "ivfint8takedown")
-    val aroot = Paths.get(out, "assignments8")
-    val croot = Paths.get(out, "centroids")
-    Seq(aroot, croot).foreach { r => // fresh targets per invocation
-      if (Files.exists(r)) VersionedTarget.rmTree(r.toFile)
-      Files.createDirectories(r): Unit
-    }
-    val assignT = VersionedTarget.Segmented(aroot,
-      partitionCols = Seq("cell"), clusterCommits = true)
-    val centT = VersionedTarget.Rewrite(croot)
-    val (baseAssign, cent0) =
-      Similarity.kmeansFit(base, "vec_id", "embedding", k = 8, iters = 2,
-        materialize = false, withVec = true)
-    // two base commits on DIFFERENT roots (per-root pointer locks) —
-    // independent actions, overlapped (guide §2.6)
-    par2(
-      centT.commit(cent0, 0L),
-      assignT.commit(Similarity.quantizeInt8(baseAssign, "vec_id", "embedding"),
-        0L, tag = Some("v0")))
-    // one O(delta) int8 append → a second segment, so the takedown has a
-    // multi-segment manifest to rewrite selectively and the compaction a
-    // real fold to perform
-    Similarity.appendToIndex(e.filter($"vec_id" % 10 === 0), "vec_id",
-      "embedding", assignT, centT, 1L, int8 = true)
-    def wave(): (Seq[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType) = {
-      val idx8 = assignT.current(spark)
-        .getOrElse(sys.error("int8 index target committed no version"))
-      val c = Similarity.pairedQuantizer(spark, assignT, centT)
-        .getOrElse(sys.error("no centroid version paired with the served index"))
-      val res = Similarity.ivfTopKServedInt8(idx8, e, c, "vec_id", "embedding",
-          e.filter($"vec_id" < 20), k = 3, prefetch = 6, nprobe = 2)
-        .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-      (res.collect().toSeq, res.schema)
-    }
-    // TAKEDOWN on the quantized payload: touched int8 segments rewritten
-    // copy-on-write, quantizer and `cell=` layout untouched
-    // the takedown list lives in the BASE segment only: the rewrite must
-    // touch seg0 alone while the appended delta segment survives BY
-    // REFERENCE (never read, never rewritten) — and the 2-segment
-    // post-takedown manifest gives the compaction a real fold
-    require(assignT.deleteWhere(spark,
-        $"vec_id" % 7 === 3 && $"vec_id" % 10 =!= 0).isDefined,
-      "takedown fixture must revoke at least one indexed vector")
-    val (afterDelete, schema) = wave()
-    require(afterDelete.forall(r => r.getLong(1) % 7 != 3 || r.getLong(1) % 10 == 0),
-      "a revoked vector was served from the int8 index after the takedown")
-    // COMPACTION on the quantized payload: fold the post-takedown
-    // segments and prove the fold probe-identical (physical, not semantic)
-    require(assignT.compact(spark).isDefined,
-      "post-takedown int8 index must have segments to fold")
-    assignT.vacuum(1): Unit // retire the pre-fold versions
-    val (afterFold, _) = wave()
-    require(afterFold == afterDelete,
-      "compacting the int8 index changed a probe wave — folds must be " +
-        "probe-identical")
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(afterFold, 1), schema)
-  }
 
   /** q165's fit-on-base SQ8 oracle with the takedown set removed from
     * candidacy only (probes, fit and quantization rule untouched).
@@ -3003,78 +2581,6 @@ object LlmOps {
   val q176Sql: String =
     sq8WaveSql("vec_id % 10 <> 0",
       candWhere = "NOT (c.vec_id % 7 = 3 AND c.vec_id % 10 <> 0)")
-
-  /** Q177 — PQ INDEX TAKEDOWN + COMPACTION: q176's verbs proven against
-    * the m-bytes-per-vector PQ payload (q174's lifecycle) — the leanest
-    * serving artifact of the family, and the one whose code arrays +
-    * tagged quantizer BUNDLE have to survive the copy-on-write rewrite
-    * path intact. Same contract: `deleteWhere` changes candidacy only
-    * (bundle untouched, tag carried through the rewrite), `compact`
-    * folds the post-takedown code segments and must be PROBE-IDENTICAL
-    * (required in-query against the pre-fold wave). The closing wave is
-    * q170's ADC + exact re-rank off the live pointer.
-    */
-  def q177(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    import graft.ops.VersionedTarget
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val base = e.filter($"vec_id" % 10 =!= 0)
-    val out = PipelineOps.layoutDir(spark, dir, "ivfpqtakedown")
-    val aroot = Paths.get(out, "codes")
-    val broot = Paths.get(out, "bundle")
-    Seq(aroot, broot).foreach { r => // fresh targets per invocation
-      if (Files.exists(r)) VersionedTarget.rmTree(r.toFile)
-      Files.createDirectories(r): Unit
-    }
-    val assignT = VersionedTarget.Segmented(aroot,
-      partitionCols = Seq("cell"), clusterCommits = true)
-    val bundleT = VersionedTarget.Rewrite(broot)
-    // fused bundle fit: coarse + m codebooks in one loop — one
-    // corpus cache, one map+agg job per round (bit-identical to the
-    // separate kmeansFit + pqFit the oracle CTEs replay)
-    val (coarse, books) = Similarity.pqFitBundle(base, "vec_id",
-      "embedding", k = 8, iters = 2, dim = 64, m = 4, codes = 16)
-    bundleT.commit(Similarity.pqBundleDF(spark, coarse, books), 0L)
-    assignT.commit(
-      Similarity.pqEncode(base, "vec_id", "embedding", books, coarse, dim = 64),
-      0L, tag = Some("v0"))
-    Similarity.appendToIndexPq(e.filter($"vec_id" % 10 === 0), "vec_id",
-      "embedding", assignT, bundleT, 1L, dim = 64)
-    // same fixture-compensating prefetch rule as q170/q174 (the oracle
-    // bakes the identical GREATEST(48, n/10) cutoff)
-    val prefetch = math.max(48L, e.count() / 10L).toInt
-    def wave(): (Seq[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType) = {
-      val idx = assignT.current(spark)
-        .getOrElse(sys.error("PQ index target committed no version"))
-      val (sc, sb) = Similarity.pairedPqBundle(spark, assignT, bundleT)
-        .getOrElse(sys.error("no bundle version paired with the served index"))
-      val res = Similarity.ivfTopKServedPQ(idx, e, sb, sc, "vec_id",
-          "embedding", e.filter($"vec_id" < 20), k = 3, prefetch = prefetch,
-          nprobe = 2, dim = 64)
-        .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-      (res.collect().toSeq, res.schema)
-    }
-    // takedown list confined to the base segment (q176's rule): the code
-    // segment from the append survives by reference, and compaction gets
-    // a real 2-segment fold
-    require(assignT.deleteWhere(spark,
-        $"vec_id" % 7 === 3 && $"vec_id" % 10 =!= 0).isDefined,
-      "takedown fixture must revoke at least one indexed vector")
-    val (afterDelete, schema) = wave()
-    require(afterDelete.forall(r => r.getLong(1) % 7 != 3 || r.getLong(1) % 10 == 0),
-      "a revoked vector was served from the PQ index after the takedown")
-    require(assignT.compact(spark).isDefined,
-      "post-takedown PQ index must have segments to fold")
-    assignT.vacuum(1): Unit
-    val (afterFold, _) = wave()
-    require(afterFold == afterDelete,
-      "compacting the PQ index changed a probe wave — folds must be " +
-        "probe-identical")
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(afterFold, 1), schema)
-  }
 
   /** q174's fit-on-base PQ oracle with the takedown set removed from
     * candidacy only.
@@ -3089,7 +2595,7 @@ object LlmOps {
     * cluster structure, so a quantizer fitted on a SUBSET of clusters is
     * measurably stale for the rest — the drift a refit recovers from.
     */
-  private def augmentedEmbeddings(e: DataFrame, nClusters: Int): DataFrame = {
+  private[queries] def augmentedEmbeddings(e: DataFrame, nClusters: Int): DataFrame = {
     import org.apache.spark.sql.functions.{array, concat, lit, pmod, when}
     e.select(col("vec_id"), concat(Similarity.toDouble(col("embedding")),
       array((0 until nClusters).map(c =>
@@ -3098,281 +2604,15 @@ object LlmOps {
       .as("embedding"))
   }
 
-  /** Q178 — SQ8 INDEX REFIT (trigger → recover on the quantized
-    * lifecycle): q153 proved the full recall-floor → refit recovery on
-    * the FLOAT index; q165 gave the SQ8 index builds, appends and the
-    * refit RACE — but nothing yet MEASURED a served int8 wave against
-    * the floor and actually re-fit the quantizer + re-quantized the base
-    * on a drifted corpus. This is that verb, on q153's drift fixture:
-    * nightly build fits on 2 of 5 clusters (base committed ALREADY
-    * QUANTIZED), the unseen clusters arrive via the O(delta) int8 append,
-    * the served SQ8 wave's recall vs the brute-force truth trips
-    * [[Similarity.refitDecision]]'s 0.8 floor, and the recovery is
-    * [[Similarity.refitIndex]] `int8 = true`: re-fit on the current
-    * corpus, commit the new quantizer, rebase ONE fresh SQ8-coded base
-    * whose manifest tag pairs it with the new centroids — old versions
-    * retired by vacuum, recall re-measured above the floor before the
-    * restored wave ships.
-    */
-  def q178(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    import graft.ops.VersionedTarget
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    // the augmented corpus feeds two fits, the append placement, both
-    // probe waves and the brute-force truth — cache it once (q153's rule)
-    val aug = augmentedEmbeddings(e, 5).persist()
-    val cluster = pmod($"vec_id", lit(5))
-    val out = PipelineOps.layoutDir(spark, dir, "ivf8refit")
-    val aroot = Paths.get(out, "assignments8")
-    val croot = Paths.get(out, "centroids")
-    Seq(aroot, croot).foreach { r => // fresh targets per invocation
-      if (Files.exists(r)) VersionedTarget.rmTree(r.toFile)
-      Files.createDirectories(r): Unit
-    }
-    val assignT = VersionedTarget.Segmented(aroot,
-      partitionCols = Seq("cell"), clusterCommits = true)
-    val centT = VersionedTarget.Rewrite(croot)
-    val (baseAssign, cent0) =
-      Similarity.kmeansFit(aug.filter(cluster.isin(0, 1)), "vec_id",
-        "embedding", k = 8, iters = 2, materialize = false, withVec = true)
-    // the two base commits land on DIFFERENT roots (per-root pointer
-    // locks) — independent actions, overlapped (guide §2.6)
-    par2(
-      centT.commit(cent0, 0L),
-      assignT.commit(Similarity.quantizeInt8(baseAssign, "vec_id", "embedding"),
-        0L, tag = Some("v0")))
-    // drift: the unseen clusters enter through the refit-safe int8 append
-    Similarity.appendToIndex(aug.filter(cluster.isin(2, 3, 4)), "vec_id",
-      "embedding", assignT, centT, 1L, int8 = true)
-    def wave(): (Seq[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType) = {
-      val idx8 = assignT.current(spark)
-        .getOrElse(sys.error("int8 index target committed no version"))
-      val c = Similarity.pairedQuantizer(spark, assignT, centT)
-        .getOrElse(sys.error("no centroid version paired with the served index"))
-      val res = Similarity.ivfTopKServedInt8(idx8, aug, c, "vec_id",
-          "embedding", aug.filter($"vec_id" < 20), k = 3, prefetch = 6,
-          nprobe = 2)
-        .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-      (res.collect().toSeq, res.schema)
-    }
-    // the degraded wave (reads the served index) and the brute-force
-    // truth (reads only the cached corpus) are independent reads of
-    // immutable state — overlap them (guide §2.6); the refit below
-    // mutates the index only AFTER both complete
-    val ((degraded, _), truth) = par2(
-      wave(),
-      Similarity.bruteForceTopK(
-          aug.filter($"vec_id" < 20), aug, "vec_id", "embedding", k = 3)
-        .select($"probe_id", $"cand_id")
-        .collect().toSeq.map(r => (r.getLong(0), r.getLong(1))))
-    def hitsOf(served: Seq[org.apache.spark.sql.Row]): Seq[Long] =
-      Similarity.recallHits(truth,
-        served.map(r => (r.getLong(0), r.getLong(1)))).map(_._2)
-    try {
-      require(Similarity.refitDecision(hitsOf(degraded), k = 3, minRecall = 0.8),
-        "drift fixture failed to trip the SQ8 recall floor — nothing to recover")
-      Similarity.refitIndex(aug, "vec_id", "embedding", k = 8, iters = 2,
-        assignT, centT, batchId = 3L, int8 = true)
-      // vacuums on DIFFERENT roots — independent, overlapped (§2.6)
-      par2(assignT.vacuum(1), centT.vacuum(1))
-      require(VersionedTarget.currentVersion(aroot).contains("v3") &&
-          assignT.segmentsOf("v3") == Seq("seg3"),
-        "refit must serve from ONE fresh SQ8-coded base segment")
-      val (restored, restoredSchema) = wave()
-      require(!Similarity.refitDecision(hitsOf(restored), k = 3, minRecall = 0.8),
-        "SQ8 refit did not restore recall above the floor")
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(restored, 1), restoredSchema)
-    } finally aug.unpersist(): Unit
-  }
-
   /** Fit-on-current-corpus SQ8 wave over the drift fixture's augmented
     * vectors (q153's oracle rule applied to q165's quantized wave).
     */
   val q178Sql: String = sq8WaveSql("TRUE", vecSql = augVecSql(5))
 
-  /** Q179 — PQ INDEX REFIT: q178's trigger → recover verb on the PQ
-    * lifecycle, where the re-fit artifact is the whole quantizer BUNDLE
-    * (coarse centroids + all m codebooks re-fitted together,
-    * [[Similarity.refitIndexPq]]) and the rebase is one fresh
-    * m-bytes-per-vector coded base tag-paired with the new bundle. The
-    * drift fixture uses 4 one-hot cluster dims (dim 68 still splits into
-    * m = 4 subspaces); the nightly bundle fits on 2 of 4 clusters, the
-    * rest arrive via the O(delta) PQ append, the served ADC wave trips
-    * the 0.8 recall floor vs brute force, and the refit restores it.
-    */
-  def q179(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    import graft.ops.VersionedTarget
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val aug = augmentedEmbeddings(e, 4).persist()
-    val cluster = pmod($"vec_id", lit(4))
-    val out = PipelineOps.layoutDir(spark, dir, "ivfpqrefit")
-    val aroot = Paths.get(out, "codes")
-    val broot = Paths.get(out, "bundle")
-    Seq(aroot, broot).foreach { r => // fresh targets per invocation
-      if (Files.exists(r)) VersionedTarget.rmTree(r.toFile)
-      Files.createDirectories(r): Unit
-    }
-    val assignT = VersionedTarget.Segmented(aroot,
-      partitionCols = Seq("cell"), clusterCommits = true)
-    val bundleT = VersionedTarget.Rewrite(broot)
-    val base = aug.filter(cluster.isin(0, 1))
-    // fused bundle fit: coarse + m codebooks in one loop — one
-    // corpus cache, one map+agg job per round (bit-identical to the
-    // separate kmeansFit + pqFit the oracle CTEs replay)
-    val (coarse, books) = Similarity.pqFitBundle(base, "vec_id",
-      "embedding", k = 8, iters = 2, dim = 68, m = 4, codes = 16)
-    // the two base commits land on DIFFERENT roots (per-root pointer
-    // locks) and the prefetch-sizing count reads only the corpus —
-    // three independent actions, overlapped (guide §2.6)
-    val (_, _, nCorpus) = par3(
-      bundleT.commit(Similarity.pqBundleDF(spark, coarse, books), 0L),
-      assignT.commit(
-        Similarity.pqEncode(base, "vec_id", "embedding", books, coarse, dim = 68),
-        0L, tag = Some("v0")),
-      e.count())
-    Similarity.appendToIndexPq(aug.filter(cluster.isin(2, 3)), "vec_id",
-      "embedding", assignT, bundleT, 1L, dim = 68)
-    val prefetch = math.max(48L, nCorpus / 10L).toInt
-    def wave(): (Seq[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType) = {
-      val idx = assignT.current(spark)
-        .getOrElse(sys.error("PQ index target committed no version"))
-      val (sc, sb) = Similarity.pairedPqBundle(spark, assignT, bundleT)
-        .getOrElse(sys.error("no bundle version paired with the served index"))
-      val res = Similarity.ivfTopKServedPQ(idx, aug, sb, sc, "vec_id",
-          "embedding", aug.filter($"vec_id" < 20), k = 3, prefetch = prefetch,
-          nprobe = 2, dim = 68)
-        .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-      (res.collect().toSeq, res.schema)
-    }
-    // the degraded wave (reads the served index) and the brute-force
-    // truth (reads only the cached corpus) are independent reads of
-    // immutable state — overlap them (guide §2.6); the refit below
-    // mutates the index only AFTER both complete
-    val ((degraded, _), truth) = par2(
-      wave(),
-      Similarity.bruteForceTopK(
-          aug.filter($"vec_id" < 20), aug, "vec_id", "embedding", k = 3)
-        .select($"probe_id", $"cand_id")
-        .collect().toSeq.map(r => (r.getLong(0), r.getLong(1))))
-    def hitsOf(served: Seq[org.apache.spark.sql.Row]): Seq[Long] =
-      Similarity.recallHits(truth,
-        served.map(r => (r.getLong(0), r.getLong(1)))).map(_._2)
-    try {
-      require(Similarity.refitDecision(hitsOf(degraded), k = 3, minRecall = 0.8),
-        "drift fixture failed to trip the PQ recall floor — nothing to recover")
-      Similarity.refitIndexPq(aug, "vec_id", "embedding", k = 8, iters = 2,
-        dim = 68, m = 4, codes = 16, assignT, bundleT, batchId = 3L)
-      // vacuums on DIFFERENT roots — independent, overlapped (§2.6)
-      par2(assignT.vacuum(1), bundleT.vacuum(1))
-      require(VersionedTarget.currentVersion(aroot).contains("v3") &&
-          assignT.segmentsOf("v3") == Seq("seg3"),
-        "refit must serve from ONE fresh PQ-coded base segment")
-      val (restored, restoredSchema) = wave()
-      require(!Similarity.refitDecision(hitsOf(restored), k = 3, minRecall = 0.8),
-        "PQ refit did not restore recall above the floor")
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(restored, 1), restoredSchema)
-    } finally aug.unpersist(): Unit
-  }
-
   /** Fit-on-current-corpus PQ wave over the 4-cluster drift fixture
     * (dim 68, m = 4 — the bundle refit's oracle twin).
     */
   val q179Sql: String = pqWaveSqlOver("TRUE", augVecSql(4), dim = 68, m = 4)
-
-  /** The q174 per-micro-batch ingest verb: the q158/q165 contract with
-    * the PQ payload — [[Similarity.appendToIndexPq]] encodes map-side at
-    * placement against the served bundle, so each batch lands as one
-    * immutable O(batch) m-bytes-per-vector segment.
-    */
-  private[graft] def ingestIndexBatchPq(
-      assignT: graft.ops.VersionedTarget.Segmented,
-      bundleT: graft.ops.VersionedTarget.Rewrite)(
-      batch: DataFrame, id: Long): Unit = {
-    val bid = id + 1L
-    if (!assignT.applied(bid))
-      Similarity.appendToIndexPq(batch, "vec_id", "embedding",
-        assignT, bundleT, bid, dim = 64)
-  }
-
-  /** The q165 per-micro-batch ingest verb: the q158 contract (epoch
-    * redelivery skip, empty-batch pointer advance, refit-safe
-    * placement) with the SQ8 payload — [[Similarity.appendToIndex]]
-    * `int8 = true` quantizes map-side at placement, so each batch lands
-    * as one immutable O(batch) int8 segment.
-    */
-  private[graft] def ingestIndexBatchInt8(
-      assignT: graft.ops.VersionedTarget.Segmented,
-      centT: graft.ops.VersionedTarget.Rewrite)(
-      batch: DataFrame, id: Long): Unit = {
-    val bid = id + 1L
-    if (!assignT.applied(bid))
-      Similarity.appendToIndex(batch, "vec_id", "embedding",
-        assignT, centT, bid, int8 = true)
-  }
-
-  /** The q190 per-micro-batch CURATED ingest verb (factored so OpsSpec
-    * can drive arrival/redelivery schedules without the streaming
-    * harness): the q186 place→verdict→append gate as a stream handler —
-    * place the batch into the MAINTAINED quantizer (never refit),
-    * verdict it against the EXISTING corpus only
-    * ([[Similarity.semanticCrossPairs]] — O(batch·cell), independent of
-    * every other batch, which is WHY batch boundaries can never change
-    * a verdict), and append only the keepers through the refit-safe SQ8
-    * verb. Redelivered batches skip on the index epoch (exactly-once);
-    * a dropped arrival is absent from every wave by construction
-    * because candidacy reads only the index.
-    */
-  private[graft] def ingestCuratedBatch(
-      assignT: graft.ops.VersionedTarget.Segmented,
-      centT: graft.ops.VersionedTarget.Rewrite,
-      exAssign: DataFrame, cent: Seq[(Long, Seq[Double])])(
-      batch: DataFrame, id: Long): Unit = {
-    val bid = id + 1L
-    if (!assignT.applied(bid)) {
-      val placed = Similarity.assignToCentroids(batch, cent,
-        "vec_id", "embedding", withVec = true)
-      val dupIds = Similarity.semanticCrossPairs(placed, exAssign,
-          "vec_id", "embedding", minCos6 = 0.4)
-        .select(col("in_id").as("vec_id")).distinct()
-      val keepers = batch.join(dupIds, Seq("vec_id"), "left_anti")
-      Similarity.appendToIndex(keepers, "vec_id", "embedding",
-        assignT, centT, bid, int8 = true)
-    }
-  }
-
-  /** [[ingestCuratedBatch]] on the PQ lifecycle — the one-parameter
-    * swap the verb factoring was built for: identical verdict rule
-    * (place into the maintained coarse quantizer, compare against the
-    * EXISTING corpus only, cell-scoped at `minCos6`), identical
-    * redelivery skip on the index epoch; only the keeper append changes
-    * ([[Similarity.appendToIndexPq]] — coarse argmin + m code argmins
-    * in one map-only pass against the SERVED bundle, tag re-validated
-    * in-transaction).
-    */
-  private[graft] def ingestCuratedBatchPq(
-      assignT: graft.ops.VersionedTarget.Segmented,
-      bundleT: graft.ops.VersionedTarget.Rewrite,
-      exAssign: DataFrame, coarse: Seq[(Long, Seq[Double])], dim: Int)(
-      batch: DataFrame, id: Long): Unit = {
-    val bid = id + 1L
-    if (!assignT.applied(bid)) {
-      val placed = Similarity.assignToCentroids(batch, coarse,
-        "vec_id", "embedding", withVec = true)
-      val dupIds = Similarity.semanticCrossPairs(placed, exAssign,
-          "vec_id", "embedding", minCos6 = 0.4)
-        .select(col("in_id").as("vec_id")).distinct()
-      val keepers = batch.join(dupIds, Seq("vec_id"), "left_anti")
-      Similarity.appendToIndexPq(keepers, "vec_id", "embedding",
-        assignT, bundleT, bid, dim = dim)
-    }
-  }
 
   /** The q158 per-micro-batch ingest verb, factored so OpsSpec can drive
     * arrival/redelivery schedules without the streaming harness (the
@@ -3809,43 +3049,6 @@ object LlmOps {
     */
   val q182Sql: String = phashOracleCtes + ",\n" + bandVerdictSql(12, "ahash")
 
-  /** Q183 — DIVERSIFIED retrieval over the SERVED int8 fusion: the
-    * production composition — q171 proved diversification on the
-    * brute-force dense baseline; a serving node diversifies what it
-    * actually retrieves, which is q164's stack (SQ8 dense side off the
-    * quantized index + banded lexical side, RRF-fused). Same |probes|·k
-    * post-fusion machinery ([[diversifyFused]]); only the dense
-    * candidate generator changes — which is the whole point of the
-    * factoring, in code AND in the oracle (q164's CTE stack chained into
-    * q171's closure/keeper/re-rank tail).
-    */
-  def q183(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docs = t(spark, dir, "documents")
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val out = PipelineOps.layoutDir(spark, dir, "hybridint8div")
-    val (assignments, centroids) =
-      Similarity.kmeansFit(e, "vec_id", "embedding", k = 8, iters = 2,
-        materialize = false, withVec = true)
-    // two independent artifact writes (the int8 index materialises the
-    // fit off its cached corpus; centroids are a driver-local k-row
-    // relation) — overlap them (guide §2.6)
-    par2(
-      Similarity.quantizeInt8(assignments, "vec_id", "embedding")
-        .repartition(col("cell")).write.mode("overwrite")
-        .partitionBy("cell").parquet(s"$out/assignments8"),
-      centroids.write.mode("overwrite").parquet(s"$out/centroids"))
-    val idx8 = spark.read.parquet(s"$out/assignments8")
-    val cent = Similarity.localize(spark.read.parquet(s"$out/centroids"))
-    val dense = Similarity.ivfTopKServedInt8(idx8, e, cent,
-        "vec_id", "embedding", e.filter($"vec_id" < 10),
-        k = 10, prefetch = 20, nprobe = 2)
-      .select($"probe_id", $"cand_id", $"rn".as("rn_d"))
-    val fused = rrfFuse(dense, lexicalTopK(spark, dir), topN = 20)
-    diversifyFused(docs, fused)
-      .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-  }
-
   /** q164's served-fusion CTE stack (SQ8 dense + banded lexical + RRF)
     * chained into q171's diversification tail.
     */
@@ -3946,7 +3149,7 @@ object LlmOps {
       // two base commits on DIFFERENT roots (per-root pointer locks) —
       // independent actions, overlapped (guide §2.6); exAssign is
       // materialized above, so both read a hot cache
-      par2(
+      Overlap(
         centT.commit(cent0, 0L),
         assignT.commit(Similarity.quantizeInt8(exAssign, "vec_id", "embedding"),
           0L, tag = Some("v0")))
@@ -4038,39 +3241,6 @@ object LlmOps {
   /** q173's fingerprint recompute + the batch per-clip verdict. */
   val q187Sql: String = videoFpOracleCtes + ",\n" + bandVerdictSql(12, "afp")
 
-  /** Q188 — HYBRID RETRIEVAL SERVED FROM THE PQ INDEX: completes the
-    * serving matrix (float q161 / SQ8 q164 / PQ here) — the dense side
-    * reads the m-bytes-per-vector PQ index (per-probe ADC tables,
-    * reconstructed-cosine prefetch at the fixture's GREATEST(48, n/10)
-    * operating point, exact float re-rank so fused dense ranks carry no
-    * quantization error), the lexical side stays banded, RRF fuses at
-    * |probes|·k. At 100 TB this is the leanest-memory serving stack of
-    * the family; the oracle replays the coarse fit, all m codebook fits,
-    * code re-derivation and both ranking stages into the same fusion
-    * arithmetic.
-    */
-  def q188(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val out = PipelineOps.layoutDir(spark, dir, "hybridpq")
-    // fused bundle fit: coarse + m codebooks in one loop — one
-    // corpus cache, one map+agg job per round (bit-identical to the
-    // separate kmeansFit + pqFit the oracle CTEs replay)
-    val (coarse, books) = Similarity.pqFitBundle(e, "vec_id",
-      "embedding", k = 8, iters = 2, dim = 64, m = 4, codes = 16)
-    Similarity.pqEncode(e, "vec_id", "embedding", books, coarse, dim = 64)
-      .repartition(col("cell")).write.mode("overwrite")
-      .partitionBy("cell").parquet(s"$out/codes")
-    val idx = spark.read.parquet(s"$out/codes")
-    val prefetch = math.max(48L, e.count() / 10L).toInt
-    val dense = Similarity.ivfTopKServedPQ(idx, e, books, coarse,
-        "vec_id", "embedding", e.filter($"vec_id" < 10),
-        k = 10, prefetch = prefetch, nprobe = 2, dim = 64)
-      .select($"probe_id", $"cand_id", $"rn".as("rn_d"))
-    rrfFuse(dense, lexicalTopK(spark, dir))
-      .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-  }
-
   /** The PQ candidate chain ([[pqEpairsCtes]], probes vec_id < 10) cut
     * to a dense top-10, fused with q159's lexical lists by the identical
     * RRF arithmetic.
@@ -4088,196 +3258,11 @@ object LlmOps {
        |    FROM epairs) WHERE rn_d <= 10),
        |$rrfFusionSql""".stripMargin
 
-  /** Q189 — SERVING-INDEX TIME TRAVEL + RESTORE (the two-target
-    * rewind): q155 proved `versions`/`restore` on the corpus; the
-    * realistic operator error once the refit verbs ship (q178/q179) is
-    * a BAD refit, and its recovery is a CONSISTENT rewind of the index
-    * PAIR — the assignments [[graft.ops.VersionedTarget.Segmented]]
-    * back to the pre-refit manifest and the centroid
-    * [[graft.ops.VersionedTarget.Rewrite]] back to the quantizer that
-    * manifest pairs with. Because the pairing TAG travels inside the
-    * assignment manifest, restoring the assignments alone already
-    * re-pairs serving ([[Similarity.pairedCentroids]] reads the tag
-    * transactionally with the pointer), so the pair is consistent at
-    * EVERY intermediate crash point: nothing restored serves the new
-    * quantizer, assignments-restored-only serves the old one, and no
-    * mixed state exists — the in-query waves `require` exactly that.
-    * Retention is the time-travel window (q155's rule): restore runs
-    * BEFORE any vacuum; afterwards the undone refit's versions are
-    * crash-debris-shaped and the next vacuum sweeps them without
-    * touching the served wave. O(bytes): restore moves pointers, never
-    * data — the whole point at a 100 TB index.
-    */
-  def q189(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    import graft.ops.VersionedTarget
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val aug = augmentedEmbeddings(e, 5).persist()
-    val cluster = pmod($"vec_id", lit(5))
-    val out = PipelineOps.layoutDir(spark, dir, "ivf8restore")
-    val aroot = Paths.get(out, "assignments8")
-    val croot = Paths.get(out, "centroids")
-    Seq(aroot, croot).foreach { r => // fresh targets per invocation
-      if (Files.exists(r)) VersionedTarget.rmTree(r.toFile)
-      Files.createDirectories(r): Unit
-    }
-    val assignT = VersionedTarget.Segmented(aroot,
-      partitionCols = Seq("cell"), clusterCommits = true)
-    val centT = VersionedTarget.Rewrite(croot)
-    val (baseAssign, cent0) =
-      Similarity.kmeansFit(aug.filter(cluster.isin(0, 1)), "vec_id",
-        "embedding", k = 8, iters = 2, materialize = false, withVec = true)
-    try {
-      // two base commits on DIFFERENT roots (per-root pointer locks) —
-      // independent actions, overlapped (guide §2.6)
-      par2(
-        centT.commit(cent0, 0L),
-        assignT.commit(Similarity.quantizeInt8(baseAssign, "vec_id", "embedding"),
-          0L, tag = Some("v0")))
-      Similarity.appendToIndex(aug.filter(cluster.isin(2, 3, 4)), "vec_id",
-        "embedding", assignT, centT, 1L, int8 = true)
-      def wave(): (Seq[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType) = {
-        val idx8 = assignT.current(spark)
-          .getOrElse(sys.error("int8 index target committed no version"))
-        val c = Similarity.pairedQuantizer(spark, assignT, centT)
-          .getOrElse(sys.error("no centroid version paired with the served index"))
-        val res = Similarity.ivfTopKServedInt8(idx8, aug, c, "vec_id",
-            "embedding", aug.filter($"vec_id" < 20), k = 3, prefetch = 6,
-            nprobe = 2)
-          .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-        (res.collect().toSeq, res.schema)
-      }
-      val (preRefit, schema) = wave()
-      // the BAD refit (by stipulation — the operator decides to undo it)
-      Similarity.refitIndex(aug, "vec_id", "embedding", k = 8, iters = 2,
-        assignT, centT, batchId = 3L, int8 = true)
-      val (postRefit, _) = wave()
-      require(postRefit != preRefit,
-        "refit fixture must change the served wave — nothing to rewind")
-      // the two-target rewind, assignments FIRST: the restored manifest's
-      // tag re-pairs the old quantizer inside the same pointer swap
-      assignT.restore("v1")
-      val (midRewind, _) = wave() // intermediate crash point: consistent
-      require(midRewind == preRefit,
-        "assignment restore alone must re-pair the pre-refit quantizer " +
-          "(the manifest-tag rule)")
-      centT.restore("v0") // quantizer clock cleanup completes the rewind
-      val (restored, _) = wave()
-      require(restored == preRefit,
-        "the two-target rewind did not reproduce the pre-refit wave")
-      // the undone refit is crash-debris-shaped now: swept, not served.
-      // Vacuums on DIFFERENT roots — independent, overlapped (§2.6)
-      par2(assignT.vacuum(1), centT.vacuum(1))
-      require(!assignT.versions.contains("v3"),
-        "the undone refit's assignment version survived vacuum")
-      val (swept, _) = wave()
-      require(swept == preRefit,
-        "vacuuming the undone refit changed the served wave")
-      spark.createDataFrame(spark.sparkContext.parallelize(restored, 1), schema)
-    } finally aug.unpersist(): Unit
-  }
-
   /** The PRE-refit wave's rule: quantizer fitted on clusters 0-1 only,
     * everyone assigned/quantized, served SQ8 wave — what a correct
     * rewind must reproduce bit-for-bit.
     */
   val q189Sql: String = sq8WaveSql("vec_id % 5 IN (0, 1)", vecSql = augVecSql(5))
-
-  /** Q190 — CONTINUOUS CURATED INGEST: q186 proved the
-    * place→verdict→append gate for ONE batch; a production curated
-    * index runs it as a Structured Streaming loop, and this drives
-    * exactly that — the arrivals flow through q158's file-source
-    * harness (`maxFilesPerTrigger` slicing the backlog into REAL
-    * micro-batches), each batch through [[ingestCuratedBatch]]: placed
-    * into the maintained quantizer, verdicted against the EXISTING
-    * corpus only, keepers appended through the refit-safe SQ8 verb,
-    * redeliveries skipped on the index epoch. Because every verdict
-    * compares against the existing corpus alone (never against other
-    * arrivals) and appends only change MEMBERSHIP (the quantizer never
-    * moves — q156's delete-side rule in reverse), batch boundaries
-    * cannot change a single verdict or placement: the streamed curated
-    * index must equal q186's one-shot gate bit-for-bit, and the closing
-    * wave hash-matches q186's oracle. The in-query gate re-derives the
-    * dup set corpus-wide and `require`s no served candidate is in it —
-    * dup arrivals never became retrievable across ANY batch schedule.
-    *
-    * Scale shape: per micro-batch one map-only placement + one
-    * cell-scoped O(batch·cell) verdict join + one O(keepers) segment
-    * commit; nothing rescans the corpus or the index, so ingest cost
-    * tracks arrival rate, not index size — the shape that survives at
-    * 100 TB with the index bucketed on `cell=`.
-    */
-  def q190(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    import graft.ops.VersionedTarget
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val existing = e.filter($"vec_id" % 10 =!= 0)
-    val out = PipelineOps.layoutDir(spark, dir, "ivfint8curstream")
-    val aroot = Paths.get(out, "assignments8")
-    val croot = Paths.get(out, "centroids")
-    Seq(aroot, croot).foreach { r => // fresh targets per invocation
-      if (Files.exists(r)) VersionedTarget.rmTree(r.toFile)
-      Files.createDirectories(r): Unit
-    }
-    val assignT = VersionedTarget.Segmented(aroot,
-      partitionCols = Seq("cell"), clusterCommits = true)
-    val centT = VersionedTarget.Rewrite(croot)
-    val (exAssign, cent0) = Similarity.kmeansFit(existing, "vec_id",
-      "embedding", k = 8, iters = 2, materialize = true, withVec = true)
-    try {
-      // two base commits on DIFFERENT roots (per-root pointer locks) —
-      // independent actions, overlapped (guide §2.6)
-      par2(
-        centT.commit(cent0, 0L),
-        assignT.commit(Similarity.quantizeInt8(exAssign, "vec_id", "embedding"),
-          0L, tag = Some("v0")))
-      val centLocal = Similarity.localize(cent0)
-      // the continuous half: arrivals in micro-batches, each through the
-      // curated gate — verdicts read the EXISTING corpus, so no schedule
-      // of batch splits can change who enters the index
-      val arrivals = graft.streaming.StreamOps
-        .embeddingsStream(spark, dir, maxFilesPerTrigger = 8)
-        .filter($"vec_id" % 10 === 0)
-      graft.streaming.StreamOps.runForeachBatch(arrivals,
-        ingestCuratedBatch(assignT, centT, exAssign, centLocal),
-        outputMode = "append")
-      val curVer = VersionedTarget.currentVersion(aroot)
-        .getOrElse(sys.error("curated index target has no CURRENT pointer"))
-      require(assignT.segmentsOf(curVer).size >= 3,
-        "curated streaming ingest must be MULTI-batch (base + >= 2 batch " +
-          "segments) — one batch swallowing the backlog proves nothing")
-      val idx8 = assignT.current(spark)
-        .getOrElse(sys.error("int8 index target committed no version"))
-      val c = Similarity.pairedQuantizer(spark, assignT, centT)
-        .getOrElse(sys.error("no centroid version paired with the served index"))
-      val res = Similarity.ivfTopKServedInt8(idx8, e, c, "vec_id",
-          "embedding", e.filter($"vec_id" < 20), k = 3, prefetch = 6,
-          nprobe = 2)
-        .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-      val rows = res.collect().toSeq
-      // re-derive the dup set corpus-wide (one O(slice) cross join) and
-      // prove no dup arrival is served from ANY batch's segment.
-      // (Overlapping this audit with the serve collect was A/B-measured
-      // this round — both a semi-join rewrite and a cached-dup-set
-      // variant ran SLOWER than this sequential shape at sf0.1: the
-      // extra materialisation jobs cost more than the overlap saved —
-      // so the sequential collect-then-isin stays, see OPTIMIZATION_r20.md)
-      val incAssign = Similarity.assignToCentroids(
-        e.filter($"vec_id" % 10 === 0), centLocal, "vec_id", "embedding",
-        withVec = true)
-      val dupIds = Similarity.semanticCrossPairs(incAssign, exAssign,
-          "vec_id", "embedding", minCos6 = 0.4)
-        .select($"in_id".as("vec_id")).distinct()
-      val served = rows.map(_.getLong(1)).distinct
-      require(served.isEmpty || dupIds
-          .filter($"vec_id".isin(served: _*)).count() == 0,
-        "a semantically duplicate arrival was served from the curated index")
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), res.schema)
-    } finally exAssign.unpersist(): Unit
-  }
 
   /** Batch boundaries cannot change a verdict against the existing
     * corpus or a tag-pinned placement, so the streamed curated index
@@ -4433,124 +3418,6 @@ object LlmOps {
         s"the unroll count in q192Sql (and the OpsSpec margin gate)")
   }
 
-  /** Q193 — DIVERSIFIED retrieval over the SERVED PQ fusion: completes
-    * the diversification row of the serving matrix (brute q171 /
-    * SQ8-served q183 / PQ-served HERE) — the leanest-memory serving
-    * stack (m bytes/vector ADC prefetch, exact float re-rank) with the
-    * serving-hygiene tail a RAG node actually ships. The one-parameter
-    * swap the [[diversifyFused]] factoring was built for: only the
-    * dense candidate generator changes, in code AND in the oracle
-    * (q188's PQ candidate chain cut to a dense top-10, chained into
-    * q171's closure/keeper/re-rank tail). Post-fusion everything is
-    * |probes|·k, corpus-independent.
-    */
-  def q193(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docs = t(spark, dir, "documents")
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val out = PipelineOps.layoutDir(spark, dir, "hybridpqdiv")
-    // fused bundle fit: coarse + m codebooks in one loop — one
-    // corpus cache, one map+agg job per round (bit-identical to the
-    // separate kmeansFit + pqFit the oracle CTEs replay)
-    val (coarse, books) = Similarity.pqFitBundle(e, "vec_id",
-      "embedding", k = 8, iters = 2, dim = 64, m = 4, codes = 16)
-    Similarity.pqEncode(e, "vec_id", "embedding", books, coarse, dim = 64)
-      .repartition(col("cell")).write.mode("overwrite")
-      .partitionBy("cell").parquet(s"$out/codes")
-    val idx = spark.read.parquet(s"$out/codes")
-    val prefetch = math.max(48L, e.count() / 10L).toInt
-    val dense = Similarity.ivfTopKServedPQ(idx, e, books, coarse,
-        "vec_id", "embedding", e.filter($"vec_id" < 10),
-        k = 10, prefetch = prefetch, nprobe = 2, dim = 64)
-      .select($"probe_id", $"cand_id", $"rn".as("rn_d"))
-    val fused = rrfFuse(dense, lexicalTopK(spark, dir), topN = 20)
-    diversifyFused(docs, fused)
-      .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-  }
-
-  /** Q196 — PQ-PAIR TIME TRAVEL + RESTORE: q189's two-target rewind on
-    * the PQ lifecycle, where the quantizer artifact is the whole BUNDLE
-    * (coarse + m codebooks as one [[Similarity.pqBundleDF]] version) —
-    * a bad `refitIndexPq` (q179's verb) is undone by restoring the code
-    * `Segmented` to the pre-refit manifest (its tag re-pairs the old
-    * bundle transactionally — [[Similarity.pairedPqBundle]] reads it)
-    * and the bundle `Rewrite` clock back to v0. Same consistency
-    * argument as q189: no intermediate crash point can serve a
-    * mismatched (codes, bundle) pairing, and the in-query waves
-    * `require` it (mid-rewind == pre-refit == post-rewind ==
-    * post-vacuum). Completes the restore verb across BOTH quantized
-    * lifecycles.
-    */
-  def q196(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    import graft.ops.VersionedTarget
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val aug = augmentedEmbeddings(e, 4).persist()
-    val cluster = pmod($"vec_id", lit(4))
-    val out = PipelineOps.layoutDir(spark, dir, "ivfpqrestore")
-    val aroot = Paths.get(out, "codes")
-    val broot = Paths.get(out, "bundle")
-    Seq(aroot, broot).foreach { r => // fresh targets per invocation
-      if (Files.exists(r)) VersionedTarget.rmTree(r.toFile)
-      Files.createDirectories(r): Unit
-    }
-    val assignT = VersionedTarget.Segmented(aroot,
-      partitionCols = Seq("cell"), clusterCommits = true)
-    val bundleT = VersionedTarget.Rewrite(broot)
-    val base = aug.filter(cluster.isin(0, 1))
-    // fused bundle fit: coarse + m codebooks in one loop — one
-    // corpus cache, one map+agg job per round (bit-identical to the
-    // separate kmeansFit + pqFit the oracle CTEs replay)
-    val (coarse, books) = Similarity.pqFitBundle(base, "vec_id",
-      "embedding", k = 8, iters = 2, dim = 68, m = 4, codes = 16)
-    try {
-      bundleT.commit(Similarity.pqBundleDF(spark, coarse, books), 0L)
-      assignT.commit(
-        Similarity.pqEncode(base, "vec_id", "embedding", books, coarse,
-          dim = 68),
-        0L, tag = Some("v0"))
-      Similarity.appendToIndexPq(aug.filter(cluster.isin(2, 3)), "vec_id",
-        "embedding", assignT, bundleT, 1L, dim = 68)
-      val prefetch = math.max(48L, e.count() / 10L).toInt
-      def wave(): (Seq[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType) = {
-        val idx = assignT.current(spark)
-          .getOrElse(sys.error("PQ index target committed no version"))
-        val (sc, sb) = Similarity.pairedPqBundle(spark, assignT, bundleT)
-          .getOrElse(sys.error("no bundle version paired with the served index"))
-        val res = Similarity.ivfTopKServedPQ(idx, aug, sb, sc, "vec_id",
-            "embedding", aug.filter($"vec_id" < 20), k = 3,
-            prefetch = prefetch, nprobe = 2, dim = 68)
-          .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-        (res.collect().toSeq, res.schema)
-      }
-      val (preRefit, schema) = wave()
-      // the BAD refit (by stipulation): whole bundle re-fitted + rebase
-      Similarity.refitIndexPq(aug, "vec_id", "embedding", k = 8, iters = 2,
-        dim = 68, m = 4, codes = 16, assignT, bundleT, batchId = 3L)
-      val (postRefit, _) = wave()
-      require(postRefit != preRefit,
-        "PQ refit fixture must change the served wave — nothing to rewind")
-      assignT.restore("v1") // the manifest tag re-pairs the OLD bundle
-      val (midRewind, _) = wave()
-      require(midRewind == preRefit,
-        "code restore alone must re-pair the pre-refit bundle (tag rule)")
-      bundleT.restore("v0")
-      val (restored, _) = wave()
-      require(restored == preRefit,
-        "the PQ two-target rewind did not reproduce the pre-refit wave")
-      // vacuums on DIFFERENT roots — independent, overlapped (§2.6)
-      par2(assignT.vacuum(1), bundleT.vacuum(1))
-      require(!assignT.versions.contains("v3"),
-        "the undone PQ refit's code version survived vacuum")
-      val (swept, _) = wave()
-      require(swept == preRefit,
-        "vacuuming the undone PQ refit changed the served wave")
-      spark.createDataFrame(spark.sparkContext.parallelize(restored, 1), schema)
-    } finally aug.unpersist(): Unit
-  }
-
   /** The PRE-refit PQ wave's rule: bundle fitted on clusters 0-1 only,
     * everyone encoded/served with it.
     */
@@ -4604,49 +3471,6 @@ object LlmOps {
       |WHERE d.doc_id % 2 = 1
       |ORDER BY doc_id NULLS FIRST""".stripMargin
 
-  /** Q197 — FILTERED ANN SEARCH over the SQ8 serving index: the
-    * "top-k WHERE lang='en'" verb ([[Similarity.ivfTopKServedInt8Filtered]])
-    * — the most common real vector-store request after plain top-k,
-    * here joining `embeddings` to a `documents`-side language gate on
-    * the shared id. The predicate pre-filters INSIDE the cell scan (a
-    * semi-join on the index BEFORE the cell equi-join — post-filtering
-    * the top-k would leave ~k·s survivors at pass rate s) and the
-    * serving knobs scale with the predicate's MEASURED selectivity.
-    * The oracle gate runs the wave at its exact degenerate point
-    * (every cell probed, prefetch covering the full allowed set, so
-    * the exact re-rank strips all quantization error BY CONSTRUCTION)
-    * and hash-matches a brute-force-FILTERED DuckDB twin; the
-    * selective-predicate recall floor at REAL knobs is OpsSpec's row.
-    */
-  def q197(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docs = t(spark, dir, "documents")
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val out = PipelineOps.layoutDir(spark, dir, "filteredann")
-    val (assignments, centroids) =
-      Similarity.kmeansFit(e, "vec_id", "embedding", k = 8, iters = 2,
-        materialize = false, withVec = true)
-    // two independent artifact writes (the int8 index materialises the
-    // fit off its cached corpus; centroids are a driver-local k-row
-    // relation) — overlap them (guide §2.6)
-    par2(
-      Similarity.quantizeInt8(assignments, "vec_id", "embedding")
-        .repartition(col("cell")).write.mode("overwrite")
-        .partitionBy("cell").parquet(s"$out/assignments8"),
-      centroids.write.mode("overwrite").parquet(s"$out/centroids"))
-    val idx8 = spark.read.parquet(s"$out/assignments8")
-    val cent = Similarity.localize(spark.read.parquet(s"$out/centroids"))
-    val allowed = docs.filter($"lang" === "en").select($"doc_id".as("vec_id"))
-    // the declared degenerate point must hold AT EVERY SCALE, not by
-    // fixture coincidence: prefetch = |corpus| makes ceil(prefetch/s)
-    // >= |allowed| always, so the clamp re-ranks the WHOLE allowed set
-    // and the wave equals brute-force-filtered by construction
-    Similarity.ivfTopKServedInt8Filtered(idx8, e, cent,
-        "vec_id", "embedding", e.filter($"vec_id" < 10), allowed,
-        k = 10, prefetch = e.count(), nprobe = 8)
-      .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-  }
-
   /** The brute-force-FILTERED twin: exact cosine top-10 per probe over
     * ONLY the lang='en' candidates (q61's arithmetic + the candidate
     * gate) — the engine's wave equals it because every cell is probed
@@ -4666,43 +3490,6 @@ object LlmOps {
       |  FROM scored)
       |SELECT probe_id, cand_id, cos6, rn FROM ranked WHERE rn <= 10
       |ORDER BY probe_id NULLS FIRST, rn NULLS FIRST""".stripMargin
-
-  /** Q202 — FILTERED ANN ON THE PQ PAYLOAD: q197's predicate verb on
-    * the coded index ([[Similarity.ivfTopKServedPQFiltered]]) — the
-    * payload a 100 TB fleet actually serves, so the filter verb must
-    * not trail there either. Same contract: the documents-side source
-    * gate pre-filters the code rows INSIDE the cell scan, knobs scale
-    * with measured selectivity, and the oracle gate runs the wave at
-    * its exact degenerate point (all cells probed, prefetch covering
-    * the allowed set — the exact re-rank strips ADC error BY
-    * CONSTRUCTION), hash-matching a brute-force-filtered twin. The
-    * float path shares the factoring ([[Similarity.ivfTopKServedFromFiltered]],
-    * OpsSpec-rowed), completing the verb across all three payloads.
-    */
-  def q202(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docs = t(spark, dir, "documents")
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val out = PipelineOps.layoutDir(spark, dir, "filteredannpq")
-    // fused bundle fit: coarse + m codebooks in one loop — one
-    // corpus cache, one map+agg job per round (bit-identical to the
-    // separate kmeansFit + pqFit the oracle CTEs replay)
-    val (coarse, books) = Similarity.pqFitBundle(e, "vec_id",
-      "embedding", k = 8, iters = 2, dim = 64, m = 4, codes = 16)
-    Similarity.pqEncode(e, "vec_id", "embedding", books, coarse, dim = 64)
-      .repartition(col("cell")).write.mode("overwrite")
-      .partitionBy("cell").parquet(s"$out/codes")
-    val idx = spark.read.parquet(s"$out/codes")
-    val allowed = docs.filter($"source" < "src2" && $"source" >= "src1")
-      .select($"doc_id".as("vec_id"))
-    // prefetch = |corpus|: the scale-proof degenerate point (q197's
-    // rule) — at sf0.1 a fixture-sized prefetch left the scaled width
-    // below |allowed| and ADC error cost one true top-10 row
-    Similarity.ivfTopKServedPQFiltered(idx, e, books, coarse,
-        "vec_id", "embedding", e.filter($"vec_id" < 10), allowed,
-        k = 10, prefetch = e.count(), nprobe = 8, dim = 64)
-      .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-  }
 
   /** The brute-force-FILTERED twin over the source gate (q197's shape,
     * different predicate so the two filtered queries don't share an
@@ -4724,91 +3511,6 @@ object LlmOps {
       |SELECT probe_id, cand_id, cos6, rn FROM ranked WHERE rn <= 10
       |ORDER BY probe_id NULLS FIRST, rn NULLS FIRST""".stripMargin
 
-  /** Q198 — CONTINUOUS CURATED INGEST ON THE PQ LIFECYCLE: q190's
-    * place→verdict→append streaming loop with the PQ index as the
-    * payload — the index a 100 TB fleet actually serves (m bytes per
-    * vector), so its verb set must never trail the SQ8 one. The
-    * one-parameter swap [[ingestCuratedBatchPq]] was factored for:
-    * identical verdict rule (existing corpus only, cell-scoped, so no
-    * batch schedule can change who enters), identical redelivery skip;
-    * only the keeper append changes (coarse argmin + m code argmins in
-    * one map-only pass against the SERVED bundle). The closing wave is
-    * the PQ ADC + exact re-rank over existing ∪ curated keepers, and
-    * the in-query gate re-derives the dup set corpus-wide and
-    * `require`s no served candidate is in it.
-    */
-  def q198(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    import graft.ops.VersionedTarget
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val existing = e.filter($"vec_id" % 10 =!= 0)
-    val out = PipelineOps.layoutDir(spark, dir, "ivfpqcurstream")
-    val aroot = Paths.get(out, "codes")
-    val broot = Paths.get(out, "bundle")
-    Seq(aroot, broot).foreach { r => // fresh targets per invocation
-      if (Files.exists(r)) VersionedTarget.rmTree(r.toFile)
-      Files.createDirectories(r): Unit
-    }
-    val assignT = VersionedTarget.Segmented(aroot,
-      partitionCols = Seq("cell"), clusterCommits = true)
-    val bundleT = VersionedTarget.Rewrite(broot)
-    // fused bundle fit (one loop, one corpus cache); the verdict frame
-    // the per-batch gate consults is the SAME placement kmeansFit's
-    // materialized assignments were — assignToCentroids against the
-    // final coarse quantizer (identical argmin rule), cached once here
-    val (coarse, books) = Similarity.pqFitBundle(existing, "vec_id",
-      "embedding", k = 8, iters = 2, dim = 64, m = 4, codes = 16)
-    val exAssign = Similarity.assignToCentroids(existing, coarse,
-      "vec_id", "embedding", withVec = true).persist()
-    try {
-      // the two base commits land on DIFFERENT roots (per-root pointer
-      // locks) and the prefetch-sizing count reads only the corpus —
-      // three independent actions, overlapped (guide §2.6)
-      val (_, _, nCorpus) = par3(
-        bundleT.commit(Similarity.pqBundleDF(spark, coarse, books), 0L),
-        assignT.commit(Similarity.pqEncode(existing, "vec_id", "embedding",
-          books, coarse, dim = 64), 0L, tag = Some("v0")),
-        e.count())
-      val arrivals = graft.streaming.StreamOps
-        .embeddingsStream(spark, dir, maxFilesPerTrigger = 8)
-        .filter($"vec_id" % 10 === 0)
-      graft.streaming.StreamOps.runForeachBatch(arrivals,
-        ingestCuratedBatchPq(assignT, bundleT, exAssign, coarse, dim = 64),
-        outputMode = "append")
-      val curVer = VersionedTarget.currentVersion(aroot)
-        .getOrElse(sys.error("curated PQ index target has no CURRENT pointer"))
-      require(assignT.segmentsOf(curVer).size >= 3,
-        "curated streaming ingest must be MULTI-batch (base + >= 2 batch " +
-          "segments) — one batch swallowing the backlog proves nothing")
-      val idx = assignT.current(spark)
-        .getOrElse(sys.error("PQ index target committed no version"))
-      val (sc, sb) = Similarity.pairedPqBundle(spark, assignT, bundleT)
-        .getOrElse(sys.error("no bundle version paired with the served index"))
-      val prefetch = math.max(48L, nCorpus / 10L).toInt
-      val res = Similarity.ivfTopKServedPQ(idx, e, sb, sc, "vec_id",
-          "embedding", e.filter($"vec_id" < 20), k = 3,
-          prefetch = prefetch, nprobe = 2, dim = 64)
-        .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-      val rows = res.collect().toSeq
-      // re-derive the dup set corpus-wide and prove no dup arrival is
-      // served from ANY batch's segment (q190's gate, PQ payload; as in
-      // q190, overlapping this audit with the serve collect was
-      // A/B-measured and ran slower — the sequential shape stays)
-      val incAssign = Similarity.assignToCentroids(
-        e.filter($"vec_id" % 10 === 0), coarse, "vec_id", "embedding",
-        withVec = true)
-      val dupIds = Similarity.semanticCrossPairs(incAssign, exAssign,
-          "vec_id", "embedding", minCos6 = 0.4)
-        .select($"in_id".as("vec_id")).distinct()
-      val served = rows.map(_.getLong(1)).distinct
-      require(served.isEmpty || dupIds
-          .filter($"vec_id".isin(served: _*)).count() == 0,
-        "a semantically duplicate arrival was served from the curated PQ index")
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), res.schema)
-    } finally exAssign.unpersist(): Unit
-  }
-
   /** q170's fit-on-existing PQ wave with candidacy = existing ∪ the
     * incoming keepers (q186's xp cross-pair CTE deciding who enters —
     * identical coarse cells, so the verdict rule replays unchanged).
@@ -4823,69 +3525,6 @@ object LlmOps {
         |  FROM avx x JOIN avx y
         |    ON x.cell = y.cell AND x.vec_id % 10 = 0 AND y.vec_id % 10 <> 0
         |  WHERE ROUND(list_dot_product(x.v, y.v) / (x.nrm * y.nrm), 6) >= 0.4)""".stripMargin)
-
-  /** Q199 — INCREMENTAL FEED FROM THE PQ SERVING INDEX: q194's replica
-    * catch-up verb on the cell-partitioned PQ code target — the replica
-    * pulls ONLY batch 2's segments off the CURRENT manifest (O(delta)
-    * I/O: append-only segments ARE the change feed), and the payload is
-    * the full PQ serving shape: placement cell + the m one-byte codes,
-    * both BY RULE (the tag-pinned coarse argmin + [[Similarity.pqEncode]]'s
-    * position-in-sorted-codebook rule), so the oracle re-derives every
-    * byte the replica receives. The feed lands DISTRIBUTED (a parquet
-    * artifact, never a driver collect), and the in-query tail proves
-    * the failure contract: a compaction folding across the cursor must
-    * raise the LOUD resync signal, never silently feed folded rows.
-    */
-  def q199(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    import graft.ops.VersionedTarget
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val existing = e.filter($"vec_id" % 10 =!= 0)
-    val out = PipelineOps.layoutDir(spark, dir, "ivfpqfeed")
-    val aroot = Paths.get(out, "codes")
-    val broot = Paths.get(out, "bundle")
-    Seq(aroot, broot).foreach { r => // fresh targets per invocation
-      if (Files.exists(r)) VersionedTarget.rmTree(r.toFile)
-      Files.createDirectories(r): Unit
-    }
-    val assignT = VersionedTarget.Segmented(aroot,
-      partitionCols = Seq("cell"), clusterCommits = true)
-    val bundleT = VersionedTarget.Rewrite(broot)
-    // fused bundle fit: coarse + m codebooks in one loop — one
-    // corpus cache, one map+agg job per round (bit-identical to the
-    // separate kmeansFit + pqFit the oracle CTEs replay)
-    val (coarse, books) = Similarity.pqFitBundle(existing, "vec_id",
-      "embedding", k = 8, iters = 2, dim = 64, m = 4, codes = 16)
-    bundleT.commit(Similarity.pqBundleDF(spark, coarse, books), 0L)
-    assignT.commit(Similarity.pqEncode(existing, "vec_id", "embedding",
-      books, coarse, dim = 64), 0L, tag = Some("v0"))
-    Similarity.appendToIndexPq(e.filter($"vec_id" % 20 === 0), "vec_id",
-      "embedding", assignT, bundleT, 1L, dim = 64)
-    Similarity.appendToIndexPq(e.filter($"vec_id" % 20 === 10), "vec_id",
-      "embedding", assignT, bundleT, 2L, dim = 64)
-    // replica catch-up from cursor 1: exactly batch 2's PQ-coded rows,
-    // landed distributed in the replica's own artifact (q194's rule)
-    val replica = graft.core.Scratch.deleteOnExit(
-      java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        "graft-dedup",
-        s"pqfeed_${spark.sparkContext.applicationId}").toString)
-    assignT.appendedSince(spark, 1L)
-      .getOrElse(sys.error("batch 2 must feed the replica"))
-      .select($"vec_id", $"cell",
-        concat_ws(",", transform($"codes", b => b.cast("int").cast("string")))
-          .as("q"))
-      .write.mode("overwrite").parquet(replica)
-    // the failure contract: a fold across the cursor must be LOUD
-    require(assignT.compact(spark).isDefined,
-      "post-append PQ index must have segments to fold")
-    val loud =
-      try { assignT.appendedSince(spark, 1L); false }
-      catch { case _: IllegalStateException => true }
-    require(loud, "a fold crossing the cursor must raise the resync " +
-      "signal — never silently feed folded rows")
-    spark.read.parquet(replica).orderBy($"vec_id".asc_nulls_first)
-  }
 
   /** Fit-on-existing coarse placement (q194's rule) + the PQ code
     * re-derivation — each code is the 1-based POSITION of the
@@ -4957,323 +3596,12 @@ object LlmOps {
       |WHERE d.doc_id % 2 = 1 AND d.doc_id < 2000
       |ORDER BY doc_id NULLS FIRST""".stripMargin
 
-  /** Run two INDEPENDENT Spark actions concurrently (guide §2.6): the
-    * driver's sequential calls are the only thing serializing them, so
-    * submitting both from a 2-thread pool lets one job's task tail
-    * back-fill with the other's tasks — and halves the driver-side
-    * plan/FS gap the system verbs pay between actions. Both futures are
-    * ALWAYS awaited; `fa` is the thunk the sequential code ran first, and
-    * its failure is rethrown first, so a double violation reports the
-    * same error the sequential order did. Callers evaluate the returned
-    * values' `require`s in declared order — results and failure messages
-    * are bit-identical to the sequential build.
-    */
-  private[queries] def par2[A, B](fa: => A, fb: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val f1 = scala.concurrent.Future(fa)
-      val f2 = scala.concurrent.Future(fb)
-      val inf = scala.concurrent.duration.Duration.Inf
-      val r1 = scala.concurrent.Await.ready(f1, inf).value.get
-      val r2 = scala.concurrent.Await.ready(f2, inf).value.get
-      (r1.get, r2.get)
-    } finally pool.shutdown()
-  }
-
-  /** [[par2]] for three independent actions; failures rethrow in
-    * declared (= sequential) order.
-    */
-  private[queries] def par3[A, B, C](fa: => A, fb: => B, fc: => C): (A, B, C) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val f1 = scala.concurrent.Future(fa)
-      val f2 = scala.concurrent.Future(fb)
-      val f3 = scala.concurrent.Future(fc)
-      val inf = scala.concurrent.duration.Duration.Inf
-      val r1 = scala.concurrent.Await.ready(f1, inf).value.get
-      val r2 = scala.concurrent.Await.ready(f2, inf).value.get
-      val r3 = scala.concurrent.Await.ready(f3, inf).value.get
-      (r1.get, r2.get, r3.get)
-    } finally pool.shutdown()
-  }
-
-  /** Q201 — COHERENT CORPUS+INDEX RESTORE (the full-system rewind):
-    * q155 rewinds the corpus, q189/q196 rewind an index pair — but a
-    * BAD INGEST WAVE corrupts BOTH (the wave appends its rows to the
-    * corpus `Segmented` AND places them into the serving index), and
-    * rewinding them independently can strand index rows referencing
-    * corpus rows outside the restored state. The full-system verb
-    * restores both targets to ONE logical point on the batch-id clock
-    * they already share, in REFERENCE ORDER — the REFERRER (the index,
-    * whose rows point at corpus ids) rewinds FIRST, the REFERENT (the
-    * corpus) last — so the no-dangling invariant `index ids ⊆ corpus
-    * ids` holds at EVERY intermediate crash point: index-restored-only
-    * leaves the bad corpus rows present but UNREFERENCED (the wave
-    * ignores them — `require`d identical to pre-wave), and the corpus
-    * restore then just drops unreferenced segments. The opposite order
-    * would leave the index pointing at vacuumable corpus rows — the
-    * VersionedTargetSpec row drives exactly that wrong order and
-    * proves the invariant breaks, plus the right order with a crash
-    * between targets. The quantizer never moved (appends change
-    * membership, never geometry), so the index pair's tag keeps
-    * pairing v0 across the whole rewind — q189's argument, inherited.
-    * O(bytes): every restore moves pointers, never data.
-    */
-  def q201(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    import graft.ops.VersionedTarget
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val existing = e.filter($"vec_id" % 10 =!= 0).select($"vec_id", $"embedding")
-    val good = e.filter($"vec_id" % 20 === 0).select($"vec_id", $"embedding")
-    // the bad wave: probe vectors re-arriving under fresh ids — they
-    // cosine-1.0 their originals, so they TOP the pre-restore waves
-    // (the fixture must make the corruption retrievable, else there is
-    // nothing to rewind)
-    val bad = e.filter($"vec_id" < 20)
-      .select(($"vec_id" + lit(900000L)).as("vec_id"), $"embedding")
-    val out = PipelineOps.layoutDir(spark, dir, "systemrestore")
-    val croot = Paths.get(out, "corpus")
-    val aroot = Paths.get(out, "assignments8")
-    val qroot = Paths.get(out, "centroids")
-    Seq(croot, aroot, qroot).foreach { r => // fresh targets per invocation
-      if (Files.exists(r)) VersionedTarget.rmTree(r.toFile)
-      Files.createDirectories(r): Unit
-    }
-    val corpusT = VersionedTarget.Segmented(croot)
-    val assignT = VersionedTarget.Segmented(aroot,
-      partitionCols = Seq("cell"), clusterCommits = true)
-    val centT = VersionedTarget.Rewrite(qroot)
-    val (baseAssign, cent0) = Similarity.kmeansFit(existing, "vec_id",
-      "embedding", k = 8, iters = 2, materialize = false, withVec = true)
-    // the quantizer and the corpus are mutually independent roots
-    // (neither references the other) — overlapped (guide §2.6); the
-    // REFERRER (assignT, whose rows cite corpus ids and the quantizer
-    // tag) still commits strictly LAST, so `index ⊆ corpus` and the tag
-    // pairing hold at every crash point (the reference-order contract)
-    par2(
-      centT.commit(cent0, 0L),
-      corpusT.commit(existing, 0L))
-    assignT.commit(Similarity.quantizeInt8(baseAssign, "vec_id", "embedding"),
-      0L, tag = Some("v0"))
-    // the GOOD wave (batch 1) and the BAD wave (batch 2), each hitting
-    // BOTH targets on the shared batch-id clock
-    corpusT.commit(good, 1L)
-    Similarity.appendToIndex(good, "vec_id", "embedding", assignT, centT,
-      1L, int8 = true)
-    corpusT.commit(bad, 2L)
-    Similarity.appendToIndex(bad, "vec_id", "embedding", assignT, centT,
-      2L, int8 = true)
-    // one pointer resolution per SYSTEM STATE: every read between two
-    // mutations sees the same committed pair, so the dangling audit and
-    // the served wave share the resolved frames (FS listing + relation
-    // build paid once) and run CONCURRENTLY (par2/par3 — independent
-    // scalar actions; the vacuum span below re-resolves by design)
-    def resolvedPair(): (DataFrame, DataFrame) = (
-      assignT.current(spark)
-        .getOrElse(sys.error("int8 index target committed no version")),
-      corpusT.current(spark)
-        .getOrElse(sys.error("corpus target committed no version")))
-    def danglingOf(idx8: DataFrame, corpus: DataFrame): Long =
-      idx8.select($"vec_id").join(corpus.select($"vec_id"),
-        Seq("vec_id"), "left_anti").count()
-    def requireNoDangling(dangling: Long): Unit =
-      require(dangling == 0L,
-        s"$dangling index rows reference ids outside the live corpus — " +
-          "the reference-order invariant broke")
-    def waveOf(idx8: DataFrame, corpus: DataFrame): (Seq[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType) = {
-      val c = Similarity.pairedQuantizer(spark, assignT, centT)
-        .getOrElse(sys.error("no centroid version paired with the served index"))
-      val res = Similarity.ivfTopKServedInt8(idx8, corpus, c, "vec_id",
-          "embedding", e.filter($"vec_id" < 20), k = 3, prefetch = 6,
-          nprobe = 2)
-        .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-      (res.collect().toSeq, res.schema)
-    }
-    // pre-wave state is the GOOD system (batch 1): snapshot it by
-    // serving the restored targets later — first prove the bad wave
-    // actually changed serving
-    val (idxA, corpA) = resolvedPair()
-    val (dangA, (postBad, schema)) =
-      par2(danglingOf(idxA, corpA), waveOf(idxA, corpA))
-    requireNoDangling(dangA)
-    assignT.restore("v1") // REFERRER first: the index stops referencing
-    val (idxB, corpB) = resolvedPair() // crash point between targets
-    val ((midRewind, _), dangB) =
-      par2(waveOf(idxB, corpB), danglingOf(idxB, corpB))
-    requireNoDangling(dangB)
-    corpusT.restore("v1") // REFERENT last: drops now-unreferenced rows
-    val (idxC, corpC) = resolvedPair()
-    val ((restored, _), dangC, corpusN) =
-      par3(waveOf(idxC, corpC), danglingOf(idxC, corpC), corpC.count())
-    requireNoDangling(dangC)
-    require(postBad != restored,
-      "bad-ingest fixture must change the served wave — nothing to rewind")
-    require(midRewind == restored,
-      "index-restored-only must already serve the pre-wave results (bad " +
-        "corpus rows are unreferenced at the crash point)")
-    require(corpusN == existing.count() + good.count(),
-      "restored corpus must be existing + the good wave exactly")
-    // the undone wave's versions are crash-debris-shaped: swept, not served
-    // vacuums on DIFFERENT roots — independent, overlapped (§2.6)
-    par2(assignT.vacuum(1), corpusT.vacuum(1))
-    // the vacuum proof reads the POST-vacuum state: resolve fresh
-    val (idxD, corpD) = resolvedPair()
-    val ((swept, _), dangD) =
-      par2(waveOf(idxD, corpD), danglingOf(idxD, corpD))
-    require(swept == restored,
-      "vacuuming the undone ingest wave changed the served wave")
-    requireNoDangling(dangD)
-    spark.createDataFrame(spark.sparkContext.parallelize(restored, 1), schema)
-  }
-
   /** The pre-bad-wave rule: SQ8 wave fitted on the base, candidacy =
     * base ∪ the good batch — the bad batch's rows (and their corpus
     * segments) must be gone from every byte of the output.
     */
   val q201Sql: String = sq8WaveSql("vec_id % 10 <> 0",
     candWhere = "(c.vec_id % 10 <> 0 OR c.vec_id % 20 = 0)")
-
-  /** Q203 — COHERENT CROSS-TARGET TAKEDOWN (system-wide erasure):
-    * q176/q177 proved `deleteWhere` per target; the right-to-be-
-    * forgotten request a 100 TB pipeline actually receives erases an
-    * id set from the WHOLE system — the corpus `Segmented` AND the
-    * serving index — and the two deletions follow q201's REFERENCE
-    * ORDER, mirrored for removal: the REFERRER (the index) deletes
-    * FIRST (the id stops being servable before its bytes move), the
-    * REFERENT (the corpus) second, so `index ids ⊆ corpus ids` holds
-    * at every crash point (deleting the corpus first would leave the
-    * index referencing vanished rows — the q201 VersionedTargetSpec
-    * row proves that order breaks the invariant). Three proofs ride
-    * in-query: (1) candidacy — no erased id is served after the index
-    * delete, and the corpus delete changes NOTHING the wave can see
-    * (it only drops already-unreferenced rows); (2) coherence — the
-    * no-dangling invariant at every step; (3) PHYSICAL erasure, the
-    * GDPR point — after vacuum sweeps the pre-delete versions, a
-    * recursive scan of EVERY live parquet file under BOTH roots finds
-    * zero erased ids: `deleteWhere` rewrites touched segments
-    * copy-on-write and vacuum is what actually removes the bytes.
-    * O(touched segments), never O(corpus); quantizer and `cell=`
-    * layout untouched (q176's rule).
-    */
-  def q203(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    import graft.ops.VersionedTarget
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val existing = e.filter($"vec_id" % 10 =!= 0).select($"vec_id", $"embedding")
-    val batch = e.filter($"vec_id" % 20 === 0).select($"vec_id", $"embedding")
-    val out = PipelineOps.layoutDir(spark, dir, "systemtakedown")
-    val croot = Paths.get(out, "corpus")
-    val aroot = Paths.get(out, "assignments8")
-    val qroot = Paths.get(out, "centroids")
-    Seq(croot, aroot, qroot).foreach { r => // fresh targets per invocation
-      if (Files.exists(r)) VersionedTarget.rmTree(r.toFile)
-      Files.createDirectories(r): Unit
-    }
-    val corpusT = VersionedTarget.Segmented(croot)
-    val assignT = VersionedTarget.Segmented(aroot,
-      partitionCols = Seq("cell"), clusterCommits = true)
-    val centT = VersionedTarget.Rewrite(qroot)
-    val (baseAssign, cent0) = Similarity.kmeansFit(existing, "vec_id",
-      "embedding", k = 8, iters = 2, materialize = false, withVec = true)
-    // q201's base-build rule: the two referent roots overlap, the
-    // REFERRER commits last — reference order holds at every crash point
-    par2(
-      centT.commit(cent0, 0L),
-      corpusT.commit(existing, 0L))
-    assignT.commit(Similarity.quantizeInt8(baseAssign, "vec_id", "embedding"),
-      0L, tag = Some("v0"))
-    corpusT.commit(batch, 1L)
-    Similarity.appendToIndex(batch, "vec_id", "embedding", assignT, centT,
-      1L, int8 = true)
-    // one pointer resolution per SYSTEM STATE (q201's pattern): the
-    // dangling audit and the served wave between two mutations share the
-    // resolved frames and run concurrently (§2.6)
-    def resolvedPair(): (DataFrame, DataFrame) = (
-      assignT.current(spark)
-        .getOrElse(sys.error("int8 index target committed no version")),
-      corpusT.current(spark)
-        .getOrElse(sys.error("corpus target committed no version")))
-    def danglingOf(idx8: DataFrame, corpus: DataFrame): Long =
-      idx8.select($"vec_id").join(corpus.select($"vec_id"),
-        Seq("vec_id"), "left_anti").count()
-    def requireNoDangling(dangling: Long): Unit =
-      require(dangling == 0L,
-        s"$dangling index rows reference ids outside the live corpus — " +
-          "the reference-order invariant broke")
-    def waveOf(idx8: DataFrame, corpus: DataFrame): (Seq[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType) = {
-      val c = Similarity.pairedQuantizer(spark, assignT, centT)
-        .getOrElse(sys.error("no centroid version paired with the served index"))
-      val res = Similarity.ivfTopKServedInt8(idx8, corpus, c, "vec_id",
-          "embedding", e.filter($"vec_id" < 20), k = 3, prefetch = 6,
-          nprobe = 2)
-        .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-      (res.collect().toSeq, res.schema)
-    }
-    val erased = (id: Long) => id % 7 == 3
-    val (idxA, corpA) = resolvedPair()
-    val (preErase, schema) = waveOf(idxA, corpA)
-    require(preErase.exists(r => erased(r.getLong(1))),
-      "erasure fixture must have at least one served id to revoke")
-    // REFERRER first: the id stops being SERVABLE before any byte moves
-    require(assignT.deleteWhere(spark, $"vec_id" % 7 === 3).isDefined,
-      "takedown must revoke at least one indexed vector")
-    val (idxB, corpB) = resolvedPair()
-    val ((afterIndex, _), dangB) =
-      par2(waveOf(idxB, corpB), danglingOf(idxB, corpB))
-    require(afterIndex.forall(r => !erased(r.getLong(1))),
-      "a revoked vector was served after the index-side erasure")
-    requireNoDangling(dangB)
-    // REFERENT second: dropping now-unreferenced corpus rows cannot
-    // change anything the wave observes
-    require(corpusT.deleteWhere(spark, $"vec_id" % 7 === 3).isDefined,
-      "takedown must erase at least one corpus row")
-    val (idxC, corpC) = resolvedPair()
-    val ((afterCorpus, _), dangC) =
-      par2(waveOf(idxC, corpC), danglingOf(idxC, corpC))
-    require(afterCorpus == afterIndex,
-      "corpus-side erasure of unreferenced rows changed the served wave")
-    requireNoDangling(dangC)
-    // PHYSICAL erasure: vacuum sweeps the pre-delete versions, and a
-    // recursive audit of every LIVE parquet file under both roots must
-    // find zero erased ids — the bytes are gone, not just unreachable
-    // vacuums on DIFFERENT roots — independent, overlapped (§2.6)
-    par2(assignT.vacuum(1), corpusT.vacuum(1))
-    // the vacuum proof reads the POST-vacuum state: resolve fresh; the
-    // swept wave and the two per-root byte audits are three independent
-    // actions — run them concurrently, require in declared order
-    def auditOf(root: java.nio.file.Path): (Int, Long) = {
-      import scala.jdk.CollectionConverters._
-      val walk = Files.walk(root)
-      val files =
-        try walk.iterator().asScala
-          .filter(p => p.toString.endsWith(".parquet"))
-          .map(_.toString).toList
-        finally walk.close()
-      if (files.isEmpty) (0, 0L)
-      else (files.size, spark.read.parquet(files: _*)
-        .filter($"vec_id" % 7 === 3).count())
-    }
-    val (idxD, corpD) = resolvedPair()
-    val ((swept, _), auditC, auditA) =
-      par3(waveOf(idxD, corpD), auditOf(croot), auditOf(aroot))
-    require(swept == afterIndex,
-      "vacuuming the erased versions changed the served wave")
-    Seq((croot, auditC), (aroot, auditA)).foreach { case (root, (nFiles, leak)) =>
-      require(nFiles > 0, s"takedown audit found no live files under $root")
-      require(leak == 0L,
-        s"$leak erased row(s) physically survive under $root — takedown " +
-          "without vacuum is unreachability, not erasure")
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(swept, 1), schema)
-  }
 
   /** The remaining-membership rule: SQ8 wave fitted on the base,
     * candidacy = (base ∪ batch) minus the erased set — erasure changes
@@ -5300,23 +3628,10 @@ object LlmOps {
     import spark.implicits._
     val docs = t(spark, dir, "documents")
     val e = t(spark, dir, "embeddings").coalesce(8)
-    val out = PipelineOps.layoutDir(spark, dir, "filteredannscaled")
-    val (assignments, centroids) =
-      Similarity.kmeansFit(e, "vec_id", "embedding", k = 8, iters = 2,
-        materialize = false, withVec = true)
-    // two independent artifact writes (the int8 index materialises the
-    // fit off its cached corpus; centroids are a driver-local k-row
-    // relation) — overlap them (guide §2.6)
-    par2(
-      Similarity.quantizeInt8(assignments, "vec_id", "embedding")
-        .repartition(col("cell")).write.mode("overwrite")
-        .partitionBy("cell").parquet(s"$out/assignments8"),
-      centroids.write.mode("overwrite").parquet(s"$out/centroids"))
-    val idx8 = spark.read.parquet(s"$out/assignments8")
-    val cent = Similarity.localize(spark.read.parquet(s"$out/centroids"))
+    val served = IndexKind.Sq8.buildStatic(e,
+      PipelineOps.layoutDir(spark, dir, "filteredannscaled"), dim = 64)
     val allowed = docs.filter($"lang" === "en").select($"doc_id".as("vec_id"))
-    Similarity.ivfTopKServedInt8Filtered(idx8, e, cent,
-        "vec_id", "embedding", e.filter($"vec_id" < 10), allowed,
+    served.topKFiltered(e, e.filter($"vec_id" < 10), allowed,
         k = 5, prefetch = 20, nprobe = 2)
       .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
   }
@@ -5384,47 +3699,6 @@ object LlmOps {
        |SELECT probe_id, cand_id, cos6, rn FROM ranked WHERE rn <= 5
        |ORDER BY probe_id NULLS FIRST, rn NULLS FIRST""".stripMargin
 
-  /** Q205 — FILTERED HYBRID RETRIEVAL: the production RAG query with a
-    * metadata gate — "hybrid top-k WHERE lang='en'". The predicate is a
-    * RESULT contract, so BOTH retrieval arms pre-filter their candidate
-    * sets before ranking (never the fused list: post-filtering an
-    * RRF top-k at pass rate s leaves ~k·s survivors): the dense arm is
-    * q197's filtered SQ8 wave at its scale-proof degenerate point, the
-    * lexical arm restricts the candidate side of the MinHash band join
-    * ([[lexicalTopKOver]] — signatures are per-doc, so restricting the
-    * frame restricts the pair set exactly). Probes stay unrestricted
-    * (a gated query is still a legal query); RRF fuses as always, and
-    * every fused result is allowed BY CONSTRUCTION.
-    */
-  def q205(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docs = t(spark, dir, "documents")
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val out = PipelineOps.layoutDir(spark, dir, "filteredhybrid")
-    val (assignments, centroids) =
-      Similarity.kmeansFit(e, "vec_id", "embedding", k = 8, iters = 2,
-        materialize = false, withVec = true)
-    // two independent artifact writes (the int8 index materialises the
-    // fit off its cached corpus; centroids are a driver-local k-row
-    // relation) — overlap them (guide §2.6)
-    par2(
-      Similarity.quantizeInt8(assignments, "vec_id", "embedding")
-        .repartition(col("cell")).write.mode("overwrite")
-        .partitionBy("cell").parquet(s"$out/assignments8"),
-      centroids.write.mode("overwrite").parquet(s"$out/centroids"))
-    val idx8 = spark.read.parquet(s"$out/assignments8")
-    val cent = Similarity.localize(spark.read.parquet(s"$out/centroids"))
-    val allowed = docs.filter($"lang" === "en").select($"doc_id".as("vec_id"))
-    val dense = Similarity.ivfTopKServedInt8Filtered(idx8, e, cent,
-        "vec_id", "embedding", e.filter($"vec_id" < 10), allowed,
-        k = 10, prefetch = e.count(), nprobe = 8)
-      .select($"probe_id", $"cand_id", $"rn".as("rn_d"))
-    val lex = lexicalTopKOver(docs.filter($"doc_id" < 10),
-      docs.filter($"lang" === "en"))
-    rrfFuse(dense, lex)
-      .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-  }
-
   /** Both arms replayed with the allowed gate on the candidate side
     * only: the dense arm is the brute-force-filtered twin (the
     * degenerate-point rule), the lexical arm is the shared band-join
@@ -5453,128 +3727,6 @@ object LlmOps {
 
   val q205Sql: String = filteredHybridSql("lang = 'en'")
 
-  /** Q206 — COHERENT CORPUS+INDEX RESTORE ON THE PQ PAIR: q201's
-    * full-system rewind with the PQ index as the referrer — the payload
-    * a 100 TB fleet actually serves (m bytes per vector), which until
-    * this verb had no coherent corpus+index rewind at all: rewinding
-    * either target alone after a bad ingest wave strands index rows
-    * referencing corpus rows outside the restored state. Identical
-    * REFERENCE-ORDER contract: the REFERRER (the code `Segmented`,
-    * whose rows point at corpus ids) rewinds FIRST, the REFERENT (the
-    * corpus) last, so `index ids ⊆ corpus ids` holds at EVERY
-    * intermediate crash point — index-restored-only already serves the
-    * pre-wave results (the bad corpus rows are present but
-    * unreferenced, `require`d identical), and the corpus restore then
-    * only drops unreferenced segments. The PQ twist changes NOTHING in
-    * the argument: appends place against the SERVED bundle (coarse
-    * argmin + m code argmins, never a refit), so the bundle `Rewrite`
-    * never moves and the manifest tag keeps pairing v0 across the
-    * whole rewind — q196's tag invariant, inherited. O(bytes): every
-    * restore moves pointers, never data; vacuum sweeps the undone
-    * wave's versions and the served wave must not move.
-    */
-  def q206(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    import graft.ops.VersionedTarget
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val existing = e.filter($"vec_id" % 10 =!= 0).select($"vec_id", $"embedding")
-    val good = e.filter($"vec_id" % 20 === 0).select($"vec_id", $"embedding")
-    // the bad wave: probe vectors re-arriving under fresh ids — they
-    // cosine-1.0 their originals, so they TOP the pre-restore waves
-    // (q201's fixture rule: the corruption must be retrievable)
-    val bad = e.filter($"vec_id" < 20)
-      .select(($"vec_id" + lit(900000L)).as("vec_id"), $"embedding")
-    val out = PipelineOps.layoutDir(spark, dir, "systemrestorepq")
-    val croot = Paths.get(out, "corpus")
-    val aroot = Paths.get(out, "codes")
-    val broot = Paths.get(out, "bundle")
-    Seq(croot, aroot, broot).foreach { r => // fresh targets per invocation
-      if (Files.exists(r)) VersionedTarget.rmTree(r.toFile)
-      Files.createDirectories(r): Unit
-    }
-    val corpusT = VersionedTarget.Segmented(croot)
-    val assignT = VersionedTarget.Segmented(aroot,
-      partitionCols = Seq("cell"), clusterCommits = true)
-    val bundleT = VersionedTarget.Rewrite(broot)
-    // fused bundle fit: coarse + m codebooks in one loop — one
-    // corpus cache, one map+agg job per round (bit-identical to the
-    // separate kmeansFit + pqFit the oracle CTEs replay)
-    val (coarse, books) = Similarity.pqFitBundle(existing, "vec_id",
-      "embedding", k = 8, iters = 2, dim = 64, m = 4, codes = 16)
-    bundleT.commit(Similarity.pqBundleDF(spark, coarse, books), 0L)
-    corpusT.commit(existing, 0L)
-    assignT.commit(Similarity.pqEncode(existing, "vec_id", "embedding",
-      books, coarse, dim = 64), 0L, tag = Some("v0"))
-    // the GOOD wave (batch 1) and the BAD wave (batch 2), each hitting
-    // BOTH targets on the shared batch-id clock
-    corpusT.commit(good, 1L)
-    Similarity.appendToIndexPq(good, "vec_id", "embedding", assignT,
-      bundleT, 1L, dim = 64)
-    corpusT.commit(bad, 2L)
-    Similarity.appendToIndexPq(bad, "vec_id", "embedding", assignT,
-      bundleT, 2L, dim = 64)
-    // one pointer resolution per SYSTEM STATE (q201's pattern): the
-    // dangling audit and the served wave between two mutations share the
-    // resolved frames and run concurrently (§2.6); the vacuum span
-    // re-resolves by design
-    def resolvedPair(): (DataFrame, DataFrame) = (
-      assignT.current(spark)
-        .getOrElse(sys.error("PQ index target committed no version")),
-      corpusT.current(spark)
-        .getOrElse(sys.error("corpus target committed no version")))
-    def danglingOf(idx: DataFrame, corpus: DataFrame): Long =
-      idx.select($"vec_id").join(corpus.select($"vec_id"),
-        Seq("vec_id"), "left_anti").count()
-    def requireNoDangling(dangling: Long): Unit =
-      require(dangling == 0L,
-        s"$dangling index rows reference ids outside the live corpus — " +
-          "the reference-order invariant broke")
-    val prefetch = math.max(48L, e.count() / 10L).toInt
-    def waveOf(idx: DataFrame, corpus: DataFrame): (Seq[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType) = {
-      val (sc, sb) = Similarity.pairedPqBundle(spark, assignT, bundleT)
-        .getOrElse(sys.error("no bundle version paired with the served index"))
-      val res = Similarity.ivfTopKServedPQ(idx, corpus, sb, sc, "vec_id",
-          "embedding", e.filter($"vec_id" < 20), k = 3,
-          prefetch = prefetch, nprobe = 2, dim = 64)
-        .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-      (res.collect().toSeq, res.schema)
-    }
-    val (idxA, corpA) = resolvedPair()
-    val (dangA, (postBad, schema)) =
-      par2(danglingOf(idxA, corpA), waveOf(idxA, corpA))
-    requireNoDangling(dangA)
-    assignT.restore("v1") // REFERRER first: the index stops referencing
-    val (idxB, corpB) = resolvedPair() // crash point between targets
-    val ((midRewind, _), dangB) =
-      par2(waveOf(idxB, corpB), danglingOf(idxB, corpB))
-    requireNoDangling(dangB)
-    corpusT.restore("v1") // REFERENT last: drops now-unreferenced rows
-    val (idxC, corpC) = resolvedPair()
-    val ((restored, _), dangC, corpusN) =
-      par3(waveOf(idxC, corpC), danglingOf(idxC, corpC), corpC.count())
-    requireNoDangling(dangC)
-    require(postBad != restored,
-      "bad-ingest fixture must change the served wave — nothing to rewind")
-    require(midRewind == restored,
-      "index-restored-only must already serve the pre-wave results (bad " +
-        "corpus rows are unreferenced at the crash point)")
-    require(corpusN == existing.count() + good.count(),
-      "restored corpus must be existing + the good wave exactly")
-    // the undone wave's versions are crash-debris-shaped: swept, not served
-    // vacuums on DIFFERENT roots — independent, overlapped (§2.6)
-    par2(assignT.vacuum(1), corpusT.vacuum(1))
-    // the vacuum proof reads the POST-vacuum state: resolve fresh
-    val (idxD, corpD) = resolvedPair()
-    val ((swept, _), dangD) =
-      par2(waveOf(idxD, corpD), danglingOf(idxD, corpD))
-    require(swept == restored,
-      "vacuuming the undone ingest wave changed the served wave")
-    requireNoDangling(dangD)
-    spark.createDataFrame(spark.sparkContext.parallelize(restored, 1), schema)
-  }
-
   /** The pre-bad-wave rule on the PQ lifecycle: bundle fitted on the
     * base, candidacy = base ∪ the good batch — the bad batch's rows
     * (and their corpus segments) must be gone from every byte.
@@ -5582,140 +3734,6 @@ object LlmOps {
   val q206Sql: String = pqWaveSqlOver("vec_id % 10 <> 0", rawVecSql,
     dim = 64, m = 4,
     candWhere = "(c.vec_id % 10 <> 0 OR c.vec_id % 20 = 0)")
-
-  /** Q207 — COHERENT CROSS-TARGET TAKEDOWN ON THE PQ PAIR: q203's
-    * system-wide erasure with the PQ index as the referrer — the
-    * compliance verb the served payload was MISSING: a fleet serving
-    * the m-bytes-per-vector coded index had no system-wide
-    * right-to-be-forgotten until this lands there too. q201/q206's
-    * reference order, mirrored for removal: the REFERRER (the code
-    * `Segmented`) deletes FIRST (the id stops being servable before
-    * any byte moves), the REFERENT (the corpus) second, so
-    * `index ids ⊆ corpus ids` holds at every crash point. The same
-    * three proofs ride in-query: candidacy (no erased id served after
-    * the index delete; the corpus delete changes nothing the wave
-    * sees), coherence (no-dangling at every step), and PHYSICAL
-    * erasure — after vacuum sweeps the pre-delete versions, a
-    * recursive scan of every live parquet file under BOTH roots finds
-    * zero erased ids. `deleteWhere` rewrites touched segments
-    * copy-on-write; the bundle and `cell=` layout are untouched
-    * (q176's rule — erasure changes candidacy only, never geometry).
-    * O(touched segments), never O(corpus).
-    */
-  def q207(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    import graft.ops.VersionedTarget
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val existing = e.filter($"vec_id" % 10 =!= 0).select($"vec_id", $"embedding")
-    val batch = e.filter($"vec_id" % 20 === 0).select($"vec_id", $"embedding")
-    val out = PipelineOps.layoutDir(spark, dir, "systemtakedownpq")
-    val croot = Paths.get(out, "corpus")
-    val aroot = Paths.get(out, "codes")
-    val broot = Paths.get(out, "bundle")
-    Seq(croot, aroot, broot).foreach { r => // fresh targets per invocation
-      if (Files.exists(r)) VersionedTarget.rmTree(r.toFile)
-      Files.createDirectories(r): Unit
-    }
-    val corpusT = VersionedTarget.Segmented(croot)
-    val assignT = VersionedTarget.Segmented(aroot,
-      partitionCols = Seq("cell"), clusterCommits = true)
-    val bundleT = VersionedTarget.Rewrite(broot)
-    // fused bundle fit: coarse + m codebooks in one loop — one
-    // corpus cache, one map+agg job per round (bit-identical to the
-    // separate kmeansFit + pqFit the oracle CTEs replay)
-    val (coarse, books) = Similarity.pqFitBundle(existing, "vec_id",
-      "embedding", k = 8, iters = 2, dim = 64, m = 4, codes = 16)
-    bundleT.commit(Similarity.pqBundleDF(spark, coarse, books), 0L)
-    corpusT.commit(existing, 0L)
-    assignT.commit(Similarity.pqEncode(existing, "vec_id", "embedding",
-      books, coarse, dim = 64), 0L, tag = Some("v0"))
-    corpusT.commit(batch, 1L)
-    Similarity.appendToIndexPq(batch, "vec_id", "embedding", assignT,
-      bundleT, 1L, dim = 64)
-    // one pointer resolution per SYSTEM STATE (q201's pattern): the
-    // dangling audit and the served wave between two mutations share the
-    // resolved frames and run concurrently (§2.6)
-    def resolvedPair(): (DataFrame, DataFrame) = (
-      assignT.current(spark)
-        .getOrElse(sys.error("PQ index target committed no version")),
-      corpusT.current(spark)
-        .getOrElse(sys.error("corpus target committed no version")))
-    def danglingOf(idx: DataFrame, corpus: DataFrame): Long =
-      idx.select($"vec_id").join(corpus.select($"vec_id"),
-        Seq("vec_id"), "left_anti").count()
-    def requireNoDangling(dangling: Long): Unit =
-      require(dangling == 0L,
-        s"$dangling index rows reference ids outside the live corpus — " +
-          "the reference-order invariant broke")
-    val prefetch = math.max(48L, e.count() / 10L).toInt
-    def waveOf(idx: DataFrame, corpus: DataFrame): (Seq[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType) = {
-      val (sc, sb) = Similarity.pairedPqBundle(spark, assignT, bundleT)
-        .getOrElse(sys.error("no bundle version paired with the served index"))
-      val res = Similarity.ivfTopKServedPQ(idx, corpus, sb, sc, "vec_id",
-          "embedding", e.filter($"vec_id" < 20), k = 3,
-          prefetch = prefetch, nprobe = 2, dim = 64)
-        .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-      (res.collect().toSeq, res.schema)
-    }
-    val erased = (id: Long) => id % 7 == 3
-    val (idxA, corpA) = resolvedPair()
-    val (preErase, schema) = waveOf(idxA, corpA)
-    require(preErase.exists(r => erased(r.getLong(1))),
-      "erasure fixture must have at least one served id to revoke")
-    // REFERRER first: the id stops being SERVABLE before any byte moves
-    require(assignT.deleteWhere(spark, $"vec_id" % 7 === 3).isDefined,
-      "takedown must revoke at least one indexed vector")
-    val (idxB, corpB) = resolvedPair()
-    val ((afterIndex, _), dangB) =
-      par2(waveOf(idxB, corpB), danglingOf(idxB, corpB))
-    require(afterIndex.forall(r => !erased(r.getLong(1))),
-      "a revoked vector was served after the index-side erasure")
-    requireNoDangling(dangB)
-    // REFERENT second: dropping now-unreferenced corpus rows cannot
-    // change anything the wave observes
-    require(corpusT.deleteWhere(spark, $"vec_id" % 7 === 3).isDefined,
-      "takedown must erase at least one corpus row")
-    val (idxC, corpC) = resolvedPair()
-    val ((afterCorpus, _), dangC) =
-      par2(waveOf(idxC, corpC), danglingOf(idxC, corpC))
-    require(afterCorpus == afterIndex,
-      "corpus-side erasure of unreferenced rows changed the served wave")
-    requireNoDangling(dangC)
-    // PHYSICAL erasure: vacuum sweeps the pre-delete versions, and a
-    // recursive audit of every LIVE parquet file under both roots must
-    // find zero erased ids — the bytes are gone, not just unreachable
-    // vacuums on DIFFERENT roots — independent, overlapped (§2.6)
-    par2(assignT.vacuum(1), corpusT.vacuum(1))
-    // the vacuum proof reads the POST-vacuum state: resolve fresh; the
-    // swept wave and the two per-root byte audits are three independent
-    // actions — run them concurrently, require in declared order
-    def auditOf(root: java.nio.file.Path): (Int, Long) = {
-      import scala.jdk.CollectionConverters._
-      val walk = Files.walk(root)
-      val files =
-        try walk.iterator().asScala
-          .filter(p => p.toString.endsWith(".parquet"))
-          .map(_.toString).toList
-        finally walk.close()
-      if (files.isEmpty) (0, 0L)
-      else (files.size, spark.read.parquet(files: _*)
-        .filter($"vec_id" % 7 === 3).count())
-    }
-    val (idxD, corpD) = resolvedPair()
-    val ((swept, _), auditC, auditA) =
-      par3(waveOf(idxD, corpD), auditOf(croot), auditOf(aroot))
-    require(swept == afterIndex,
-      "vacuuming the erased versions changed the served wave")
-    Seq((croot, auditC), (aroot, auditA)).foreach { case (root, (nFiles, leak)) =>
-      require(nFiles > 0, s"takedown audit found no live files under $root")
-      require(leak == 0L,
-        s"$leak erased row(s) physically survive under $root — takedown " +
-          "without vacuum is unreachability, not erasure")
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(swept, 1), schema)
-  }
 
   /** The remaining-membership rule on the PQ lifecycle: bundle fitted
     * on the base, candidacy = (base ∪ batch) minus the erased set —
@@ -5768,14 +3786,7 @@ object LlmOps {
     val centT = VersionedTarget.Rewrite(qroot)
     val base = e.filter($"vec_id" % 20 =!= 0)
     val delta = e.filter($"vec_id" % 20 === 0)
-    val (baseAssign, cent0) = Similarity.kmeansFit(base, "vec_id",
-      "embedding", k = 8, iters = 2, materialize = false, withVec = true)
-    // two base commits on DIFFERENT roots (per-root pointer locks) —
-    // independent actions, overlapped (guide §2.6)
-    par2(
-      centT.commit(cent0, 0L),
-      baseT.commit(Similarity.quantizeInt8(baseAssign, "vec_id", "embedding"),
-        0L, tag = Some("v0")))
+    IndexKind.Sq8.commitBase(IndexKind.Sq8.fit(base, dim = 64), baseT, centT)
     // the HOT predicate, declared once — and paid once: the ONLY
     // index-wide semi-join in this query's lifetime runs here
     val allowed = docs.filter($"lang" === "en").select($"doc_id".as("vec_id"))
@@ -5799,7 +3810,7 @@ object LlmOps {
       .join(allowed.select($"vec_id").distinct(), Seq("vec_id"), "left_semi")
     // the prefetch-sizing corpus count reads only `e` — a third
     // independent scalar action, overlapped with the two audit directions
-    val (extraN, missingN, nCorpus) = par3(
+    val (extraN, missingN, nCorpus) = Overlap(
       fidx.select($"vec_id")
         .join(wantIds, Seq("vec_id"), "left_anti").count(),
       wantIds.join(fidx.select($"vec_id"), Seq("vec_id"), "left_anti")
@@ -5826,46 +3837,6 @@ object LlmOps {
     * no per-wave predicate machinery at all.
     */
   val q208Sql: String = q197Sql
-
-  /** Q210 — FILTERED HYBRID RETRIEVAL ON THE PQ-SERVED DENSE ARM:
-    * q205's production RAG-with-a-metadata-gate composition with the
-    * dense arm served from the CODED index (q188/q193's payload — the
-    * index a 100 TB fleet actually serves), closing the hybrid row of
-    * the filter matrix: the predicate gates BOTH arms' candidate sets
-    * before ranking (never the fused list), the dense arm is q202's
-    * filtered PQ wave at its scale-proof degenerate point
-    * ([[Similarity.ivfTopKServedPQFiltered]] — prefetch = |corpus|, so
-    * the scaled clamp re-ranks the whole allowed set and ADC error is
-    * stripped BY CONSTRUCTION), the lexical arm restricts the
-    * candidate frame below the band join (the shared
-    * [[lexicalTopKOver]]), and RRF fuses unchanged. The predicate is
-    * q202's source gate, so q205 and q210 share no answer key.
-    */
-  def q210(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docs = t(spark, dir, "documents")
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val out = PipelineOps.layoutDir(spark, dir, "filteredhybridpq")
-    // fused bundle fit: coarse + m codebooks in one loop — one
-    // corpus cache, one map+agg job per round (bit-identical to the
-    // separate kmeansFit + pqFit the oracle CTEs replay)
-    val (coarse, books) = Similarity.pqFitBundle(e, "vec_id",
-      "embedding", k = 8, iters = 2, dim = 64, m = 4, codes = 16)
-    Similarity.pqEncode(e, "vec_id", "embedding", books, coarse, dim = 64)
-      .repartition(col("cell")).write.mode("overwrite")
-      .partitionBy("cell").parquet(s"$out/codes")
-    val idx = spark.read.parquet(s"$out/codes")
-    val allowedPred = $"source" < "src2" && $"source" >= "src1"
-    val allowed = docs.filter(allowedPred).select($"doc_id".as("vec_id"))
-    val dense = Similarity.ivfTopKServedPQFiltered(idx, e, books, coarse,
-        "vec_id", "embedding", e.filter($"vec_id" < 10), allowed,
-        k = 10, prefetch = e.count(), nprobe = 8, dim = 64)
-      .select($"probe_id", $"cand_id", $"rn".as("rn_d"))
-    val lex = lexicalTopKOver(docs.filter($"doc_id" < 10),
-      docs.filter(allowedPred))
-    rrfFuse(dense, lex)
-      .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
-  }
 
   /** The shared filtered-hybrid oracle over q202's source gate — at the
     * degenerate point the PQ-served dense arm equals the same
@@ -5896,25 +3867,12 @@ object LlmOps {
   def q211(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = t(spark, dir, "embeddings").coalesce(8)
-    val out = PipelineOps.layoutDir(spark, dir, "filteredrecall")
-    val (assignments, centroids) =
-      Similarity.kmeansFit(e, "vec_id", "embedding", k = 8, iters = 2,
-        materialize = false, withVec = true)
-    // two independent artifact writes (the int8 index materialises the
-    // fit off its cached corpus; centroids are a driver-local k-row
-    // relation) — overlap them (guide §2.6)
-    par2(
-      Similarity.quantizeInt8(assignments, "vec_id", "embedding")
-        .repartition(col("cell")).write.mode("overwrite")
-        .partitionBy("cell").parquet(s"$out/assignments8"),
-      centroids.write.mode("overwrite").parquet(s"$out/centroids"))
-    val idx8 = spark.read.parquet(s"$out/assignments8")
-    val cent = Similarity.localize(spark.read.parquet(s"$out/centroids"))
+    val served = IndexKind.Sq8.buildStatic(e,
+      PipelineOps.layoutDir(spark, dir, "filteredrecall"), dim = 64)
     val probes = e.filter($"vec_id" < 20)
     def rateReport(mod: Int): DataFrame = {
       val allowed = e.filter($"vec_id" % mod === 0).select($"vec_id")
-      val ivf = Similarity.ivfTopKServedInt8Filtered(idx8, e, cent,
-          "vec_id", "embedding", probes, allowed,
+      val ivf = served.topKFiltered(e, probes, allowed,
           k = 3, prefetch = 6, nprobe = 2)
         .select($"probe_id", $"cand_id")
       val truth = Similarity.bruteForceTopK(probes,
@@ -5931,18 +3889,9 @@ object LlmOps {
     // each rate's ONLY eager step is its selectivity agg (one slim job);
     // the three are independent reads of the same committed index, so
     // build the rate frames concurrently (guide §2.6) — the final union
-    // is still ONE action, and Future.sequence keeps the declared rate
-    // order, so the report is byte-identical to the sequential build
-    val rates = {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(
-          Seq(2, 5, 20).map(m => scala.concurrent.Future(rateReport(m)))),
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
-    }
+    // is still ONE action, and the results keep the declared rate order,
+    // so the report is byte-identical to the sequential build
+    val rates = Overlap.all(Seq(2, 5, 20).map(m => () => rateReport(m)))
     val report = rates.reduce(_ union _)
       .orderBy($"one_in".asc_nulls_first, $"probe_id".asc_nulls_first)
     // k-bounded report (3 rates × 20 probes); materialise so nothing
@@ -6047,75 +3996,6 @@ object LlmOps {
        |UNION ALL SELECT one_in, probe_id, n_hits FROM r20_rep
        |ORDER BY one_in NULLS FIRST, probe_id NULLS FIRST""".stripMargin
 
-  /** Q194 — INCREMENTAL FEED FROM THE SERVING INDEX: q157's downstream
-    * delivery verb ([[graft.ops.VersionedTarget.Segmented.appendedSince]])
-    * run on the SQ8 index's `cell=`-partitioned target — the replica
-    * catch-up shape: a read replica that already holds the index up to
-    * epoch 1 pulls ONLY the rows batch 2 appended, straight off the
-    * CURRENT manifest's stream segments (O(delta) I/O regardless of
-    * index size, because append-only segments ARE the change feed). The
-    * payload is the full SQ8 serving shape — placement cell + the
-    * quantized codes, both BY RULE (the tag-pinned argmin + q98's
-    * scale/round rule), so the oracle re-derives every byte the replica
-    * receives. The in-query tail then proves the verb's FAILURE
-    * contract: after a compaction folds the post-cursor batch in with
-    * older rows, the cursor is unanswerable and the verb must throw the
-    * LOUD resync signal — never silently feed folded rows (q157's
-    * retention contract, now on the index pair).
-    */
-  def q194(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    import graft.ops.VersionedTarget
-    val e = t(spark, dir, "embeddings").coalesce(8)
-    val existing = e.filter($"vec_id" % 10 =!= 0)
-    val out = PipelineOps.layoutDir(spark, dir, "ivfint8feed")
-    val aroot = Paths.get(out, "assignments8")
-    val croot = Paths.get(out, "centroids")
-    Seq(aroot, croot).foreach { r => // fresh targets per invocation
-      if (Files.exists(r)) VersionedTarget.rmTree(r.toFile)
-      Files.createDirectories(r): Unit
-    }
-    val assignT = VersionedTarget.Segmented(aroot,
-      partitionCols = Seq("cell"), clusterCommits = true)
-    val centT = VersionedTarget.Rewrite(croot)
-    val (baseAssign, cent0) = Similarity.kmeansFit(existing, "vec_id",
-      "embedding", k = 8, iters = 2, materialize = false, withVec = true)
-    // two base commits on DIFFERENT roots (per-root pointer locks) —
-    // independent actions, overlapped (guide §2.6)
-    par2(
-      centT.commit(cent0, 0L),
-      assignT.commit(Similarity.quantizeInt8(baseAssign, "vec_id", "embedding"),
-        0L, tag = Some("v0")))
-    Similarity.appendToIndex(e.filter($"vec_id" % 20 === 0), "vec_id",
-      "embedding", assignT, centT, 1L, int8 = true)
-    Similarity.appendToIndex(e.filter($"vec_id" % 20 === 10), "vec_id",
-      "embedding", assignT, centT, 2L, int8 = true)
-    // replica catch-up from cursor 1: exactly batch 2's SQ8 rows. The
-    // feed is O(delta), NOT k-bounded — so it lands distributed in the
-    // replica's own artifact (what a real consumer does), never on the
-    // driver; the query reads the artifact back
-    val replica = graft.core.Scratch.deleteOnExit(
-      java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        "graft-dedup",
-        s"feed_${spark.sparkContext.applicationId}").toString)
-    assignT.appendedSince(spark, 1L)
-      .getOrElse(sys.error("batch 2 must feed the replica"))
-      .select($"vec_id", $"cell",
-        concat_ws(",", transform($"qvec", b => b.cast("int").cast("string")))
-          .as("q"))
-      .write.mode("overwrite").parquet(replica)
-    // the failure contract: a fold across the cursor must be LOUD
-    require(assignT.compact(spark).isDefined,
-      "post-append index must have segments to fold")
-    val loud =
-      try { assignT.appendedSince(spark, 1L); false }
-      catch { case _: IllegalStateException => true }
-    require(loud, "a fold crossing the cursor must raise the resync " +
-      "signal — never silently feed folded rows")
-    spark.read.parquet(replica).orderBy($"vec_id".asc_nulls_first)
-  }
-
   /** Fit-on-existing placement (q144's rule) + q98's SQ8 scale/round
     * rule, restricted to batch 2's slice — every byte the replica pulls.
     */
@@ -6185,50 +4065,24 @@ object LlmOps {
     "q159_hybrid_retrieval" -> (q159 _),
     "q160_dedup_recall_report" -> (q160 _),
     "q161_hybrid_served" -> (q161 _),
-    "q162_int8_index" -> (q162 _),
     "q163_image_neardup" -> (q163 _),
-    "q164_hybrid_int8" -> (q164 _),
-    "q165_int8_lifecycle" -> (q165 _),
     "q166_image_dedup_apply" -> (q166 _),
     "q167_audio_neardup" -> (q167 _),
-    "q170_ivfpq_adc" -> (q170 _),
     "q171_diversified_retrieval" -> (q171 _),
     "q172_winnowed_substring_dedup" -> (q172 _),
     "q173_video_neardup" -> (q173 _),
-    "q174_pq_lifecycle" -> (q174 _),
-    "q176_int8_takedown" -> (q176 _),
-    "q177_pq_takedown" -> (q177 _),
-    "q178_sq8_refit" -> (q178 _),
-    "q179_pq_refit" -> (q179 _),
     "q180_audio_dedup_apply" -> (q180 _),
     "q181_video_dedup_apply" -> (q181 _),
     "q182_stream_image_gate" -> (q182 _),
-    "q183_diversified_served" -> (q183 _),
     "q185_stream_audio_gate" -> (q185 _),
     "q186_curated_index_append" -> (q186 _),
     "q187_stream_video_gate" -> (q187 _),
-    "q188_hybrid_pq" -> (q188 _),
-    "q189_index_restore" -> (q189 _),
-    "q190_curated_stream_ingest" -> (q190 _),
     "q191_winnowed_dedup_apply" -> (q191 _),
     "q192_simhash_dedup_apply" -> (q192 _),
-    "q193_diversified_pq" -> (q193 _),
-    "q194_index_feed" -> (q194 _),
     "q195_winnowed_cross_corpus" -> (q195 _),
-    "q196_pq_index_restore" -> (q196 _),
-    "q197_filtered_ann" -> (q197 _),
-    "q198_pq_curated_ingest" -> (q198 _),
-    "q199_pq_index_feed" -> (q199 _),
     "q200_simhash_cross_corpus" -> (q200 _),
-    "q201_system_restore" -> (q201 _),
-    "q202_filtered_ann_pq" -> (q202 _),
-    "q203_system_takedown" -> (q203 _),
     "q204_filtered_ann_scaled" -> (q204 _),
-    "q205_filtered_hybrid" -> (q205 _),
-    "q206_system_restore_pq" -> (q206 _),
-    "q207_system_takedown_pq" -> (q207 _),
     "q208_filtered_ann_materialized" -> (q208 _),
-    "q210_filtered_hybrid_pq" -> (q210 _),
     "q211_filtered_recall_report" -> (q211 _))
 
   def oracles: Map[String, String] = Map(

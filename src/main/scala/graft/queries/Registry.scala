@@ -9,7 +9,7 @@ object Registry {
   def all: Map[String, (SparkSession, String) => DataFrame] =
     Scans.all ++ Projections.all ++ Joins.all ++ Aggregates.all ++
       Windows.all ++ SortsLimits.all ++ SetOps.all ++ Scalars.all ++
-      LlmOps.all ++ StreamingQueries.all ++ Extensibility.all ++
+      LlmOps.all ++ IndexVerbs.all ++ StreamingQueries.all ++ Extensibility.all ++
       ModelQueries.all ++ Reshape.all ++ CurationOps.all ++ PipelineOps.all ++
       AnalyticsOps.all ++ BehaviorOps.all ++ ExportOps.all ++ LifecycleOps.all
 

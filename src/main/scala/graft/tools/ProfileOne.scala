@@ -1,40 +1,33 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.ConcurrentHashMap
 
-/** Per-query job profile: run one named query like BenchOne but attach a
-  * listener that counts Spark jobs and sums their wall time, so the gap
-  * between "sum of job time" and "query wall time" (driver-side FS work,
-  * plan/analysis, collect round-trips) is visible. Diagnostic only — never
-  * on the bench path.
+/** Per-query profile: run one named query in the [[graft.Bench]] session
+  * with a listener that records every Spark job's interval, and report
+  * per run the wall time, the job count, the summed job time, the
+  * wall time covered by at least one job (the UNION of job intervals)
+  * and the driver gap = wall − that union — the time spent outside any
+  * job (driver-side FS work, plan/analysis, collect round-trips).
+  * Overlapped jobs count once in the union, so the gap stays honest
+  * under concurrency. Diagnostic only — never on the bench path.
   *
-  * Usage: ProfileOne <queryName> [reps]
+  * Usage: ProfileOne <queryName> [reps]; SPARK_GRAFT_PROF_JOBS=1 also
+  * prints one line per job.
   */
 object ProfileOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.graft.smallResultSort", "true")
-      .config("spark.graft.compactScans",
-        sys.env.getOrElse("SPARK_GRAFT_COMPACT", "true"))
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(graft.Bench.benchCpus)
     EngineLog.echoToConsole = false
 
     val starts = new ConcurrentHashMap[Int, (Long, String)]()
-    @volatile var jobs = 0
-    @volatile var jobNanos = 0L
+    val intervals = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
     val verbose = sys.env.contains("SPARK_GRAFT_PROF_JOBS")
-    val listener = new SparkListener {
+    spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         val site = js.stageInfos.map(si => s"${si.name.takeWhile(_ != '\n').take(60)}/${si.numTasks}t").mkString(" | ")
         starts.put(js.jobId, (System.nanoTime(), site)): Unit
@@ -42,27 +35,41 @@ object ProfileOne {
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {
         val rec = starts.remove(je.jobId)
         if (rec != null) {
-          jobs += 1
-          val dt = System.nanoTime() - rec._1
-          jobNanos += dt
+          val end = System.nanoTime()
+          intervals.add((rec._1, end))
           if (verbose)
-            println(f"[job] ${je.jobId}%3d ${dt / 1e3}%9.0f us  ${rec._2}")
+            println(f"[job] ${je.jobId}%3d ${(end - rec._1) / 1e3}%9.0f us  ${rec._2}")
         }
       }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    })
 
     val fn = graft.SparkEntry.queries(name)
     for (i <- 1 to reps) {
-      jobs = 0; jobNanos = 0L; starts.clear()
+      intervals.clear(); starts.clear()
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       Thread.sleep(200) // let the listener bus drain
       val wall = (System.nanoTime() - t0) / 1e9 - 0.2
-      println(f"[prof] $name run$i wall=$wall%.2f s jobs=$jobs " +
-        f"jobTime=${jobNanos / 1e9}%.2f s driverGap=${wall - jobNanos / 1e9}%.2f s")
+      val jobs = scala.jdk.CollectionConverters.IterableHasAsScala(intervals).asScala.toSeq
+      val jobTime = jobs.map { case (s, e) => e - s }.sum / 1e9
+      val union = unionNanos(jobs) / 1e9
+      println(f"[prof] $name run$i wall=$wall%.2f s jobs=${jobs.size} " +
+        f"jobTime=$jobTime%.2f s jobUnion=$union%.2f s driverGap=${wall - union}%.2f s")
       graft.core.CacheScope.releaseAll()
     }
     spark.stop()
+  }
+
+  /** Total length covered by the union of `[start, end)` intervals. */
+  def unionNanos(intervals: Seq[(Long, Long)]): Long = {
+    var covered = 0L
+    var reach = Long.MinValue
+    intervals.sortBy(_._1).foreach { case (s, e) =>
+      if (e > reach) {
+        covered += e - math.max(s, reach)
+        reach = e
+      }
+    }
+    covered
   }
 }

@@ -129,6 +129,19 @@ private class CrawlModel extends EtlModel {
   }
 }
 
+// a model whose build runs two long jobs concurrently through Overlap
+private class OverlapCrawlModel extends EtlModel {
+  override def name = "OverlapCrawlEtl"
+  override def build(ctx: EngineContext): DataFrame = {
+    val spark = ctx.spark
+    import spark.implicits._
+    def crawl(): Long = spark.range(0, 400, 1, 4).as[Long]
+      .map { i => Thread.sleep(100); i }.count()
+    graft.core.Overlap(crawl(), crawl())
+    spark.range(1).toDF()
+  }
+}
+
 // chaos: concurrency scoreboard for the stampede test
 private object Stampede {
   val running = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -362,6 +375,84 @@ class ExecLayerSpec extends SparkSpec {
       case other => fail(s"expected TaskFailed after cancel, got $other")
     }
     assert(status.status(spec.taskId) == "failed")
+  }
+
+  test("cancel kills EVERY job a task overlapped: Overlap's threads keep " +
+      "the task's job group") {
+    import org.apache.spark.scheduler.{JobSucceeded, SparkListener,
+      SparkListenerJobEnd, SparkListenerJobStart}
+    val (reg, status, runner) = freshRunner()
+    reg.register(new OverlapCrawlModel)
+    val spec = TaskSpec(modelClass = "OverlapCrawlEtl")
+    val groupOf = new ConcurrentHashMap[Int, String]()
+    val succeeded = new ConcurrentHashMap[Int, java.lang.Boolean]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => groupOf.put(js.jobId, g): Unit)
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        succeeded.put(je.jobId, je.jobResult == JobSucceeded): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      def mine: Seq[Int] = scala.jdk.CollectionConverters.MapHasAsScala(groupOf)
+        .asScala.collect { case (id, g) if g == spec.taskId => id }.toSeq
+      val fut = runner.submit(spec)
+      // wait until BOTH overlapped jobs run under the task's group
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (mine.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(mine.size == 2, s"expected 2 overlapped jobs in the task's group, saw ${mine.size}")
+      Thread.sleep(300)
+      runner.cancel(spec.taskId)
+      Await.result(fut, 60.seconds) match {
+        case TaskFailed(cls, _, _) => assert(cls.toLowerCase.contains("exception"))
+        case other => fail(s"expected TaskFailed after cancel, got $other")
+      }
+      assert(status.status(spec.taskId) == "failed")
+      val ended = System.nanoTime() + 30L * 1000000000L
+      while (!mine.forall(succeeded.containsKey) && System.nanoTime() < ended)
+        Thread.sleep(50)
+      mine.foreach { id =>
+        assert(succeeded.get(id) == java.lang.Boolean.FALSE,
+          s"overlapped job $id was not cancelled with its task")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("Overlap awaits every thunk and rethrows the FIRST-declared failure") {
+    // the second thunk fails first in time; the first-declared one wins
+    val e = intercept[IllegalStateException] {
+      graft.core.Overlap(
+        { Thread.sleep(300); throw new IllegalStateException("first") },
+        { throw new IllegalArgumentException("second") })
+    }
+    assert(e.getMessage == "first")
+    // a failure does not abandon a still-running sibling
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    intercept[IllegalArgumentException] {
+      graft.core.Overlap(
+        { throw new IllegalArgumentException("fast") },
+        { Thread.sleep(300); siblingDone.set(true) })
+    }
+    assert(siblingDone.get, "Overlap returned before its sibling thunk finished")
+    assert(graft.core.Overlap(1, "b", 3.0) == ((1, "b", 3.0)))
+  }
+
+  test("a duplicate task id is refused and the first record stays intact") {
+    val (reg, status, runner) = freshRunner()
+    reg.register(new NothingModel)
+    val first = TaskSpec(modelClass = "NothingEtl")
+    assert(first.taskId.length == 32 && first.taskId.forall(c =>
+      Character.digit(c, 16) >= 0), s"task id is not full UUID hex: ${first.taskId}")
+    assert(runner.runSync(first) == TaskComplete(10))
+    val before = status.record(first.taskId).get
+    val dup = first.copy(methodKwargs = Map("again" -> "1"))
+    assertThrows[InvalidTaskSpec](status.markRunning(dup))
+    assertThrows[InvalidTaskSpec](runner.runSync(dup))
+    assert(status.record(first.taskId).get == before,
+      "a refused registration overwrote the first task's record")
+    assert(runner.availableCapacity == 2, "a refused registration leaked capacity")
+    runner.close()
   }
 
   test("chaos stampede: submitters racing one slot never exceed capacity; " +

@@ -1877,8 +1877,8 @@ class OpsSpec extends SparkSpec {
       assignT.commit(Similarity.quantizeInt8(exAssign, "vec_id", "embedding"),
         0L, tag = Some("v0"))
       val centLocal = Similarity.localize(cent)
-      val ingest = graft.queries.LlmOps.ingestCuratedBatch(
-        assignT, centT, exAssign, centLocal) _
+      val ingest = graft.queries.IndexVerbs.ingestCuratedBatch(
+        IndexKind.Sq8, assignT, centT, exAssign, centLocal) _
       // plant a GUARANTEED semantic dup: an existing vector re-arriving
       // under a fresh id (cosine 1.0 with its original ≥ any threshold)
       val planted = existing.orderBy($"vec_id".asc).limit(1)
@@ -1937,8 +1937,8 @@ class OpsSpec extends SparkSpec {
       bundleT.commit(Similarity.pqBundleDF(spark, coarse, books), 0L)
       assignT.commit(Similarity.pqEncode(existing, "vec_id", "embedding",
         books, coarse, dim = 64), 0L, tag = Some("v0"))
-      val ingest = graft.queries.LlmOps.ingestCuratedBatchPq(
-        assignT, bundleT, exAssign, coarse, 64) _
+      val ingest = graft.queries.IndexVerbs.ingestCuratedBatch(
+        IndexKind.Pq, assignT, bundleT, exAssign, coarse) _
       // plant a GUARANTEED semantic dup (cosine 1.0 with its original)
       val planted = existing.orderBy($"vec_id".asc).limit(1)
         .select(lit(900001L).as("vec_id"), $"embedding", $"label")
@@ -2008,7 +2008,7 @@ class OpsSpec extends SparkSpec {
     centT.commit(cent, 0L)
     assignT.commit(Similarity.quantizeInt8(baseAssign, "vec_id", "embedding"),
       0L, tag = Some("v0"))
-    val ingest = graft.queries.LlmOps.ingestIndexBatchInt8(assignT, centT) _
+    val ingest = graft.queries.IndexVerbs.ingestIndexBatch(IndexKind.Sq8, assignT, centT) _
     val b0 = delta.filter($"vec_id" % 20 === 0)
     val b1 = delta.filter($"vec_id" % 20 === 10)
     ingest(b0, 0L)
@@ -2104,7 +2104,7 @@ class OpsSpec extends SparkSpec {
       "coarse centroids did not roundtrip the bundle")
     assert(rb == books.map(_.sortBy(_._1)),
       "codebooks did not roundtrip the bundle")
-    val ingest = graft.queries.LlmOps.ingestIndexBatchPq(assignT, bundleT) _
+    val ingest = graft.queries.IndexVerbs.ingestIndexBatch(IndexKind.Pq, assignT, bundleT) _
     val b0 = delta.filter($"vec_id" % 20 === 0)
     val b1 = delta.filter($"vec_id" % 20 === 10)
     ingest(b0, 0L)

@@ -337,7 +337,7 @@ class PlanSpec extends SparkSpec {
 
   test("q165 streamed int8 serve: the wave off the versioned pointer is " +
       "equi-join + point-lookup re-rank, never cartesian") {
-    val p = plan(LlmOps.q165(spark, sfDir))
+    val p = plan(IndexVerbs.all("q165_int8_lifecycle")(spark, sfDir))
     // the returned frame is the materialised k-bounded wave; pin the
     // SERVING plan itself instead: rebuild the served wave off the live
     // target the query just committed (same verbs, same shapes)
@@ -389,10 +389,10 @@ class PlanSpec extends SparkSpec {
     // unlike q159/q171 (whose BRUTE-FORCE dense baseline is a declared
     // non-equi scoring join), the served stacks read candidates off the
     // index's cell layout, so NO join in either plan may be cartesian
-    val p183 = plan(LlmOps.q183(spark, sfDir))
+    val p183 = plan(IndexVerbs.all("q183_diversified_served")(spark, sfDir))
     assert(!p183.contains("CartesianProduct") && !p183.contains("BroadcastNestedLoopJoin"),
       s"q183 served diversification exploded to all pairs:\n$p183")
-    val p188 = plan(LlmOps.q188(spark, sfDir))
+    val p188 = plan(IndexVerbs.all("q188_hybrid_pq")(spark, sfDir))
     assert(!p188.contains("CartesianProduct") && !p188.contains("BroadcastNestedLoopJoin"),
       s"q188 PQ-served hybrid exploded to all pairs:\n$p188")
   }
@@ -400,7 +400,7 @@ class PlanSpec extends SparkSpec {
   test("q193 PQ-served diversification: every join is an equi-join (the " +
       "q183/q188 pin on their composition) and the band-candidacy cap's " +
       "live-bucket guard joins BROADCAST, adding no shuffle") {
-    val p193 = plan(LlmOps.q193(spark, sfDir))
+    val p193 = plan(IndexVerbs.all("q193_diversified_pq")(spark, sfDir))
     assert(!p193.contains("CartesianProduct") && !p193.contains("BroadcastNestedLoopJoin"),
       s"q193 PQ-served diversification exploded to all pairs:\n$p193")
     // the df-cap guard (q163's banded Hamming family): the ≤2048-row
@@ -418,7 +418,7 @@ class PlanSpec extends SparkSpec {
       "the top-k), and nothing explodes to all pairs") {
     import org.apache.spark.sql.catalyst.plans.LeftSemi
     import org.apache.spark.sql.catalyst.plans.logical.Join
-    val df = LlmOps.q197(spark, sfDir)
+    val df = IndexVerbs.all("q197_filtered_ann")(spark, sfDir)
     val p = plan(df)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"q197 filtered wave exploded to all pairs:\n$p")
@@ -463,7 +463,7 @@ class PlanSpec extends SparkSpec {
 
   test("q170 IVF-PQ: the ADC wave is equi-join + point-lookup re-rank, " +
       "never cartesian") {
-    val p = plan(LlmOps.q170(spark, sfDir))
+    val p = plan(IndexVerbs.all("q170_ivfpq_adc")(spark, sfDir))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"PQ wave plan exploded to all pairs:\n$p")
   }
@@ -503,7 +503,7 @@ class PlanSpec extends SparkSpec {
 
   test("q174 streamed PQ serve: the ADC wave off the versioned pointer " +
       "is equi-join + point-lookup re-rank, never cartesian") {
-    val p = plan(LlmOps.q174(spark, sfDir))
+    val p = plan(IndexVerbs.all("q174_pq_lifecycle")(spark, sfDir))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"streamed PQ result plan exploded:\n$p")
     // pin the SERVING plan itself off the live target the query committed

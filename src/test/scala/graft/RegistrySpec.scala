@@ -13,7 +13,8 @@ class RegistrySpec extends SparkSpec {
     "Joins" -> Joins.all, "Aggregates" -> Aggregates.all,
     "Windows" -> Windows.all, "SortsLimits" -> SortsLimits.all,
     "SetOps" -> SetOps.all, "Scalars" -> Scalars.all,
-    "LlmOps" -> LlmOps.all, "Streaming" -> StreamingQueries.all,
+    "LlmOps" -> LlmOps.all, "IndexVerbs" -> IndexVerbs.all,
+    "Streaming" -> StreamingQueries.all,
     "Extensibility" -> Extensibility.all, "Models" -> ModelQueries.all,
     "Reshape" -> Reshape.all, "Curation" -> CurationOps.all,
     "Pipeline" -> PipelineOps.all, "Analytics" -> AnalyticsOps.all,
