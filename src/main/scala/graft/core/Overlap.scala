@@ -24,10 +24,9 @@ import java.util.concurrent.{Callable, ExecutionException, Executors}
   */
 object Overlap {
 
-  /** Run `thunks` on at most `threads` threads; results in declared order. */
-  def all[A](thunks: Seq[() => A], threads: Int = Int.MaxValue): Seq[A] = {
-    val pool = Executors.newFixedThreadPool(
-      math.max(1, math.min(threads, thunks.size)))
+  /** Run `thunks` on one thread each; results in declared order. */
+  def all[A](thunks: Seq[() => A]): Seq[A] = {
+    val pool = Executors.newFixedThreadPool(math.max(1, thunks.size))
     try {
       val futures = thunks.map(t => pool.submit(new Callable[A] { def call(): A = t() }))
       val outcomes = futures.map { f =>

@@ -50,6 +50,7 @@ final class JobRunner(
     if (!capacity.tryAcquire(blockMillis, TimeUnit.MILLISECONDS))
       throw new NoCapacity(
         s"no processing capacity for '${spec.modelClass}' within ${blockMillis}ms")
+    register(spec)
     Future {
       try runAdmitted(spec, model)
       finally capacity.release()
@@ -62,7 +63,6 @@ final class JobRunner(
     */
   private def runAdmitted(spec: TaskSpec, model: EtlModel): TaskOutcome = {
     val ctx = EngineContext(spark, spec.resolverContext)
-    status.markRunning(spec)
     spark.sparkContext.setJobGroup(spec.taskId,
       s"graft task ${spec.taskId}: ${spec.modelClass}.${spec.method}",
       interruptOnCancel = true)
@@ -110,8 +110,17 @@ final class JobRunner(
   def runSync(spec: TaskSpec): TaskOutcome = {
     val model = validate(spec)
     capacity.acquire()
+    register(spec)
     try runAdmitted(spec, model) finally capacity.release()
   }
+
+  /** Register an admitted task as running on the CALLER's thread, before
+    * it starts: a duplicate id is refused there as InvalidTaskSpec (the
+    * 412 analogue) and gives its capacity permit back.
+    */
+  private def register(spec: TaskSpec): Unit =
+    try status.markRunning(spec)
+    catch { case e: InvalidTaskSpec => capacity.release(); throw e }
 
   /** Accepted-class + known-method gate (both are InvalidTaskSpec → the
     * 412 analogue). Partitioned models run via their slices, so the

@@ -18,7 +18,7 @@ import graft.ops.VersionedTarget.{Rewrite, Segmented}
   *     centroids and the m codebooks ([[Similarity.pqBundleDF]]).
   *
   * Each value bundles ONLY what differs between the two payloads: target
-  * layout names, the base fit and its commit shape, the O(delta) append,
+  * layout names, the base fit and its payload, the O(delta) append,
   * the quantizer pairing, the served two-stage wave and its prefetch
   * rule, and the refit. Everything else — lifecycles, audits, waves,
   * recall gates — is written once against this interface. Rows are the
@@ -50,10 +50,12 @@ sealed abstract class IndexKind(
   def fit(base: DataFrame, dim: Int): Fit
 
   /** Commit the base build: quantizer version v0 and index segment 0
-    * tagged with it, in this kind's commit shape.
+    * tagged with it. The two commits land on DIFFERENT roots (per-root
+    * pointer locks) — independent actions, overlapped.
     */
   def commitBase(fit: Fit, assignT: Segmented, quantT: Rewrite,
-      warnOnDrops: Boolean = false): Unit
+      warnOnDrops: Boolean = false): Unit =
+    Overlap(commitQuantizer(fit, quantT), commitIndex(fit, assignT, warnOnDrops)): Unit
 
   /** One-shot (unversioned) build into `out`: the index rows persist in
     * the probe-pruning `cell=` layout and are served read back.
@@ -153,12 +155,6 @@ object IndexKind {
       Sq8Fit(assign, cent)
     }
 
-    // two commits on DIFFERENT roots (per-root pointer locks) —
-    // independent actions, overlapped
-    def commitBase(fit: Fit, assignT: Segmented, quantT: Rewrite,
-        warnOnDrops: Boolean): Unit =
-      Overlap(commitQuantizer(fit, quantT), commitIndex(fit, assignT, warnOnDrops)): Unit
-
     def buildStatic(corpus: DataFrame, out: String, dim: Int): Served = {
       val f = fit(corpus, dim)
       // the index write materialises the fit off its cached corpus; the
@@ -220,12 +216,6 @@ object IndexKind {
       val (coarse, books) = Similarity.pqFitBundle(base, IdCol, VecCol,
         k = Cells, iters = Iters, dim = dim, m = Subspaces, codes = Codes)
       PqFit(base, coarse, books, dim)
-    }
-
-    def commitBase(fit: Fit, assignT: Segmented, quantT: Rewrite,
-        warnOnDrops: Boolean): Unit = {
-      commitQuantizer(fit, quantT)
-      commitIndex(fit, assignT, warnOnDrops)
     }
 
     // the bundle is metadata-sized and already on the driver: only the

@@ -368,7 +368,7 @@ object MinHashDedup {
           .agg(count(lit(1)).as("n_cand"), count(col("__hit")).as("n_caught"))
           .head()
         BandingMeasurement(r, nTrue, counts.getLong(1), counts.getLong(0))
-      }, threads = 3)
+      })
     } finally {
       truth.unpersist(): Unit
       pSigs.unpersist(): Unit

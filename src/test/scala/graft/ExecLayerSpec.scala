@@ -449,6 +449,9 @@ class ExecLayerSpec extends SparkSpec {
     val dup = first.copy(methodKwargs = Map("again" -> "1"))
     assertThrows[InvalidTaskSpec](status.markRunning(dup))
     assertThrows[InvalidTaskSpec](runner.runSync(dup))
+    // the async path refuses it on the caller's thread (the HTTP 412),
+    // not inside the task's future
+    assertThrows[InvalidTaskSpec](runner.submit(dup))
     assert(status.record(first.taskId).get == before,
       "a refused registration overwrote the first task's record")
     assert(runner.availableCapacity == 2, "a refused registration leaked capacity")
