@@ -35,6 +35,7 @@ final class StatusServer(
     tlsKeystorePass: Option[String] = sys.env.get("GRAFT_TLS_KEYSTORE_PASS")) {
 
   private var server: Option[HttpServer] = None
+  private var handlers: Option[java.util.concurrent.ExecutorService] = None
 
   /** Shared-secret gate (the reference hardens its facade with amqps TLS
     * + gunicorn settings, `pika_client.py:7-101` / `main.py:79-87`; this
@@ -315,10 +316,21 @@ final class StatusServer(
         }
       } else respond(ex, 404, """{"error":"not found"}""")
     })
+    // one thread per in-flight request: a POST waiting up to 1 s for
+    // capacity must not stall GETs and node_info behind it (the handlers
+    // only touch TrieMaps, the capacity semaphore and a thread-safe mapper)
+    val pool = java.util.concurrent.Executors.newCachedThreadPool { r =>
+      val t = new Thread(r, "graft-http"); t.setDaemon(true); t
+    }
+    s.setExecutor(pool)
     s.start()
     server = Some(s)
+    handlers = Some(pool)
     s.getAddress.getPort
   }
 
-  def stop(): Unit = { server.foreach(_.stop(0)); server = None }
+  def stop(): Unit = {
+    server.foreach(_.stop(0)); server = None
+    handlers.foreach(_.shutdown()); handlers = None
+  }
 }

@@ -1,7 +1,9 @@
 package graft.exec
 
-import java.util.concurrent.{Executors, Semaphore, TimeUnit}
-import scala.concurrent.{ExecutionContext, Future}
+import java.util.concurrent.{Executors, LinkedBlockingQueue, Semaphore, TimeUnit}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.util.{Failure, Success, Try}
 import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import graft.core.EngineContext
@@ -17,11 +19,13 @@ import graft.model.{EtlModel, PartitionedEtlModel, SubTask, SubTaskResult}
   *  - isolation: each task runs under its own Spark job group (the
   *    process-per-task analogue), so `cancel` kills exactly that task's
   *    jobs (A19);
-  *  - fan-out: partitioned models scatter as ONE distributed job
-  *    (`Dataset[SubTask].repartition(k).mapPartitions`), gather unordered
-  *    on the driver, retry failed subtasks (`taskRetries`, default 1 —
-  *    process_pool.py:27), and propagate exhausted failures to the parent
-  *    with the failing subtask's id (A11/A12);
+  *  - fan-out: each attempt round of a partitioned model is ONE Spark job
+  *    (`sc.submitJob` over `sc.parallelize(pending, k)`), so its k
+  *    partitions run concurrently; the driver folds each partition's
+  *    results as it finishes, in completion order, retries failed
+  *    subtasks (`taskRetries`, default 1 — process_pool.py:27), and
+  *    propagates exhausted failures to the parent with the failing
+  *    subtask's id (A11/A12);
   *  - status: every transition lands in the [[StatusRegistry]] tables.
   */
 final class JobRunner(
@@ -150,35 +154,18 @@ final class JobRunner(
         s"(has: ${m.methods.keys.toSeq.sorted.mkString(", ")})"))
 
   /** Scatter/gather for partitioned models (§3.3 of SURVEY): plea →
-    * slice → one distributed job per attempt round → unordered driver
-    * fold via the completion callbacks.
+    * slice → one Spark job per attempt round → driver fold in completion
+    * order (A9/A10).
     */
   private def runPartitioned(spec: TaskSpec, pm: PartitionedEtlModel): TaskOutcome = {
-    import spark.implicits._
     val plea = pm.partitionPlea
     val workers = math.max(plea.minimum, math.min(plea.maximum, plea.optimal))
     var pending = pm.partitionSlice(workers)
     var attempt = 0
     var done = 0L
     while (pending.nonEmpty && attempt <= taskRetries) {
-      val results = spark.createDataset(pending)
-        .repartition(math.min(workers, pending.size))
-        .mapPartitions { sts =>
-          // per-worker init before any subtask (process.py:91-92)
-          if (sts.hasNext) pm.partitionInitialise(spec.partitionInitialiseKwargs)
-          sts.map { st =>
-            try SubTaskResult(st.method, st.kwargs, ok = true,
-              value = pm.runSubTask(st), error = "")
-            catch {
-              case NonFatal(e) => SubTaskResult(st.method, st.kwargs,
-                ok = false, value = "", error = e.toString)
-            }
-          }
-        }
-        // unordered gather: results surface in partition-completion order
-        .toLocalIterator()
       val failed = Seq.newBuilder[SubTaskResult]
-      results.forEachRemaining { r =>
+      foldRound(spec, pm, pending, math.min(workers, pending.size)) { r =>
         if (r.ok) { done += 1; pm.onSubtaskComplete(r) }
         else failed += r
       }
@@ -194,6 +181,38 @@ final class JobRunner(
       attempt += 1
     }
     TaskComplete(done)
+  }
+
+  /** One attempt round: `pending` split into `slices` partitions, run as a
+    * single job submitted from the task thread (so it inherits the task's
+    * job group and `cancel` reaches it). Spark's scheduler thread only
+    * enqueues each finished partition's results; `fold` runs here, on the
+    * task thread, in partition-completion order. A failed or cancelled job
+    * surfaces through the job's completion; if `fold` throws, the job is
+    * cancelled before the exception propagates.
+    */
+  private def foldRound(spec: TaskSpec, pm: PartitionedEtlModel,
+      pending: Seq[SubTask], slices: Int)(fold: SubTaskResult => Unit): Unit = {
+    val sc = spark.sparkContext
+    val arrived = new LinkedBlockingQueue[Try[Array[SubTaskResult]]]()
+    val job = sc.submitJob(sc.parallelize(pending, slices),
+      JobRunner.runSlice(pm, spec.partitionInitialiseKwargs),
+      0 until slices,
+      (_: Int, rs: Array[SubTaskResult]) => arrived.put(Success(rs)),
+      ())
+    job.onComplete {
+      case Failure(e) => arrived.put(Failure(e))
+      case _ => ()
+    }(ExecutionContext.parasitic)
+    try (0 until slices).foreach(_ => arrived.take().get.foreach(fold))
+    catch {
+      case e: Throwable =>
+        if (!job.isCompleted) {
+          job.cancel()
+          Await.ready(job, Duration.Inf): Unit
+        }
+        throw e
+    }
   }
 
   /** Kill one running task's Spark jobs (A19; governor.py:421-451). */
@@ -240,4 +259,25 @@ final class JobRunner(
 
   private def traceback(e: Throwable): Seq[String] =
     e.getStackTrace.take(12).map(_.toString).toSeq
+}
+
+object JobRunner {
+
+  /** The partition function of a fan-out round, kept off the runner so the
+    * shipped closure holds only the model and its init kwargs: per-worker
+    * init before any subtask (process.py:91-92), then each subtask's
+    * outcome as a result envelope.
+    */
+  private def runSlice(pm: PartitionedEtlModel, initKwargs: Map[String, String])(
+      sts: Iterator[SubTask]): Array[SubTaskResult] = {
+    if (sts.hasNext) pm.partitionInitialise(initKwargs)
+    sts.map { st =>
+      try SubTaskResult(st.method, st.kwargs, ok = true,
+        value = pm.runSubTask(st), error = "")
+      catch {
+        case NonFatal(e) => SubTaskResult(st.method, st.kwargs,
+          ok = false, value = "", error = e.toString)
+      }
+    }.toArray
+  }
 }

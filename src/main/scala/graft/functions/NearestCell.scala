@@ -172,8 +172,15 @@ case class RankedCells(child: Expression, matrix: CentroidMatrix, nprobe: Int)
 }
 
 object NearestCell {
-  def matrixOf(cent: Seq[(Long, Seq[Double])]): CentroidMatrix =
-    new CentroidMatrix(cent.map(_._1).toArray, cent.map(_._2.toArray).toArray)
+  /** The matrix of `cent` in cell-id order, whatever order the centroids
+    * were read back in: equal centroid sets give equal matrices (and equal
+    * plan captures). `nearest` and `ranked` break ties by cell id, so the
+    * order never changes an answer.
+    */
+  def matrixOf(cent: Seq[(Long, Seq[Double])]): CentroidMatrix = {
+    val sorted = cent.sortBy(_._1)
+    new CentroidMatrix(sorted.map(_._1).toArray, sorted.map(_._2.toArray).toArray)
+  }
 
   def nearest(vec: Column, cent: Seq[(Long, Seq[Double])]): Column =
     GraftExpressionBridge.column(NearestCell(

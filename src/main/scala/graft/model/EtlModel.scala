@@ -46,10 +46,11 @@ final case class SubTaskResult(
 
 /** Partitioned model — the analogue of `ayeaye.PartitionedModel`
   * (examples/example_etl.py:34-102): the model slices itself into
-  * independent subtasks; the engine fans them out as one distributed
-  * Spark job (`Dataset[SubTask].repartition(n).mapPartitions`), gathers
-  * results unordered, and feeds the per-result callback — same contract
-  * as the reference's scatter/gather over the broker (A7–A13).
+  * independent subtasks; the engine runs each attempt round as one Spark
+  * job whose partitions (at most the pleaded worker count) execute
+  * concurrently, and feeds the per-result callback on the driver as each
+  * partition finishes, in completion order — same contract as the
+  * reference's scatter/gather over the broker (A7–A13).
   */
 trait PartitionedEtlModel extends EtlModel {
 
@@ -80,8 +81,10 @@ trait PartitionedEtlModel extends EtlModel {
     */
   def runSubTask(st: SubTask): String
 
-  /** Per-result callback, invoked on the driver in completion order
-    * (UNORDERED — reference gather semantics, process_pool.py:159-168).
+  /** Per-result callback, invoked on the driver's task thread in
+    * partition-completion order (UNORDERED — reference gather semantics,
+    * process_pool.py:159-168). A throw here fails the task and cancels
+    * the round's still-running partitions.
     */
   def onSubtaskComplete(r: SubTaskResult): Unit = ()
 

@@ -80,6 +80,67 @@ private class NeedsInit extends PartitionedEtlModel {
   }
 }
 
+// Completion order + concurrency: subtask 1 waits until subtask 0 has
+// started and subtask 0 waits until the driver has folded subtask 1, so the
+// task completes only if both subtasks run at once and the driver folds
+// each result as its partition finishes. A 30 s wait that times out turns
+// into a subtask error.
+private object FanOrder {
+  @volatile var zeroStarted: java.util.concurrent.CountDownLatch = _
+  @volatile var oneFolded: java.util.concurrent.CountDownLatch = _
+  def reset(): Unit = {
+    zeroStarted = new java.util.concurrent.CountDownLatch(1)
+    oneFolded = new java.util.concurrent.CountDownLatch(1)
+  }
+  def await(l: java.util.concurrent.CountDownLatch, what: String): Unit =
+    if (!l.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      throw new IllegalStateException(s"timed out waiting for $what")
+}
+
+private class CompletionOrder extends PartitionedEtlModel {
+  override def name = "CompletionOrder"
+  @transient val folded = new java.util.concurrent.CopyOnWriteArrayList[String]()
+  override def partitionPlea: PartitionOption = PartitionOption(2, 2, 2)
+  override def partitionSlice(n: Int): Seq[SubTask] =
+    (0 until n).map(i => SubTask(s"sub-$i", Map("i" -> i.toString)))
+  override def runSubTask(st: SubTask): String = st.kwargs("i") match {
+    case "0" =>
+      FanOrder.zeroStarted.countDown()
+      FanOrder.await(FanOrder.oneFolded, "the driver to fold subtask 1")
+      "r0"
+    case i =>
+      FanOrder.await(FanOrder.zeroStarted, "subtask 0 to start")
+      "r" + i
+  }
+  override def onSubtaskComplete(r: SubTaskResult): Unit = {
+    folded.add(r.value): Unit
+    if (r.value == "r1") FanOrder.oneFolded.countDown()
+  }
+}
+
+// every subtask but the first sleeps (interruptibly) far longer than any
+// test waits, so its round's job is still running when the test acts
+private class SleepyFan extends PartitionedEtlModel {
+  override def name = "SleepyFan"
+  override def partitionPlea: PartitionOption = PartitionOption(4, 4, 4)
+  override def partitionSlice(n: Int): Seq[SubTask] =
+    (0 until n).map(i => SubTask(s"sub-$i", Map("i" -> i.toString)))
+  override def runSubTask(st: SubTask): String = {
+    if (st.kwargs("i") != "0") Thread.sleep(60000)
+    "r" + st.kwargs("i")
+  }
+}
+
+private class FoldRefused(msg: String) extends RuntimeException(msg)
+
+// the driver-side fold throws on the first result, while the round's other
+// partitions still sleep
+private class FailingFold extends SleepyFan {
+  override def name = "FailingFold"
+  override def onSubtaskComplete(r: SubTaskResult): Unit =
+    throw new FoldRefused(s"fold refused ${r.value}")
+}
+
 // Two cache-owning models for the per-task CacheScope test. The slow one
 // tracks a cache, then waits until the quick one has fully COMPLETED (its
 // task scope released) before asserting its own cache is still live — the
@@ -203,6 +264,34 @@ class ExecLayerSpec extends SparkSpec {
     (reg, status, new JobRunner(spark, reg, status, maxConcurrent))
   }
 
+  /** Records every job's group and whether it succeeded. */
+  private class JobLog extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.scheduler.{JobSucceeded, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    private val groupOf = new ConcurrentHashMap[Int, String]()
+    private val succeeded = new ConcurrentHashMap[Int, java.lang.Boolean]()
+    override def onJobStart(js: SparkListenerJobStart): Unit =
+      Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .foreach(g => groupOf.put(js.jobId, g): Unit)
+    override def onJobEnd(je: SparkListenerJobEnd): Unit =
+      succeeded.put(je.jobId, je.jobResult == JobSucceeded): Unit
+    def jobsOf(group: String): Seq[Int] = scala.jdk.CollectionConverters
+      .MapHasAsScala(groupOf).asScala.collect { case (id, g) if g == group => id }.toSeq
+    def ended(id: Int): Boolean = succeeded.containsKey(id)
+    def succeededJob(id: Int): Boolean = succeeded.get(id) == java.lang.Boolean.TRUE
+  }
+
+  private def withJobLog[A](body: JobLog => A): A = {
+    val log = new JobLog
+    spark.sparkContext.addSparkListener(log)
+    try body(log) finally spark.sparkContext.removeSparkListener(log)
+  }
+
+  private def awaitUntil(seconds: Int)(done: => Boolean): Unit = {
+    val deadline = System.nanoTime() + seconds * 1000000000L
+    while (!done && System.nanoTime() < deadline) Thread.sleep(50)
+  }
+
   private class NothingModel extends EtlModel {
     override def name = "NothingEtl"
     override def build(ctx: EngineContext): DataFrame =
@@ -262,6 +351,86 @@ class ExecLayerSpec extends SparkSpec {
     assert(runner.runSync(TaskSpec(modelClass = "Gathering")) == TaskComplete(6))
     val got = scala.jdk.CollectionConverters.ListHasAsScala(m.seen).asScala.toSet
     assert(got == (0 until 6).map("r" + _).toSet)
+  }
+
+  test("fan-out subtasks run concurrently and fold in completion order (A9/A10)") {
+    FanOrder.reset()
+    // no retry round: a timed-out wait fails the task instead of passing
+    // on a second attempt
+    val reg = new TaskRegistry
+    val runner = new JobRunner(spark, reg, new StatusRegistry, taskRetries = 0)
+    val m = new CompletionOrder
+    reg.register(m)
+    assert(runner.runSync(TaskSpec(modelClass = "CompletionOrder")) == TaskComplete(2))
+    assert(scala.jdk.CollectionConverters.ListHasAsScala(m.folded).asScala.toSeq
+      == Seq("r1", "r0"))
+    runner.close()
+  }
+
+  test("each fan-out attempt round is exactly one Spark job in the task's group") {
+    import org.apache.spark.graft.ListenerBus
+    val (reg, status, runner) = freshRunner()
+    reg.register(new Gathering)
+    reg.register(new SecondTimeLucky)
+    val gather = TaskSpec(modelClass = "Gathering")
+    assert(runner.runSync(gather) == TaskComplete(6))
+    ExecLayerSpec.attempts.clear()
+    val lucky = TaskSpec(modelClass = "SecondTimeLucky")
+    assert(runner.runSync(lucky) == TaskComplete(3))
+    ListenerBus.drain(spark.sparkContext)
+    assert(status.sparkJobs(gather.taskId).size == 1,
+      s"Gathering ran jobs ${status.sparkJobs(gather.taskId)}")
+    assert(status.sparkJobs(lucky.taskId).size == 2,
+      s"SecondTimeLucky ran jobs ${status.sparkJobs(lucky.taskId)}")
+    runner.close()
+  }
+
+  test("cancel kills a running fan-out round's job") {
+    val (reg, status, runner) = freshRunner()
+    reg.register(new SleepyFan)
+    val spec = TaskSpec(modelClass = "SleepyFan")
+    withJobLog { log =>
+      val fut = runner.submit(spec)
+      awaitUntil(60)(log.jobsOf(spec.taskId).nonEmpty)
+      assert(log.jobsOf(spec.taskId).size == 1,
+        s"expected the round's one job, saw ${log.jobsOf(spec.taskId)}")
+      Thread.sleep(300)
+      runner.cancel(spec.taskId)
+      Await.result(fut, 60.seconds) match {
+        case TaskFailed(_, _, _) => ()
+        case other => fail(s"expected TaskFailed after cancel, got $other")
+      }
+      assert(status.status(spec.taskId) == "failed")
+      val job = log.jobsOf(spec.taskId).head
+      awaitUntil(30)(log.ended(job))
+      assert(log.ended(job) && !log.succeededJob(job),
+        s"the fan-out job $job was not cancelled with its task")
+    }
+    runner.close()
+  }
+
+  test("a throwing fold fails the task with its exception and cancels the round") {
+    import org.apache.spark.graft.ListenerBus
+    val (reg, _, runner) = freshRunner()
+    reg.register(new FailingFold)
+    val spec = TaskSpec(modelClass = "FailingFold")
+    withJobLog { log =>
+      runner.runSync(spec) match {
+        case TaskFailed(cls, _, origin) =>
+          assert(cls == classOf[FoldRefused].getName)
+          assert(origin.isEmpty)
+        case other => fail(s"expected TaskFailed from the fold, got $other")
+      }
+      ListenerBus.drain(spark.sparkContext)
+      val jobs = log.jobsOf(spec.taskId)
+      assert(jobs.nonEmpty)
+      awaitUntil(30)(jobs.forall(log.ended))
+      jobs.foreach { id =>
+        assert(log.ended(id) && !log.succeededJob(id),
+          s"job $id of the failed task was left running")
+      }
+    }
+    runner.close()
   }
 
   test("partitionInitialise runs on each worker before its subtasks (process.py:91-92)") {

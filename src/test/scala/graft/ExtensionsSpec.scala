@@ -251,4 +251,28 @@ class ExtensionsSpec extends SparkSpec {
     val bad = df.filter($"native" =!= $"hof").collect()
     assert(bad.isEmpty, s"CountInList mismatch: ${bad.take(3).mkString("; ")}")
   }
+
+  test("CentroidMatrix is the same matrix whatever order its centroids arrive in") {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import graft.functions.NearestCell
+    // cells 3 and 8 share a vector, so every probe near it is a tie
+    val cent = Seq(
+      5L -> Seq(0.0, 1.0), 3L -> Seq(2.0, 2.0), 11L -> Seq(-1.0, 0.5),
+      8L -> Seq(2.0, 2.0), 1L -> Seq(0.25, -3.0))
+    val shuffled = Seq(cent(3), cent(0), cent(4), cent(1), cent(2))
+    val a = NearestCell.matrixOf(cent)
+    val b = NearestCell.matrixOf(shuffled)
+    assert(a == b && a.hashCode == b.hashCode)
+    assert(a.cells.toSeq == Seq(1L, 3L, 5L, 8L, 11L))
+    val probes = Seq(Seq(2.0, 2.0), Seq(0.0, 0.0), Seq(1.9, 2.1), Seq(-5.0, 9.0))
+    probes.foreach { p =>
+      val v = new GenericArrayData(p.map(_.asInstanceOf[Any]).toArray)
+      assert(a.nearest(v, isFloat = false) == b.nearest(v, isFloat = false))
+      assert(a.ranked(v, isFloat = false, 5).toLongArray().toSeq ==
+        b.ranked(v, isFloat = false, 5).toLongArray().toSeq)
+    }
+    val tie = new GenericArrayData(Array[Any](2.0, 2.0))
+    assert(b.nearest(tie, isFloat = false) == 3L)
+    assert(b.ranked(tie, isFloat = false, 2).toLongArray().toSeq == Seq(3L, 8L))
+  }
 }

@@ -315,4 +315,44 @@ class StatusServerSpec extends SparkSpec {
       assert(okPost.statusCode() == 200 && okPost.body().contains("\"task_id\""))
     } finally server.stop()
   }
+
+  test("a POST waiting for capacity does not stall a concurrent GET") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val reg = new TaskRegistry
+    val status = new StatusRegistry
+    val runner = new JobRunner(spark, reg, status, maxConcurrentTasks = 1)
+    // admission constructs the model once per submission, just before it
+    // waits for capacity: the second construction marks the second POST
+    // as waiting inside the handler
+    val admitted = new CountDownLatch(2)
+    val release = new CountDownLatch(1)
+    reg.registerFactory("HoldEtl", _ => {
+      admitted.countDown()
+      new EtlModel {
+        override def name = "HoldEtl"
+        override def build(ctx: EngineContext) = {
+          release.await(60, TimeUnit.SECONDS): Unit
+          ctx.spark.range(1).toDF()
+        }
+      }
+    })
+    val server = new StatusServer(runner, reg, status, maxConcurrentTasks = 1)
+    val port = server.start()
+    try {
+      val (c1, b1) = post(port, "/api/0.01/task", """{"model_class":"HoldEtl"}""")
+      assert(c1 == 200, b1)
+      val id = "\"task_id\":\"([a-f0-9]+)\"".r.findFirstMatchIn(b1).get.group(1)
+      val waiting = scala.concurrent.Future(
+        post(port, "/api/0.01/task", """{"model_class":"HoldEtl"}"""))(
+        scala.concurrent.ExecutionContext.global)
+      assert(admitted.await(30, TimeUnit.SECONDS), "second POST never reached admission")
+      val t0 = System.nanoTime()
+      val (c, b) = get(port, s"/api/0.01/task/$id")
+      val seconds = (System.nanoTime() - t0) / 1e9
+      assert(c == 200 && b.contains("\"status\":\"running\""), b)
+      assert(seconds < 0.5, f"GET took $seconds%.3f s behind a POST waiting for capacity")
+      assert(scala.concurrent.Await.result(waiting,
+        scala.concurrent.duration.Duration(30, "s"))._1 == 503)
+    } finally { release.countDown(); server.stop(); runner.close() }
+  }
 }
