@@ -8,7 +8,9 @@ each oracle SQL in DuckDB over the same sf directory, and compares:
   - values: sort columns by name, sort rows, exact equality (doubles must be
             bit-identical — the engine's determinism contract)
 Exit code 0 iff every query with an oracle matches. Queries without an
-oracle entry get a rows>0 smoke check only.
+oracle entry get a rows>0 smoke check only. Oracle keys with no output
+directory (a query that failed before writing) are listed as MISSING; they
+do not yet count toward the exit code.
 
 Usage: scripts/check.py [sfdir] [outdir] [only_query_substr]
 """
@@ -104,11 +106,15 @@ for name in names:
     else:
         passes.append(name)
 
-print(f"PASS {len(passes)}  SMOKE {len(smokes)}  FAIL {len(fails)}")
+missing = sorted(k for k in oracle
+                 if (not ONLY or ONLY in k) and k not in names)
+print(f"PASS {len(passes)}  SMOKE {len(smokes)}  FAIL {len(fails)}  MISSING {len(missing)}")
 for n in passes:
     print(f"  ok    {n}")
 for n, msg in smokes:
     print(f"  smoke {n}: {msg}")
 for n, msg in fails:
     print(f"  FAIL  {n}: {msg}")
+for n in missing:
+    print(f"  MISSING {n}: no output directory")
 sys.exit(1 if fails else 0)

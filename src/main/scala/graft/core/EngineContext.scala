@@ -21,7 +21,4 @@ final case class EngineContext(
       resolverContext.getOrElse(m.group(1),
         throw new IllegalArgumentException(
           s"unresolved template variable '{${m.group(1)}}' in '$template'")))
-
-  def withContext(extra: (String, String)*): EngineContext =
-    copy(resolverContext = resolverContext ++ extra)
 }

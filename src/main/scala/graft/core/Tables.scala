@@ -219,11 +219,6 @@ object Tables {
     */
   def dec2(c: Column): Column = c.cast(DecimalType(18, 2))
 
-  /** Finely-scaled decimal for intermediate products (keeps later
-    * multiplications inside decimal(38,_) exactly, no precision loss).
-    */
-  def dec4(c: Column): Column = c.cast(DecimalType(18, 4))
-
   /** Exact decimal sum surfaced as double: identical in Spark and DuckDB
     * because the decimal sum is exact and double conversion is
     * round-to-nearest in both.

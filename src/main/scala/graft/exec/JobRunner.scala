@@ -26,7 +26,15 @@ import graft.model.{EtlModel, PartitionedEtlModel, SubTask, SubTaskResult}
   *    subtasks (`taskRetries`, default 1 — process_pool.py:27), and
   *    propagates exhausted failures to the parent with the failing
   *    subtask's id (A11/A12);
-  *  - status: every transition lands in the [[StatusRegistry]] tables.
+  *  - status: every transition lands in the [[StatusRegistry]] tables;
+  *    every admitted task ends in exactly one terminal record, and its
+  *    `submit` future completes, whatever the model throws. Any
+  *    throwable, fatal ones included, becomes `TaskFailed` with its class
+  *    name and none propagates, as the reference's processor turns any
+  *    exception into a failed task (process.py:113-166); a
+  *    `StackOverflowError` has unwound by the time it is caught, and an
+  *    `InterruptedException` re-sets the thread's interrupt flag once the
+  *    record is written.
   */
 final class JobRunner(
     spark: SparkSession,
@@ -72,6 +80,7 @@ final class JobRunner(
       interruptOnCancel = true)
     graft.tools.EngineLog.log(
       s"task ${spec.taskId} ${spec.modelClass}.${spec.method} started")
+    var interrupted = false
     val outcome =
       try {
         // Per-task cache + scratch scopes: any CacheScope.track/adopt the
@@ -96,7 +105,8 @@ final class JobRunner(
       } catch {
         case e: SubTaskFailedException =>
           TaskFailed(e.getClass.getName, traceback(e), Some(e.originTaskId))
-        case NonFatal(e) =>
+        case e: Throwable =>
+          interrupted = e.isInstanceOf[InterruptedException]
           TaskFailed(e.getClass.getName, traceback(e), None)
       } finally {
         spark.sparkContext.clearJobGroup()
@@ -107,6 +117,7 @@ final class JobRunner(
       case _: TaskFailed => ("ERROR", "failed")
     }
     graft.tools.EngineLog.log(s"task ${spec.taskId} $word", lvl)
+    if (interrupted) Thread.currentThread().interrupt()
     outcome
   }
 

@@ -53,8 +53,6 @@ final class StatusRegistry extends SparkListener {
     records.values.filter(_.finished.isDefined).toSeq
       .sortBy(_.finished.get).reverse.take(limit)
 
-  def runningCount: Int = records.values.count(_.status == "running")
-
   override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
     val group = Option(jobStart.properties)
       .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))

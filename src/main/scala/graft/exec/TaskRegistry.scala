@@ -49,6 +49,4 @@ final class TaskRegistry {
     factories.getOrElse(name,
       throw new InvalidTaskSpec(s"model '$name' is not an accepted class"))
       .apply(constructionKwargs)
-
-  def acceptedClasses: Seq[String] = factories.keys.toSeq.sorted
 }

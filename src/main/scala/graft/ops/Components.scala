@@ -15,9 +15,9 @@ import graft.core.Overlap
   * of its component's minimum carries that minimum. Two drivers:
   *
   *  - [[contractComponents]] — the PRODUCTION path ([[clustersWithSize]]
-  *    default, used by q94/q125/ScaleCheck): quotient-graph contraction
-  *    with path halving, O(log diameter) rounds, loud failure past the
-  *    round cap.
+  *    default, used by q94/q125 and by `tools/ScaleCheck`, removed
+  *    after 7154dcb): quotient-graph contraction with path halving,
+  *    O(log diameter) rounds, loud failure past the round cap.
   *  - [[minLabelFixpoint]] — plain propagation iterated until a round
   *    changes zero labels: linear in diameter, kept as the
   *    independently-implemented cross-check the specs compare the
@@ -362,5 +362,35 @@ object Components {
     }
     release(labels)
     out
+  }
+
+  /** The dedup APPLY over a verified pair graph: TRUE duplicate clusters
+    * ([[clustersWithSize]] over `edges(a, b)` and `nodes(id)`), keeper =
+    * each cluster's minimum id, the keepers' `payload` rows (joined on
+    * `key`) materialised to parquet under a per-application scratch
+    * directory named `scratchName`, and the kept flags read BACK from
+    * that artifact — layout must never change decisions (the q127 gate).
+    * Returns (`key`, cluster, cluster_size, kept) ordered by `key`; the
+    * clusters stay cached in the caller's CacheScope. Every dedup apply
+    * verb shares it: media (q166/q180/q181) and text (q191/q192).
+    */
+  def applyDedup(edges: DataFrame, nodes: DataFrame, payload: DataFrame,
+      key: String, scratchName: String): DataFrame = {
+    val spark = payload.sparkSession
+    val cs = graft.core.CacheScope.adopt(clustersWithSize(edges, nodes))
+    val out = graft.core.Scratch.deleteOnExit(
+      java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
+        "graft-dedup",
+        s"${scratchName}_${spark.sparkContext.applicationId}").toString)
+    payload.join(cs.filter(col("id") === col("cluster")).select(col("id").as(key)),
+        Seq(key))
+      .write.mode("overwrite").parquet(out)
+    val kept = spark.read.parquet(out)
+      .select(col(key), lit(true).as("kept"))
+    cs.select(col("id").as(key), col("cluster"), col("cluster_size"))
+      .join(kept, Seq(key), "left")
+      .select(col(key), col("cluster"), col("cluster_size"),
+        coalesce(col("kept"), lit(false)).as("kept"))
+      .orderBy(col(key).asc_nulls_first)
   }
 }

@@ -135,35 +135,6 @@ object Similarity {
       .select(col("probe_id"), col("cand_id"), col("cos6"), col("rn"))
   }
 
-  /** IVF-style index: per-cell centroids (here: the mean vector of each
-    * `cellCol` group — swap in k-means assignments for unlabelled data;
-    * the join/partition plumbing is identical), then assign every vector
-    * to its nearest centroid by L2. Returns (idCol, cell) assignments.
-    * The centroid table is k rows → driver-localised and embedded as
-    * plan literals; assignment is a map-only argmin over k structs per
-    * row — the IVF build shape at 100 TB.
-    */
-  def ivfAssign(corpus: DataFrame, idCol: String, vecCol: String,
-                cellCol: String): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val expl = corpus.select(col(cellCol).as("__cell"),
-      posexplode(col(vecCol)).as(Seq("__pos", "__v")))
-    // exact decimal mean per (cell, dim) → deterministic centroids
-    val cent = expl.groupBy(col("__cell"), col("__pos"))
-      .agg((sum(col("__v").cast(DoubleType).cast(DecimalType(28, 10)))
-        .cast(DoubleType) / count(lit(1))).as("__cv"))
-      .groupBy(col("__cell"))
-      .agg(transform(sort_array(collect_list(struct(col("__pos"), col("__cv")))),
-        s => s.getField("__cv")).as("__centroid"))
-    // collect the k centroids (cell type follows the data column) and
-    // assign map-only — the former broadcast join + per-id window was an
-    // O(n·k) shuffle for the same argmin
-    val centSeq: Seq[(Any, Seq[Double])] =
-      cent.collect().toSeq.map(r => (r.get(0), r.getSeq[Double](1)))
-    corpus.select(col(idCol),
-      nearestCellExpr(col(vecCol), centSeq).as("cell"))
-  }
-
   /** Deterministic Lloyd's k-means cell assignments: init = the `k`
     * lowest-`idCol` vectors (cells 1..k in id order), then `iters` rounds
     * of nearest-centroid assignment + exact-decimal centroid recompute.
@@ -781,8 +752,8 @@ object Similarity {
     * reference object, so the generated code is identical across Lloyd's
     * rounds/waves (codegen-cache hit, no per-action recompile) and
     * analysis sees one node instead of k×dims literals. Non-Long cell
-    * keys (labelled [[ivfAssign]]) keep the equivalent `array_min` over
-    * k (d2, cell) structs — both argmin the same rounded-L2 term tree.
+    * keys keep the equivalent `array_min` over k (d2, cell) structs —
+    * both argmin the same rounded-L2 term tree.
     */
   private def nearestCellExpr(vec: Column,
                               cent: Seq[(Any, Seq[Double])]): Column =
@@ -1555,15 +1526,6 @@ object Similarity {
             "left_semi"),
           batchId, tag = baseT.currentTag)
       }
-
-  /** IVF search (nprobe=1) with per-`cellCol`-mean centroids (labelled
-    * data); for unlabelled corpora pair [[ivfTopKAssigned]] with
-    * [[kmeansAssign]].
-    */
-  def ivfTopK(corpus: DataFrame, idCol: String, vecCol: String,
-              cellCol: String, probeFilter: Column, k: Int): DataFrame =
-    ivfTopKAssigned(corpus, ivfAssign(corpus, idCol, vecCol, cellCol),
-      idCol, vecCol, probeFilter, k)
 
   /** LSH-bucketed cosine top-k: probes only scan corpus rows in their own
     * sign-bit bucket — the scan per probe shrinks ~2^bits-fold.

@@ -13,6 +13,11 @@ import graft.sources.Multimodal
   * cosine), similarity search (brute-force + LSH-bucketed ANN), text
   * analysis (token freq, language-ID, quality, token counts), and
   * multimodal binary columns.
+  *
+  * Two verb families live in their own modules: the quantized-index
+  * verbs in [[IndexVerbs]] (their oracles stay here, beside the CTE
+  * builders they share) and the media near-dup, dedup-apply and
+  * streaming-gate verbs in [[ModalityVerbs]] (with their oracles).
   */
 object LlmOps {
 
@@ -2239,171 +2244,6 @@ object LlmOps {
 
   val q162Sql: String = sq8WaveSql("TRUE")
 
-  /** Q163 — PERCEPTUAL IMAGE NEAR-DUP: multimodal corpora dedup on image
-    * CONTENT, not bytes (a re-encoded or one-block-edited copy has a
-    * different md5 but the same perceptual hash) — the image analogue of
-    * the q59/q81 text near-dup family. Decode is q63's partition-wise
-    * JDK path; the hashes are integer-exact 8×8 block aHash/dHash
-    * ([[Multimodal.perceptualHashes]]); candidate pairs come from q81's
-    * pigeonhole band machinery on the 64-bit aHash (8 byte-bands,
-    * pigeonhole-complete for Hamming ≤ 7 over LIVE buckets — the
-    * declared scale-aware hot-band df cap can drop a pair whose every
-    * shared band is degenerate) with the exact bit_count
-    * post-filter ([[Multimodal.imageNearDupPairs]]) — at 100 TB of
-    * images the band join shuffles (band, byte, id) triples, never
-    * pixels, never all-pairs.
-    *
-    * Fixture corpus: [[Multimodal.ensurePhashFixtures]] — 12 base images
-    * × 2 one-block-inverted variants (the Q63 pattern: the oracle
-    * recomputes both hashes from the shared generation RULE, checking
-    * decode → block sums → hash end-to-end against what the generator
-    * wrote; its bit math runs in HUGEINT because DuckDB's BIGINT `<<`
-    * traps at bit 63, and only the Hamming distances reach the output).
-    */
-  def q163(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val fix = Multimodal.ensurePhashFixtures()
-    val bin = Multimodal.readBinary(spark, s"$fix/*.png")
-    val hashes = Multimodal.perceptualHashes(bin)
-      .select(regexp_extract($"path", "([^/]+)$", 1).as("fname"),
-        $"ahash", $"dhash")
-    Multimodal.imageNearDupPairs(hashes, "fname", maxHamming = 6)
-      .select($"d1".as("f1"), $"d2".as("f2"), $"ham_a", $"ham_d")
-      .orderBy($"f1".asc_nulls_first, $"f2".asc_nulls_first)
-  }
-
-  /** The q163 oracle prefix: recomputes the block sums + both hashes
-    * from the fixture rule (every pixel of every image via
-    * range-unnest), ending in `named(f, ahash, dhash)` — shared by the
-    * pair query (q163) and the cluster/apply composition (q166).
-    */
-  private val phashOracleCtes: String =
-    """WITH imgs AS (
-      |  SELECT i.i, j.j FROM UNNEST(range(0, 12)) i(i), UNNEST(range(0, 3)) j(j)),
-      |px AS (
-      |  SELECT i, j, (idx // 32) // 4 AS by, (idx % 32) // 4 AS bx,
-      |    CASE WHEN j >= 1 AND (idx // 32) // 4 = j - 1 AND (idx % 32) // 4 = j
-      |         THEN 255 - base - (idx * 7) % 64
-      |         ELSE base + (idx * 7) % 64 END AS v
-      |  FROM (
-      |    SELECT i, j, idx,
-      |      CASE WHEN substr(md5(CAST(((idx // 32) // 4) * 8 + (idx % 32) // 4 AS VARCHAR)
-      |                 || '_' || CAST(i AS VARCHAR)), 1, 1) >= '8'
-      |           THEN 160 ELSE 0 END AS base
-      |    FROM imgs, UNNEST(range(0, 1024)) t(idx))),
-      |blk AS (SELECT i, j, by, bx, SUM(v) AS bs FROM px GROUP BY i, j, by, bx),
-      |tot AS (SELECT i, j, SUM(bs) AS ts FROM blk GROUP BY i, j),
-      |hsh AS (
-      |  SELECT b.i, b.j,
-      |    BIT_OR(CASE WHEN b.bs * 64 > t.ts
-      |                THEN CAST(1 AS HUGEINT) << (b.by * 8 + b.bx)
-      |                ELSE CAST(0 AS HUGEINT) END) AS ahash,
-      |    BIT_OR(CASE WHEN b.bs > n.bs
-      |                THEN CAST(1 AS HUGEINT) << (b.by * 8 + b.bx)
-      |                ELSE CAST(0 AS HUGEINT) END) AS dhash
-      |  FROM blk b
-      |  JOIN tot t ON t.i = b.i AND t.j = b.j
-      |  JOIN blk n ON n.i = b.i AND n.j = b.j AND n.by = b.by
-      |            AND n.bx = (b.bx + 1) % 8
-      |  GROUP BY b.i, b.j),
-      |named AS (SELECT printf('img_%02d_%d.png', i, j) AS f, ahash, dhash FROM hsh)""".stripMargin
-
-  /** The multimodal band-candidacy CTEs with the DECLARED hot-band df
-    * cap, mirroring [[Multimodal.bandedHammingPairs]] exactly: 8
-    * byte-bands over the `named` CTE's `hCol`, (band, bv) buckets with
-    * df > GREATEST(maxDf, CEIL(HotBandFactor·n/256)) dropped BY RULE
-    * (the scale-aware effective cap; n = COUNT(*) FROM named),
-    * `cand(d1, d2)` = the ordered candidate pairs. HUGEINT `>>`/`& 255`
-    * equals Spark's arithmetic shiftright+mask on the signed long
-    * bit-for-bit (verified for the bit-63 case). Margin already
-    * stripped — concatenate.
-    */
-  /** The declared hot-band df cap applied to a banded fingerprint
-    * INDEX (the streaming gates' static side, columns incl. (band,
-    * bv)): buckets hotter than the scale-aware effective cap
-    * `max(maxDf, ceil(HotBandFactor·n/256))` are dropped from
-    * candidacy BY RULE, bounding each arrival's join fan-out at
-    * `bands`·effCap rows (8 byte-bands for the 64-bit media
-    * fingerprints, 4 for the 32-bit SimHash). Mirrors
-    * [[Multimodal.bandedHammingPairs]]'s cap; the ≤ 2048-group df
-    * aggregate broadcasts back. Like that operator, the df agg is an
-    * EAGER bounded action at construction time (the documented
-    * localization trade) — call it when the gate is actually being
-    * built, not speculatively.
-    */
-  private[queries] def capBands(index: DataFrame, maxDf: Int = 12,
-      bands: Int = 8): DataFrame = {
-    // scale-aware effective cap (Multimodal.bandedHammingPairs' rule):
-    // max(maxDf, ceil(HotBandFactor·n/256)), n = banded rows / bands.
-    // The ≤2048-group df agg localizes (driver-size by design) and the
-    // live set rejoins as a broadcast literal frame — no cross join
-    val spark = index.sparkSession
-    import spark.implicits._
-    val dfRows = index.groupBy(col("band"), col("bv"))
-      .agg(count(lit(1)).as("__df")).collect()
-      .map(r => (r.getAs[Number](0).intValue, r.getAs[Number](1).longValue,
-        r.getLong(2)))
-    val n = dfRows.map(_._3).sum / bands.toLong
-    val effCap = math.max(maxDf.toLong, math.ceil(
-      graft.sources.Multimodal.HotBandFactor.toDouble * n / 256.0).toLong)
-    val live = dfRows.filter(_._3 <= effCap)
-      .map { case (band, bv, _) => (band, bv) }.toSeq
-      .toDF("band", "bv")
-    // persisted (CacheScope-released after the query): the capped index
-    // is the stream-static join's STATIC side, read once per micro-batch
-    // — without the pin every batch re-decodes the corpus media; with it
-    // the decode+fingerprint pass runs once per query
-    graft.core.CacheScope.adopt(
-      index.join(broadcast(live), Seq("band", "bv")).persist())
-  }
-
-  private def bandCandCtes(hCol: String, maxDf: Int): String =
-    s"""bnd AS (
-       |  SELECT f, b.band, ($hCol >> CAST(b.band * 8 AS INT)) & 255 AS bv
-       |  FROM named, UNNEST(range(0, 8)) b(band)),
-       |hotb AS (
-       |  SELECT band, bv FROM (SELECT band, bv, COUNT(*) AS df FROM bnd GROUP BY band, bv)
-       |  WHERE df > GREATEST($maxDf, CAST(CEIL(${graft.sources.Multimodal.HotBandFactor} * (SELECT COUNT(*) FROM named) / 256.0) AS BIGINT))),
-       |keptb AS (SELECT b.* FROM bnd b ANTI JOIN hotb h ON h.band = b.band AND h.bv = b.bv),
-       |cand AS (
-       |  SELECT DISTINCT a.f AS d1, b.f AS d2
-       |  FROM keptb a JOIN keptb b ON a.band = b.band AND a.bv = b.bv AND a.f < b.f)""".stripMargin
-
-  /** `cand` cut to true near-dups (`hp(d1, d2)`): the exact bit_count
-    * post-filter over the capped candidacy. Margin already stripped.
-    */
-  private def bandPairCtes(hCol: String, maxDf: Int): String =
-    bandCandCtes(hCol, maxDf) + ",\n" +
-      s"""hp AS (
-         |  SELECT c.d1, c.d2 FROM cand c
-         |  JOIN named a ON a.f = c.d1 JOIN named b ON b.f = c.d2
-         |  WHERE bit_count(xor(a.$hCol, b.$hCol)) <= 6)""".stripMargin
-
-  /** The per-file dup-verdict tail over `hp` (the streaming gates'
-    * batch replay): both directions, distinct dup count + min dup,
-    * right-joined so every file gets a verdict row. Margin stripped.
-    */
-  private def bandVerdictSql(maxDf: Int, hCol: String): String =
-    bandPairCtes(hCol, maxDf) + ",\n" +
-      """cd AS (SELECT d1 AS d, d2 AS x FROM hp
-        |        UNION ALL SELECT d2 AS d, d1 AS x FROM hp),
-        |m AS (SELECT d, COUNT(DISTINCT x) AS n_dups, MIN(x) AS nearest
-        |      FROM cd GROUP BY d)
-        |SELECT n.f AS fname, CAST(COALESCE(m.n_dups, 0) AS BIGINT) AS n_dups,
-        |  m.nearest AS nearest_dup
-        |FROM named n LEFT JOIN m ON m.d = n.f
-        |ORDER BY fname NULLS FIRST""".stripMargin
-
-  // NOTE: the prefix is already margin-stripped — concatenate, never
-  // re-stripMargin over it (its `|| '_' ||` concat lines would lose
-  // their leading pipes)
-  val q163Sql: String = phashOracleCtes + ",\n" + bandPairCtes("ahash", 12) + "\n" +
-    """SELECT p.d1 AS f1, p.d2 AS f2,
-      |  bit_count(xor(a.ahash, b.ahash)) AS ham_a,
-      |  bit_count(xor(a.dhash, b.dhash)) AS ham_d
-      |FROM hp p JOIN named a ON a.f = p.d1 JOIN named b ON b.f = p.d2
-      |ORDER BY f1 NULLS FIRST, f2 NULLS FIRST""".stripMargin
-
   /** q162's quantized two-stage wave at k=10/prefetch=20 for probes
     * vec_id < 10, fused with q159's lexical lists by the identical RRF
     * arithmetic.
@@ -2636,419 +2476,6 @@ object LlmOps {
         assignT, centT, bid, withVec = true)
   }
 
-  /** Q166 — IMAGE DEDUP END-TO-END (pairs → clusters → apply): the
-    * composition that makes q163 a DEDUP PIPELINE rather than a pair
-    * report — exactly the text family's q86→q94→q87→q127 chain run on
-    * the image modality: banded perceptual-hash pairs, TRUE duplicate
-    * clusters via the modality-agnostic quotient-graph contraction
-    * ([[graft.ops.Components.clustersWithSize]] — string ids work
-    * unchanged: min-label is any total order), keeper = each cluster's
-    * lexicographic-minimum file, and the APPLY materialises the
-    * surviving corpus (keeper payloads included) to parquet before the
-    * report reads the kept flags BACK from the artifact — layout must
-    * never change decisions, the q127 gate.
-    *
-    * Scale shape inherited stage-by-stage: band join shuffles (band,
-    * byte, id) triples, contraction is O(log diameter) rounds over an
-    * Ω(Σ cluster²)-free edge list, the apply writes keeper payloads
-    * once. The oracle recomputes hashes from the fixture rule, replays
-    * the capped band candidacy at Hamming ≤ 6, and unrolls 3 min-label
-    * rounds (clusters here are base+variant triangles, diameter 1).
-    */
-  def q166(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val fix = Multimodal.ensurePhashFixtures()
-    val bin = Multimodal.readBinary(spark, s"$fix/*.png")
-    val hashes = Multimodal.perceptualHashes(bin)
-      .select(regexp_extract($"path", "([^/]+)$", 1).as("fname"),
-        $"ahash", $"dhash")
-    val pairs = Multimodal.imageNearDupPairs(hashes, "fname", maxHamming = 6)
-    val cs = graft.core.CacheScope.adopt(
-      graft.ops.Components.clustersWithSize(
-        pairs.select($"d1".as("a"), $"d2".as("b")),
-        hashes.select($"fname".as("id"))))
-    val out = graft.core.Scratch.deleteOnExit(
-      java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        "graft-dedup",
-        s"imgs_${spark.sparkContext.applicationId}").toString)
-    // APPLY: the surviving corpus (keeper payloads, not just names) —
-    // what an image dedup pipeline actually ships
-    bin.select(regexp_extract($"path", "([^/]+)$", 1).as("fname"), $"content")
-      .join(cs.filter($"id" === $"cluster").select($"id".as("fname")),
-        Seq("fname"))
-      .write.mode("overwrite").parquet(out)
-    val kept = spark.read.parquet(out)
-      .select($"fname", lit(true).as("kept"))
-    cs.select($"id".as("fname"), $"cluster", $"cluster_size")
-      .join(kept, Seq("fname"), "left")
-      .select($"fname", $"cluster", $"cluster_size",
-        coalesce($"kept", lit(false)).as("kept"))
-      .orderBy($"fname".asc_nulls_first)
-  }
-
-  /** The q163 hash recomputation + capped band candidacy at Hamming ≤ 6 + the q94
-    * 3-round min-label unrolling + the cluster-min keep rule, with no
-    * layout write (layout independence is what the gate checks).
-    */
-  val q166Sql: String = phashOracleCtes + ",\n" +
-    bandPairCtes("ahash", 12) + ",\n" +
-    s"""ipairs AS (SELECT d1, d2 FROM hp),
-       |e AS MATERIALIZED (SELECT d1 AS a, d2 AS b FROM ipairs
-       |      UNION ALL SELECT d2 AS a, d1 AS b FROM ipairs),
-       |lab0 AS (SELECT f AS id, f AS cluster FROM named),
-       |${CurationOps.labRound(1)},
-       |${CurationOps.labRound(2)},
-       |${CurationOps.labRound(3)},
-       |sz AS (SELECT cluster, COUNT(*) AS n FROM lab3 GROUP BY cluster)
-       |SELECT l.id AS fname, l.cluster, CAST(s.n AS BIGINT) AS cluster_size,
-       |  (l.id = l.cluster) AS kept
-       |FROM lab3 l JOIN sz s ON s.cluster = l.cluster
-       |ORDER BY fname NULLS FIRST""".stripMargin
-
-  /** Q167 — AUDIO FINGERPRINT NEAR-DUP: completes the multimodal dedup
-    * matrix (text q59/q86, embedding q69, image q163, audio HERE) with
-    * machinery that already exists — q63's RIFF/PCM decode yields the
-    * samples, the fingerprint is the frame-ENERGY analogue of the
-    * image aHash ([[Multimodal.audioFingerprints]]: 64 frames on the
-    * floor-boundary grid, bit = frame |sample| sum above the global
-    * mean by exact integer cross-multiplication), and candidates come
-    * from the SAME byte-band Hamming machinery as images
-    * ([[Multimodal.bandedHammingPairs]] — pigeonhole-complete for
-    * Hamming ≤ 7 over buckets surviving the declared scale-aware
-    * hot-band df cap). At 100 TB of audio the band join shuffles (band,
-    * byte, id) triples, never samples, never all-pairs.
-    *
-    * Fixture corpus: [[Multimodal.ensureAudioFpFixtures]] — 12 base
-    * clips × 2 one-frame-inverted variants; the oracle recomputes both
-    * fingerprints from the generation RULE (decode → frame energies →
-    * bits checked end-to-end; HUGEINT bit math for the bit-63 shift),
-    * and only Hamming distances reach the output.
-    */
-  def q167(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val fix = Multimodal.ensureAudioFpFixtures()
-    val bin = Multimodal.readBinary(spark, s"$fix/*.wav")
-    val fps = Multimodal.audioFingerprints(bin)
-      .select(regexp_extract($"path", "([^/]+)$", 1).as("fname"),
-        $"afp", $"dfp")
-    Multimodal.bandedHammingPairs(fps, "fname", "afp", "dfp", maxHamming = 6)
-      .select($"d1".as("f1"), $"d2".as("f2"), $"ham_a", $"ham_d")
-      .orderBy($"f1".asc_nulls_first, $"f2".asc_nulls_first)
-  }
-
-  /** Recomputes frame energies + both fingerprints from the fixture
-    * rule (every sample of every clip via range-unnest), then the
-    * capped band candidacy at Hamming ≤ 6 — mirroring the banded
-    * join's declared rule, scale-aware df cap included.
-    */
-  /** The q167 oracle prefix: recomputes frame energies + both audio
-    * fingerprints from the fixture rule, ending in `named(f, afp, dfp)`
-    * — shared by the pair query (q167) and the cluster/apply
-    * composition (q180).
-    */
-  private val audioFpOracleCtes: String =
-    """WITH recs AS (
-      |  SELECT i.i, j.j FROM UNNEST(range(0, 12)) i(i), UNNEST(range(0, 3)) j(j)),
-      |sm AS (
-      |  SELECT i, j, idx // 16 AS f,
-      |    CASE WHEN j >= 1 AND idx // 16 = (j - 1) * 8 + j
-      |         THEN 16383 - base - (idx * 7) % 64
-      |         ELSE base + (idx * 7) % 64 END AS v
-      |  FROM (
-      |    SELECT i, j, idx,
-      |      CASE WHEN substr(md5(CAST(idx // 16 AS VARCHAR)
-      |                 || '_' || CAST(i AS VARCHAR)), 1, 1) >= '8'
-      |           THEN 15000 ELSE 0 END AS base
-      |    FROM recs, UNNEST(range(0, 1024)) t(idx))),
-      |frm AS (SELECT i, j, f, SUM(v) AS fs FROM sm GROUP BY i, j, f),
-      |tot AS (SELECT i, j, SUM(fs) AS ts FROM frm GROUP BY i, j),
-      |hsh AS (
-      |  SELECT fm.i, fm.j,
-      |    BIT_OR(CASE WHEN fm.fs * 64 > t.ts
-      |                THEN CAST(1 AS HUGEINT) << fm.f
-      |                ELSE CAST(0 AS HUGEINT) END) AS afp,
-      |    BIT_OR(CASE WHEN fm.fs > nx.fs
-      |                THEN CAST(1 AS HUGEINT) << fm.f
-      |                ELSE CAST(0 AS HUGEINT) END) AS dfp
-      |  FROM frm fm
-      |  JOIN tot t ON t.i = fm.i AND t.j = fm.j
-      |  JOIN frm nx ON nx.i = fm.i AND nx.j = fm.j AND nx.f = (fm.f + 1) % 64
-      |  GROUP BY fm.i, fm.j),
-      |named AS (SELECT printf('wav_%02d_%d.wav', i, j) AS f, afp, dfp FROM hsh)""".stripMargin
-
-  // NOTE: margin already stripped — concatenate, never re-stripMargin
-  val q167Sql: String = audioFpOracleCtes + ",\n" + bandPairCtes("afp", 12) + "\n" +
-    """SELECT p.d1 AS f1, p.d2 AS f2,
-      |  bit_count(xor(a.afp, b.afp)) AS ham_a,
-      |  bit_count(xor(a.dfp, b.dfp)) AS ham_d
-      |FROM hp p JOIN named a ON a.f = p.d1 JOIN named b ON b.f = p.d2
-      |ORDER BY f1 NULLS FIRST, f2 NULLS FIRST""".stripMargin
-
-  /** Q173 — VIDEO near-dup via frame sampling + temporal fingerprint:
-    * completes the multimodal dedup matrix (text / embedding / image /
-    * audio / VIDEO) with machinery the other modalities already proved.
-    * Decode is a partition-wise header walk over a raw-frame container
-    * ([[Multimodal.videoFingerprints]] — no codec exists in this
-    * environment, so the container is trivial by design and the honest
-    * work is frame geometry + SAMPLING + integer fingerprint math);
-    * every 2nd frame is sampled (the scale lever of video pipelines —
-    * unsampled content provably cannot change a bit), sampled frame
-    * intensity sums land in 64 positions, and the afp/dfp pair is the
-    * q167 frame-energy sign fingerprint on temporal positions.
-    * Candidates ride the SAME byte-band Hamming join as images/audio
-    * (pigeonhole-complete for Hamming ≤ 7 over buckets surviving the
-    * declared scale-aware hot-band df cap); the exact `bit_count`
-    * post-filter keeps ≤ 6. Fixture: 12 md5-classed bright/dark-frame
-    * clips × 2 one-frame-inverted variants (within-base Hamming ≤ 2,
-    * cross-base ≫ 6).
-    */
-  def q173(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val fix = Multimodal.ensureVideoFixtures()
-    val bin = Multimodal.readBinary(spark, s"$fix/*.gvid")
-    val fps = Multimodal.videoFingerprints(bin, stride = 2)
-      .select(regexp_extract($"path", "([^/]+)$", 1).as("fname"),
-        $"afp", $"dfp")
-    Multimodal.bandedHammingPairs(fps, "fname", "afp", "dfp", maxHamming = 6)
-      .select($"d1".as("f1"), $"d2".as("f2"), $"ham_a", $"ham_d")
-      .orderBy($"f1".asc_nulls_first, $"f2".asc_nulls_first)
-  }
-
-  /** Recomputes the sampled-frame pixel sums + both fingerprints from
-    * the fixture rule (every pixel of every SAMPLED frame via
-    * range-unnest; unsampled frames never enter, mirroring the stride),
-    * then the capped band candidacy at Hamming ≤ 6 — mirroring the banded join's
-    * reference. With 64 equal-size sampled frames the cross-multiplied
-    * mean comparisons reduce to `fs·64 > total` and `fs > next fs`
-    * (identical truth values to the engine's general fn-weighted form).
-    */
-  /** The q173 oracle prefix (sampled-frame fingerprint recompute),
-    * ending in `named(f, afp, dfp)` — shared by q173 and the
-    * cluster/apply composition (q181).
-    */
-  private val videoFpOracleCtes: String =
-    """WITH recs AS (
-      |  SELECT i.i, j.j FROM UNNEST(range(0, 12)) i(i), UNNEST(range(0, 3)) j(j)),
-      |pxl AS (
-      |  SELECT i, j, f,
-      |    CASE WHEN j >= 1 AND f = (j - 1) * 8 + j
-      |         THEN 255 - base - (x + 31 * y) % 16
-      |         ELSE base + (x + 31 * y) % 16 END AS v
-      |  FROM (
-      |    SELECT i, j, f, x.x, y.y,
-      |      CASE WHEN substr(md5(CAST(f AS VARCHAR)
-      |                 || '_' || CAST(i AS VARCHAR)), 1, 1) >= '8'
-      |           THEN 200 ELSE 10 END AS base
-      |    FROM recs, UNNEST(range(0, 64)) t(f),
-      |         UNNEST(range(0, 32)) x(x), UNNEST(range(0, 32)) y(y))),
-      |frm AS (SELECT i, j, f, SUM(v) AS fs FROM pxl GROUP BY i, j, f),
-      |tot AS (SELECT i, j, SUM(fs) AS ts FROM frm GROUP BY i, j),
-      |hsh AS (
-      |  SELECT fm.i, fm.j,
-      |    BIT_OR(CASE WHEN fm.fs * 64 > t.ts
-      |                THEN CAST(1 AS HUGEINT) << fm.f
-      |                ELSE CAST(0 AS HUGEINT) END) AS afp,
-      |    BIT_OR(CASE WHEN fm.fs > nx.fs
-      |                THEN CAST(1 AS HUGEINT) << fm.f
-      |                ELSE CAST(0 AS HUGEINT) END) AS dfp
-      |  FROM frm fm
-      |  JOIN tot t ON t.i = fm.i AND t.j = fm.j
-      |  JOIN frm nx ON nx.i = fm.i AND nx.j = fm.j AND nx.f = (fm.f + 1) % 64
-      |  GROUP BY fm.i, fm.j),
-      |named AS (SELECT printf('vid_%02d_%d.gvid', i, j) AS f, afp, dfp FROM hsh)""".stripMargin
-
-  // NOTE: margin already stripped — concatenate, never re-stripMargin
-  val q173Sql: String = videoFpOracleCtes + ",\n" + bandPairCtes("afp", 12) + "\n" +
-    """SELECT p.d1 AS f1, p.d2 AS f2,
-      |  bit_count(xor(a.afp, b.afp)) AS ham_a,
-      |  bit_count(xor(a.dfp, b.dfp)) AS ham_d
-      |FROM hp p JOIN named a ON a.f = p.d1 JOIN named b ON b.f = p.d2
-      |ORDER BY f1 NULLS FIRST, f2 NULLS FIRST""".stripMargin
-
-  /** Q180 — AUDIO DEDUP END-TO-END (pairs → clusters → apply): q166's
-    * composition run on the audio modality — q167 stopped at the pair
-    * report; this closes the pipeline the way every other dedup modality
-    * already does: banded frame-energy fingerprint pairs, TRUE duplicate
-    * clusters via the modality-agnostic quotient-graph contraction
-    * (string ids — min-label is any total order), keeper = each
-    * cluster's lexicographic-minimum clip, and the APPLY materialises
-    * the surviving corpus (keeper PAYLOADS, not just names) to parquet
-    * before the kept flags are read BACK from the artifact — layout must
-    * never change decisions (the q127/q166 gate). Scale shape inherited
-    * stage-by-stage: the band join shuffles (band, byte, id) triples —
-    * never samples — and the apply writes keeper payloads once.
-    */
-  def q180(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val fix = Multimodal.ensureAudioFpFixtures()
-    val bin = Multimodal.readBinary(spark, s"$fix/*.wav")
-    val fps = Multimodal.audioFingerprints(bin)
-      .select(regexp_extract($"path", "([^/]+)$", 1).as("fname"),
-        $"afp", $"dfp")
-    val pairs = Multimodal.bandedHammingPairs(fps, "fname", "afp", "dfp",
-      maxHamming = 6)
-    val cs = graft.core.CacheScope.adopt(
-      graft.ops.Components.clustersWithSize(
-        pairs.select($"d1".as("a"), $"d2".as("b")),
-        fps.select($"fname".as("id"))))
-    val out = graft.core.Scratch.deleteOnExit(
-      java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        "graft-dedup",
-        s"wavs_${spark.sparkContext.applicationId}").toString)
-    bin.select(regexp_extract($"path", "([^/]+)$", 1).as("fname"), $"content")
-      .join(cs.filter($"id" === $"cluster").select($"id".as("fname")),
-        Seq("fname"))
-      .write.mode("overwrite").parquet(out)
-    val kept = spark.read.parquet(out)
-      .select($"fname", lit(true).as("kept"))
-    cs.select($"id".as("fname"), $"cluster", $"cluster_size")
-      .join(kept, Seq("fname"), "left")
-      .select($"fname", $"cluster", $"cluster_size",
-        coalesce($"kept", lit(false)).as("kept"))
-      .orderBy($"fname".asc_nulls_first)
-  }
-
-  /** The q167 fingerprint recompute + capped band candidacy at Hamming ≤ 6 + the q166
-    * 3-round min-label unrolling + the cluster-min keep rule.
-    */
-  val q180Sql: String = audioFpOracleCtes + ",\n" +
-    bandPairCtes("afp", 12) + ",\n" +
-    s"""ipairs AS (SELECT d1, d2 FROM hp),
-       |e AS MATERIALIZED (SELECT d1 AS a, d2 AS b FROM ipairs
-       |      UNION ALL SELECT d2 AS a, d1 AS b FROM ipairs),
-       |lab0 AS (SELECT f AS id, f AS cluster FROM named),
-       |${CurationOps.labRound(1)},
-       |${CurationOps.labRound(2)},
-       |${CurationOps.labRound(3)},
-       |sz AS (SELECT cluster, COUNT(*) AS n FROM lab3 GROUP BY cluster)
-       |SELECT l.id AS fname, l.cluster, CAST(s.n AS BIGINT) AS cluster_size,
-       |  (l.id = l.cluster) AS kept
-       |FROM lab3 l JOIN sz s ON s.cluster = l.cluster
-       |ORDER BY fname NULLS FIRST""".stripMargin
-
-  /** Q181 — VIDEO DEDUP END-TO-END: q180's composition on the video
-    * modality (q173's stride-sampled temporal fingerprints). The dedup
-    * matrix's apply column is now full: text (q87/q127), embedding
-    * (q169/q175), image (q166), audio (q180), video (HERE) — all through
-    * the same contraction/keeper/apply machinery, which is the point:
-    * modality only changes the fingerprint, never the pipeline.
-    */
-  def q181(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val fix = Multimodal.ensureVideoFixtures()
-    val bin = Multimodal.readBinary(spark, s"$fix/*.gvid")
-    val fps = Multimodal.videoFingerprints(bin, stride = 2)
-      .select(regexp_extract($"path", "([^/]+)$", 1).as("fname"),
-        $"afp", $"dfp")
-    val pairs = Multimodal.bandedHammingPairs(fps, "fname", "afp", "dfp",
-      maxHamming = 6)
-    val cs = graft.core.CacheScope.adopt(
-      graft.ops.Components.clustersWithSize(
-        pairs.select($"d1".as("a"), $"d2".as("b")),
-        fps.select($"fname".as("id"))))
-    val out = graft.core.Scratch.deleteOnExit(
-      java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        "graft-dedup",
-        s"vids_${spark.sparkContext.applicationId}").toString)
-    bin.select(regexp_extract($"path", "([^/]+)$", 1).as("fname"), $"content")
-      .join(cs.filter($"id" === $"cluster").select($"id".as("fname")),
-        Seq("fname"))
-      .write.mode("overwrite").parquet(out)
-    val kept = spark.read.parquet(out)
-      .select($"fname", lit(true).as("kept"))
-    cs.select($"id".as("fname"), $"cluster", $"cluster_size")
-      .join(kept, Seq("fname"), "left")
-      .select($"fname", $"cluster", $"cluster_size",
-        coalesce($"kept", lit(false)).as("kept"))
-      .orderBy($"fname".asc_nulls_first)
-  }
-
-  val q181Sql: String = videoFpOracleCtes + ",\n" +
-    bandPairCtes("afp", 12) + ",\n" +
-    s"""ipairs AS (SELECT d1, d2 FROM hp),
-       |e AS MATERIALIZED (SELECT d1 AS a, d2 AS b FROM ipairs
-       |      UNION ALL SELECT d2 AS a, d1 AS b FROM ipairs),
-       |lab0 AS (SELECT f AS id, f AS cluster FROM named),
-       |${CurationOps.labRound(1)},
-       |${CurationOps.labRound(2)},
-       |${CurationOps.labRound(3)},
-       |sz AS (SELECT cluster, COUNT(*) AS n FROM lab3 GROUP BY cluster)
-       |SELECT l.id AS fname, l.cluster, CAST(s.n AS BIGINT) AS cluster_size,
-       |  (l.id = l.cluster) AS kept
-       |FROM lab3 l JOIN sz s ON s.cluster = l.cluster
-       |ORDER BY fname NULLS FIRST""".stripMargin
-
-  /** Q182 — STREAMING MULTIMODAL NEAR-DUP GATE: q126's continuous-
-    * ingestion gate shape on the IMAGE modality — each arriving image
-    * file (a `binaryFile`-source micro-batch row) is DECODED AND
-    * FINGERPRINTED MAP-SIDE (the q163 perceptual hash inside the
-    * stream's own `mapPartitions`), exploded into the 8 byte-bands, and
-    * stream-static joined against the corpus' banded fingerprint index;
-    * candidates within Hamming ≤ 6 aggregate into a per-image verdict
-    * (distinct dup count + nearest dup) in UPDATE mode under an
-    * ingest-time watermark, so per-image state EVICTS as the clock
-    * advances. Images with no candidates are restored by a batch right
-    * join so every arrival gets a verdict row.
-    *
-    * Scale shape: pixels never leave the map side — the only shuffled
-    * rows are (band, byte, id) triples and the k-bounded verdicts; the
-    * static index lives bucketed on (band, bv) at 100 TB exactly like
-    * q126's text index. An image's 8 band rows derive from ONE input
-    * row, so they land in the same micro-batch and the verdict is
-    * complete when it first emits.
-    */
-  def q182(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val fix = Multimodal.ensurePhashFixtures()
-    val names = Multimodal.readBinary(spark, s"$fix/*.png")
-      .select(regexp_extract($"path", "([^/]+)$", 1).as("fname"))
-    // the static corpus index: banded 64-bit aHashes (8 byte-bands),
-    // hot buckets dropped by the declared df cap (the
-    // bandedHammingPairs rule — flat-color corpora collapse aHash
-    // bytes, and a degenerate index bucket multiplies EVERY matching
-    // arrival by its size; the ≤2048-group df agg broadcasts back)
-    val index = capBands(Multimodal.perceptualHashes(
-        Multimodal.readBinary(spark, s"$fix/*.png"))
-      .select(regexp_extract($"path", "([^/]+)$", 1).as("idx_id"),
-        $"ahash".as("idx_fp"),
-        explode(sequence(lit(0), lit(7))).as("band"))
-      .withColumn("bv", expr("shiftright(idx_fp, band * 8) & 255")))
-    val arrivals = graft.streaming.StreamOps.binaryStream(spark, fix,
-      pathGlob = "*.png", maxFilesPerTrigger = 16)
-    // ingest-time clock for the oracle harness: derived from the fixture
-    // ordinal so the run is deterministic (q126's rule, incl. the +1 day
-    // shift past the initial watermark); a deployment passes arrival time
-    val ord = regexp_extract($"fname", "img_(\\d+)_", 1).cast("long") * 3 +
-      regexp_extract($"fname", "_(\\d)\\.png$", 1).cast("long")
-    val verdicts = Multimodal.perceptualHashes(arrivals)
-      .select(regexp_extract($"path", "([^/]+)$", 1).as("fname"), $"ahash")
-      .withColumn("ing_ts", (ord + lit(86400L)).cast("timestamp"))
-      .withWatermark("ing_ts", "60 seconds") // > the full ordinal span: source file-order can never watermark-drop a verdict
-      .withColumn("band", explode(sequence(lit(0), lit(7))))
-      .withColumn("bv", expr("shiftright(ahash, band * 8) & 255"))
-      .join(index, Seq("band", "bv"))
-      .filter($"idx_id" =!= $"fname" &&
-        expr("bit_count(ahash ^ idx_fp)") <= 6)
-      .groupBy($"fname", $"ing_ts")
-      .agg(size(collect_set($"idx_id")).cast("long").as("n_dups"),
-        min($"idx_id").as("nearest_dup"))
-      .select($"fname", $"n_dups", $"nearest_dup")
-    graft.streaming.StreamOps
-      .runToMemory(verdicts, "q182_sink", "update", finalWatermarkBatch = false)
-      .join(names, Seq("fname"), "right")
-      .select($"fname", coalesce($"n_dups", lit(0L)).as("n_dups"),
-        $"nearest_dup")
-      .orderBy($"fname".asc_nulls_first)
-  }
-
-  /** The q163 hash recompute + the identical batch verdict (the capped
-    * band candidacy cut at Hamming ≤ 6, per-image count + min) — batch
-    * boundaries cannot change a verdict because it compares against the
-    * WHOLE corpus index (q126's oracle argument), and the df cap is a
-    * function of that same index.
-    */
-  val q182Sql: String = phashOracleCtes + ",\n" + bandVerdictSql(12, "ahash")
-
   /** q164's served-fusion CTE stack (SQ8 dense + banded lexical + RRF)
     * chained into q171's diversification tail.
     */
@@ -3060,55 +2487,6 @@ object LlmOps {
        |$rrfCoreCtes,
        |$diversifyTailSql""".stripMargin
       .replaceFirst("WITH ", "WITH RECURSIVE ")
-
-  /** Q185 — STREAMING AUDIO NEAR-DUP GATE: q182's gate on the audio
-    * modality — arriving WAV files decode + frame-energy-fingerprint
-    * map-side inside the stream ([[Multimodal.audioFingerprints]] over
-    * the `binaryFile` source), band-join the corpus' banded fingerprint
-    * index, and emit per-clip verdicts under the ingest-time watermark.
-    * Same scale contract: samples never leave the map side; the modality
-    * only changes the fingerprint function, never the gate.
-    */
-  def q185(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val fix = Multimodal.ensureAudioFpFixtures()
-    val names = Multimodal.readBinary(spark, s"$fix/*.wav")
-      .select(regexp_extract($"path", "([^/]+)$", 1).as("fname"))
-    val index = capBands(Multimodal.audioFingerprints(
-        Multimodal.readBinary(spark, s"$fix/*.wav"))
-      .select(regexp_extract($"path", "([^/]+)$", 1).as("idx_id"),
-        $"afp".as("idx_fp"),
-        explode(sequence(lit(0), lit(7))).as("band"))
-      .withColumn("bv", expr("shiftright(idx_fp, band * 8) & 255")))
-    val arrivals = graft.streaming.StreamOps.binaryStream(spark, fix,
-      pathGlob = "*.wav", maxFilesPerTrigger = 16)
-    val ord = regexp_extract($"fname", "wav_(\\d+)_", 1).cast("long") * 3 +
-      regexp_extract($"fname", "_(\\d)\\.wav$", 1).cast("long")
-    val verdicts = Multimodal.audioFingerprints(arrivals)
-      .select(regexp_extract($"path", "([^/]+)$", 1).as("fname"), $"afp")
-      .withColumn("ing_ts", (ord + lit(86400L)).cast("timestamp"))
-      .withWatermark("ing_ts", "60 seconds") // > the full ordinal span: source file-order can never watermark-drop a verdict
-      .withColumn("band", explode(sequence(lit(0), lit(7))))
-      .withColumn("bv", expr("shiftright(afp, band * 8) & 255"))
-      .join(index, Seq("band", "bv"))
-      .filter($"idx_id" =!= $"fname" &&
-        expr("bit_count(afp ^ idx_fp)") <= 6)
-      .groupBy($"fname", $"ing_ts")
-      .agg(size(collect_set($"idx_id")).cast("long").as("n_dups"),
-        min($"idx_id").as("nearest_dup"))
-      .select($"fname", $"n_dups", $"nearest_dup")
-    graft.streaming.StreamOps
-      .runToMemory(verdicts, "q185_sink", "update", finalWatermarkBatch = false)
-      .join(names, Seq("fname"), "right")
-      .select($"fname", coalesce($"n_dups", lit(0L)).as("n_dups"),
-        $"nearest_dup")
-      .orderBy($"fname".asc_nulls_first)
-  }
-
-  /** q167's fingerprint recompute + the batch verdict (q182's oracle
-    * argument on the audio modality).
-    */
-  val q185Sql: String = audioFpOracleCtes + ",\n" + bandVerdictSql(12, "afp")
 
   /** Q186 — CURATED INDEX APPEND (incremental dedup gating the serving
     * index): the composition q184 exists FOR — per ingest batch, place
@@ -3194,53 +2572,6 @@ object LlmOps {
         |    ON x.cell = y.cell AND x.vec_id % 10 = 0 AND y.vec_id % 10 <> 0
         |  WHERE ROUND(list_dot_product(x.v, y.v) / (x.nrm * y.nrm), 6) >= 0.4)""".stripMargin)
 
-  /** Q187 — STREAMING VIDEO NEAR-DUP GATE: the gate row of the
-    * multimodal matrix is now full (text q126 / image q182 / audio q185 /
-    * VIDEO here) — arriving GVID containers decode, stride-sample and
-    * temporal-fingerprint map-side inside the stream
-    * ([[Multimodal.videoFingerprints]] over the `binaryFile` source),
-    * band-join the corpus index, watermarked per-clip verdicts. Frames
-    * never leave the map side.
-    */
-  def q187(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val fix = Multimodal.ensureVideoFixtures()
-    val names = Multimodal.readBinary(spark, s"$fix/*.gvid")
-      .select(regexp_extract($"path", "([^/]+)$", 1).as("fname"))
-    val index = capBands(Multimodal.videoFingerprints(
-        Multimodal.readBinary(spark, s"$fix/*.gvid"), stride = 2)
-      .select(regexp_extract($"path", "([^/]+)$", 1).as("idx_id"),
-        $"afp".as("idx_fp"),
-        explode(sequence(lit(0), lit(7))).as("band"))
-      .withColumn("bv", expr("shiftright(idx_fp, band * 8) & 255")))
-    val arrivals = graft.streaming.StreamOps.binaryStream(spark, fix,
-      pathGlob = "*.gvid", maxFilesPerTrigger = 16)
-    val ord = regexp_extract($"fname", "vid_(\\d+)_", 1).cast("long") * 3 +
-      regexp_extract($"fname", "_(\\d)\\.gvid$", 1).cast("long")
-    val verdicts = Multimodal.videoFingerprints(arrivals, stride = 2)
-      .select(regexp_extract($"path", "([^/]+)$", 1).as("fname"), $"afp")
-      .withColumn("ing_ts", (ord + lit(86400L)).cast("timestamp"))
-      .withWatermark("ing_ts", "60 seconds") // > the full ordinal span: source file-order can never watermark-drop a verdict
-      .withColumn("band", explode(sequence(lit(0), lit(7))))
-      .withColumn("bv", expr("shiftright(afp, band * 8) & 255"))
-      .join(index, Seq("band", "bv"))
-      .filter($"idx_id" =!= $"fname" &&
-        expr("bit_count(afp ^ idx_fp)") <= 6)
-      .groupBy($"fname", $"ing_ts")
-      .agg(size(collect_set($"idx_id")).cast("long").as("n_dups"),
-        min($"idx_id").as("nearest_dup"))
-      .select($"fname", $"n_dups", $"nearest_dup")
-    graft.streaming.StreamOps
-      .runToMemory(verdicts, "q187_sink", "update", finalWatermarkBatch = false)
-      .join(names, Seq("fname"), "right")
-      .select($"fname", coalesce($"n_dups", lit(0L)).as("n_dups"),
-        $"nearest_dup")
-      .orderBy($"fname".asc_nulls_first)
-  }
-
-  /** q173's fingerprint recompute + the batch per-clip verdict. */
-  val q187Sql: String = videoFpOracleCtes + ",\n" + bandVerdictSql(12, "afp")
-
   /** The PQ candidate chain ([[pqEpairsCtes]], probes vec_id < 10) cut
     * to a dense top-10, fused with q159's lexical lists by the identical
     * RRF arithmetic.
@@ -3270,48 +2601,19 @@ object LlmOps {
     */
   val q190Sql: String = q186Sql
 
-  /** The dedup APPLY tail on the documents table — q166's composition
-    * (pairs → true clusters → keeper = cluster-min → materialise keeper
-    * PAYLOADS → read the kept flags BACK from the artifact; layout must
-    * never change decisions, the q127 gate) shared by the last two
-    * fingerprint families to close (winnowed q191, SimHash q192).
-    */
-  private def applyDocDedup(spark: SparkSession, docs: DataFrame,
-      pairs: DataFrame, scratchName: String): DataFrame = {
-    import spark.implicits._
-    val cs = graft.core.CacheScope.adopt(
-      graft.ops.Components.clustersWithSize(pairs,
-        docs.select($"doc_id".as("id"))))
-    val out = graft.core.Scratch.deleteOnExit(
-      java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        "graft-dedup",
-        s"${scratchName}_${spark.sparkContext.applicationId}").toString)
-    docs.join(cs.filter($"id" === $"cluster").select($"id".as("doc_id")),
-        Seq("doc_id"))
-      .select($"doc_id", $"text")
-      .write.mode("overwrite").parquet(out)
-    val kept = spark.read.parquet(out)
-      .select($"doc_id", lit(true).as("kept"))
-    cs.select($"id".as("doc_id"), $"cluster", $"cluster_size")
-      .join(kept, Seq("doc_id"), "left")
-      .select($"doc_id", $"cluster", $"cluster_size",
-        coalesce($"kept", lit(false)).as("kept"))
-      .orderBy($"doc_id".asc_nulls_first)
-  }
-
   /** Q191 — WINNOWED-SUBSTRING DEDUP END-TO-END (pairs → clusters →
     * apply): q172 stopped at the pair report; this closes the last-but-
     * one gap in the dedup matrix's APPLY column — the substring-
     * duplication evidence (verbatim quoting, partial mirrors, template
     * stamping) driven through the SAME modality-agnostic contraction →
-    * keeper → materialise chain as every other family (q87/q127 n-gram,
-    * q166 image, q180 audio, q181 video). Scale shape inherited: the
-    * postings join is df-capped (maxDf² per fingerprint), contraction
-    * is O(log d) rounds, the apply writes keeper payloads once. The
-    * oracle chains q172's pair CTEs into a RECURSIVE closure (valid at
-    * any diameter — substring-duplication graphs chain through partial
-    * overlaps, so no fixed unrolling is safe) and the cluster-min keep
-    * rule.
+    * keeper → materialise chain ([[Components.applyDedup]]) as every
+    * other family (q87/q127 n-gram, q166 image, q180 audio, q181 video).
+    * Scale shape inherited: the postings join is df-capped (maxDf² per
+    * fingerprint), contraction is O(log d) rounds, the apply writes
+    * keeper payloads once. The oracle chains q172's pair CTEs into a
+    * RECURSIVE closure (valid at any diameter — substring-duplication
+    * graphs chain through partial overlaps, so no fixed unrolling is
+    * safe) and the cluster-min keep rule.
     */
   def q191(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -3319,7 +2621,8 @@ object LlmOps {
     val pairs = TextOps.winnowedPairs(docs, "doc_id", "text",
         k = 20, w = 8, minShared = 3, maxDf = 10)
       .select($"d1".as("a"), $"d2".as("b"))
-    applyDocDedup(spark, docs, pairs, "windocs")
+    Components.applyDedup(pairs, docs.select($"doc_id".as("id")),
+      docs.select($"doc_id", $"text"), "doc_id", "windocs")
   }
 
   val q191Sql: String = (winnowedPairCtes + ",\n" +
@@ -3353,7 +2656,8 @@ object LlmOps {
     val pairs = TextOps.simhashNearDupPairs(docs, "doc_id", "text",
         maxHamming = 3, bits = 32)
       .select($"d1".as("a"), $"d2".as("b"))
-    applyDocDedup(spark, docs, pairs, "shdocs")
+    Components.applyDedup(pairs, docs.select($"doc_id".as("id")),
+      docs.select($"doc_id", $"text"), "doc_id", "shdocs")
   }
 
   /** q192's oracle unrolls 3 MATERIALIZED min-label rounds (q94's form)
@@ -4065,18 +3369,9 @@ object LlmOps {
     "q159_hybrid_retrieval" -> (q159 _),
     "q160_dedup_recall_report" -> (q160 _),
     "q161_hybrid_served" -> (q161 _),
-    "q163_image_neardup" -> (q163 _),
-    "q166_image_dedup_apply" -> (q166 _),
-    "q167_audio_neardup" -> (q167 _),
     "q171_diversified_retrieval" -> (q171 _),
     "q172_winnowed_substring_dedup" -> (q172 _),
-    "q173_video_neardup" -> (q173 _),
-    "q180_audio_dedup_apply" -> (q180 _),
-    "q181_video_dedup_apply" -> (q181 _),
-    "q182_stream_image_gate" -> (q182 _),
-    "q185_stream_audio_gate" -> (q185 _),
     "q186_curated_index_append" -> (q186 _),
-    "q187_stream_video_gate" -> (q187 _),
     "q191_winnowed_dedup_apply" -> (q191 _),
     "q192_simhash_dedup_apply" -> (q192 _),
     "q195_winnowed_cross_corpus" -> (q195 _),
@@ -4123,27 +3418,18 @@ object LlmOps {
     "q160_dedup_recall_report" -> q160Sql,
     "q161_hybrid_served" -> q161Sql,
     "q162_int8_index" -> q162Sql,
-    "q163_image_neardup" -> q163Sql,
     "q164_hybrid_int8" -> q164Sql,
     "q165_int8_lifecycle" -> q165Sql,
-    "q166_image_dedup_apply" -> q166Sql,
-    "q167_audio_neardup" -> q167Sql,
     "q170_ivfpq_adc" -> q170Sql,
     "q171_diversified_retrieval" -> q171Sql,
     "q172_winnowed_substring_dedup" -> q172Sql,
-    "q173_video_neardup" -> q173Sql,
     "q174_pq_lifecycle" -> q174Sql,
     "q176_int8_takedown" -> q176Sql,
     "q177_pq_takedown" -> q177Sql,
     "q178_sq8_refit" -> q178Sql,
     "q179_pq_refit" -> q179Sql,
-    "q180_audio_dedup_apply" -> q180Sql,
-    "q181_video_dedup_apply" -> q181Sql,
-    "q182_stream_image_gate" -> q182Sql,
     "q183_diversified_served" -> q183Sql,
-    "q185_stream_audio_gate" -> q185Sql,
     "q186_curated_index_append" -> q186Sql,
-    "q187_stream_video_gate" -> q187Sql,
     "q188_hybrid_pq" -> q188Sql,
     "q189_index_restore" -> q189Sql,
     "q190_curated_stream_ingest" -> q190Sql,

@@ -282,7 +282,7 @@ object PipelineOps {
     * numbers AQE-style optimizers feed on). This is the EXACT ORACLE
     * TWIN: the production default for profiling is [[q122]], the same
     * plan on constant-state sketches (decision + measured cost curve in
-    * BASELINE.md / `tools/SketchCurve` — the curve also measured a
+    * BASELINE.md / `tools/SketchCurve`, removed after 7154dcb — the curve also measured a
     * grouped distinct-value alternative to this multi-`countDistinct` +
     * `percentile` shape and found it SLOWER at sf0.1, so the built-in
     * plan stays). Exact NDV/median is inherently NDV-bounded state on
@@ -348,7 +348,8 @@ object PipelineOps {
     val l = t(spark, dir, "lineitem")
     val aggs = profileCols.flatMap { c =>
       Seq(count(col(c)).as(s"nn_$c"),
-        // rsd 0.02, from the measured curve (tools/SketchCurve, sf0.1):
+        // rsd 0.02, from the measured curve (`tools/SketchCurve`
+        // at 7154dcb, sf0.1):
         // rsd 0.01 costs 2.39 s vs 1.00 s at 0.02 — the HLL register
         // array quadruples per halving of rsd and its per-row update
         // dominated the whole query — while observed NDV deviation at

@@ -9,14 +9,14 @@ object Registry {
   def all: Map[String, (SparkSession, String) => DataFrame] =
     Scans.all ++ Projections.all ++ Joins.all ++ Aggregates.all ++
       Windows.all ++ SortsLimits.all ++ SetOps.all ++ Scalars.all ++
-      LlmOps.all ++ IndexVerbs.all ++ StreamingQueries.all ++ Extensibility.all ++
+      LlmOps.all ++ IndexVerbs.all ++ ModalityVerbs.all ++ StreamingQueries.all ++ Extensibility.all ++
       ModelQueries.all ++ Reshape.all ++ CurationOps.all ++ PipelineOps.all ++
       AnalyticsOps.all ++ BehaviorOps.all ++ ExportOps.all ++ LifecycleOps.all
 
   def oracles: Map[String, String] =
     Scans.oracles ++ Projections.oracles ++ Joins.oracles ++
       Aggregates.oracles ++ Windows.oracles ++ SortsLimits.oracles ++
-      SetOps.oracles ++ Scalars.oracles ++ LlmOps.oracles ++
+      SetOps.oracles ++ Scalars.oracles ++ LlmOps.oracles ++ ModalityVerbs.oracles ++
       StreamingQueries.oracles ++ Extensibility.oracles ++
       ModelQueries.oracles ++ Reshape.oracles ++ CurationOps.oracles ++
       PipelineOps.oracles ++ AnalyticsOps.oracles ++ BehaviorOps.oracles ++

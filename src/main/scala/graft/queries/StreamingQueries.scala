@@ -723,7 +723,7 @@ object StreamingQueries {
 
   /** The q209 static side: the EXISTING corpus' banded 32-bit SimHash
     * fingerprint index (q200's postings side) under the declared
-    * hot-band df cap ([[LlmOps.capBands]] with `bands = 4` — SimHash
+    * hot-band df cap ([[ModalityVerbs.capBands]] with `bands = 4` — SimHash
     * bands are 8-bit like the media gates', but a 32-bit fingerprint
     * carries 4 of them). The cap is what q126's uncapped whole-corpus
     * gate lacks: a degenerate (band, bv) bucket (short/templated docs
@@ -732,7 +732,7 @@ object StreamingQueries {
     * arrival's join fan-out at 4·effCap rows at ANY corpus size.
     */
   private[graft] def simhashGateIndex(existing: DataFrame): DataFrame =
-    LlmOps.capBands(neardupIndex(existing), maxDf = 12, bands = 4)
+    ModalityVerbs.capBands(neardupIndex(existing), maxDf = 12, bands = 4)
 
   /** The q209 per-micro-batch GATE verb (factored so
     * StreamingSemanticsSpec can drive redelivery schedules without the

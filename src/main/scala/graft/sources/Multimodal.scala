@@ -724,14 +724,6 @@ object Multimodal {
       .select(col("d1"), col("d2"), col("ham_a"), col("ham_d"))
   }
 
-  /** Image near-duplicate PAIRS from [[perceptualHashes]] rows:
-    * [[bandedHammingPairs]] banded on the 64-bit aHash with the dHash
-    * riding along (declared hot-band df cap inherited).
-    */
-  def imageNearDupPairs(hashes: DataFrame, idCol: String,
-                        maxHamming: Int, maxDf: Int = 12): DataFrame =
-    bandedHammingPairs(hashes, idCol, "ahash", "dhash", maxHamming, maxDf)
-
   private def kindOf(path: String): String = {
     val p = path.toLowerCase
     if (p.endsWith(".png") || p.endsWith(".jpg") || p.endsWith(".jpeg")) "image"

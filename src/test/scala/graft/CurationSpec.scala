@@ -297,55 +297,15 @@ class CurationSpec extends SparkSpec {
     assert(MinHashDedup.bandingDecision(ms, minRecall = 1.0).rowsPerBand == 1)
   }
 
-  test("q166 image dedup: banded clusters equal all-pairs clusters on the " +
-      "fixture, and the keep rule is the cluster minimum") {
-    import spark.implicits._
-    import graft.sources.Multimodal
-    val fix = Multimodal.ensurePhashFixtures()
-    val hashes = Multimodal.perceptualHashes(
-        Multimodal.readBinary(spark, s"$fix/*.png"))
-      .select(regexp_extract(col("path"), "([^/]+)$", 1).as("fname"),
-        col("ahash"), col("dhash"))
-      .persist()
-    try {
-      val nodes = hashes.select($"fname".as("id"))
-      def clustersOf(pairs: org.apache.spark.sql.DataFrame): Map[String, (String, Long)] = {
-        val cs = Components.clustersWithSize(
-          pairs.select($"d1".as("a"), $"d2".as("b")), nodes)
-        try cs.collect()
-          .map(r => r.getString(0) -> (r.getString(1), r.getLong(2))).toMap
-        finally Components.release(cs)
-      }
-      // production path: banded candidates; reference: all-pairs
-      // (scoped: the banded frame's adopted cache must not outlive the
-      // test — later suites assert an empty CacheManager)
-      val banded = graft.core.CacheScope.scoped { clustersOf(
-        Multimodal.imageNearDupPairs(hashes, "fname", maxHamming = 6)) }
-      val h2 = hashes.select($"fname".as("f2"), $"ahash".as("a2"))
-      val allPairs = hashes.select($"fname".as("d1"), $"ahash".as("a1"))
-        .crossJoin(h2).filter($"d1" < $"f2")
-        .withColumn("ham", expr("bit_count(a1 ^ a2)"))
-        .filter($"ham" <= 6)
-        .select($"d1", $"f2".as("d2"))
-      val exact = clustersOf(allPairs)
-      assert(banded == exact,
-        "banded image clusters diverged from the all-pairs reference")
-      // the keep rule: each cluster's lexicographic minimum keeps; on
-      // this fixture every base keeps and every variant drops
-      val keepers = banded.collect { case (id, (cl, _)) if id == cl => id }.toSet
-      assert(keepers == (0 until 12).map(i => f"img_$i%02d_0.png").toSet,
-        s"keepers must be the 12 base images, got $keepers")
-      assert(banded.values.forall(_._2 == 3L),
-        "every fixture cluster is a base+2-variant triangle")
-    } finally hashes.unpersist(): Unit
-  }
-
-  test("q180/q181 audio+video dedup: banded clusters equal all-pairs " +
-      "clusters on each fixture, and the keep rule is the cluster minimum") {
-    import spark.implicits._
-    import graft.sources.Multimodal
-    def drive(fps: org.apache.spark.sql.DataFrame, baseName: Int => String): Unit = {
-      val hashes = fps.persist()
+  for (m <- graft.ops.Modality.values)
+    test(s"${m.toString.toLowerCase} dedup: banded clusters equal all-pairs clusters, keeper = cluster min") {
+      import spark.implicits._
+      import graft.sources.Multimodal
+      val hashes = m.fingerprints(
+          Multimodal.readBinary(spark, s"${m.fixtures()}/${m.glob}"))
+        .select(regexp_extract(col("path"), "([^/]+)$", 1).as("fname"),
+          col(m.bandCol), col(m.rideCol))
+        .persist()
       try {
         val nodes = hashes.select($"fname".as("id"))
         def clustersOf(pairs: org.apache.spark.sql.DataFrame): Map[String, (String, Long)] = {
@@ -355,37 +315,29 @@ class CurationSpec extends SparkSpec {
             .map(r => r.getString(0) -> (r.getString(1), r.getLong(2))).toMap
           finally Components.release(cs)
         }
+        // production path: banded candidates; reference: all-pairs
+        // (scoped: the banded frame's adopted cache must not outlive the
+        // test — later suites assert an empty CacheManager)
         val banded = graft.core.CacheScope.scoped { clustersOf(
-          Multimodal.bandedHammingPairs(hashes, "fname", "afp", "dfp",
+          Multimodal.bandedHammingPairs(hashes, "fname", m.bandCol, m.rideCol,
             maxHamming = 6)) }
-        val h2 = hashes.select($"fname".as("f2"), $"afp".as("a2"))
-        val allPairs = hashes.select($"fname".as("d1"), $"afp".as("a1"))
+        val h2 = hashes.select($"fname".as("f2"), col(m.bandCol).as("a2"))
+        val allPairs = hashes.select($"fname".as("d1"), col(m.bandCol).as("a1"))
           .crossJoin(h2).filter($"d1" < $"f2")
           .withColumn("ham", expr("bit_count(a1 ^ a2)"))
           .filter($"ham" <= 6)
           .select($"d1", $"f2".as("d2"))
         assert(banded == clustersOf(allPairs),
-          "banded clusters diverged from the all-pairs reference")
+          s"banded $m clusters diverged from the all-pairs reference")
+        // the keep rule: each cluster's lexicographic minimum keeps; on
+        // this fixture every base keeps and every variant drops
         val keepers = banded.collect { case (id, (cl, _)) if id == cl => id }.toSet
-        assert(keepers == (0 until 12).map(baseName).toSet,
+        assert(keepers == (0 until 12).map(i => f"${m.prefix}_$i%02d_0.${m.ext}").toSet,
           s"keepers must be the 12 base files, got $keepers")
         assert(banded.values.forall(_._2 == 3L),
           "every fixture cluster is a base+2-variant triangle")
       } finally hashes.unpersist(): Unit
     }
-    val afix = Multimodal.ensureAudioFpFixtures()
-    drive(Multimodal.audioFingerprints(
-        Multimodal.readBinary(spark, s"$afix/*.wav"))
-      .select(regexp_extract(col("path"), "([^/]+)$", 1).as("fname"),
-        col("afp"), col("dfp")),
-      i => f"wav_$i%02d_0.wav")
-    val vfix = Multimodal.ensureVideoFixtures()
-    drive(Multimodal.videoFingerprints(
-        Multimodal.readBinary(spark, s"$vfix/*.gvid"), stride = 2)
-      .select(regexp_extract(col("path"), "([^/]+)$", 1).as("fname"),
-        col("afp"), col("dfp")),
-      i => f"vid_$i%02d_0.gvid")
-  }
 
   test("semanticCrossPairs == symmetric within-cell pairs restricted to " +
       "cross-side (q184's generator, q137's proof shape)") {

@@ -178,6 +178,12 @@ private class QuickCacheOwner extends EtlModel {
   }
 }
 
+// build throws a fresh throwable from `make` (fatal ones included)
+private class ThrowingModel(make: () => Throwable) extends EtlModel {
+  override def name = "ThrowingEtl"
+  override def build(ctx: EngineContext): DataFrame = throw make()
+}
+
 // a deliberately slow distributed job (sleep per row) for cancel tests
 private class CrawlModel extends EtlModel {
   override def name = "CrawlEtl"
@@ -318,6 +324,35 @@ class ExecLayerSpec extends SparkSpec {
     assert(rec.finished.isDefined && !rec.finished.get.isBefore(rec.started))
   }
 
+
+  test("a fatal throwable from build ends the task as TaskFailed and " +
+      "completes its future, through submit and runSync") {
+    for (make <- Seq[() => Throwable](() => new StackOverflowError("deep"),
+        () => new InterruptedException("stop"))) {
+      val cls = make().getClass.getName
+      val (reg, status, runner) = freshRunner()
+      reg.register(new ThrowingModel(make))
+      def assertFailed(spec: TaskSpec, outcome: TaskOutcome): Unit = {
+        outcome match {
+          case TaskFailed(c, _, None) => assert(c == cls)
+          case other => fail(s"$cls: expected TaskFailed, got $other")
+        }
+        assert(status.status(spec.taskId) == "failed", s"$cls left a ghost record")
+      }
+      try {
+        val viaSubmit = TaskSpec(modelClass = "ThrowingEtl")
+        assertFailed(viaSubmit, Await.result(runner.submit(viaSubmit), 20.seconds))
+        val viaSync = TaskSpec(modelClass = "ThrowingEtl")
+        val outcome = runner.runSync(viaSync)
+        // an InterruptedException re-sets the caller's interrupt flag;
+        // Thread.interrupted() also clears it for the rest of the suite
+        assert(Thread.interrupted() == make().isInstanceOf[InterruptedException])
+        assertFailed(viaSync, outcome)
+        assert(status.runningTasks.isEmpty, s"$cls: running tasks remain")
+        assert(runner.availableCapacity == 2, s"$cls leaked capacity")
+      } finally runner.close()
+    }
+  }
 
   test("subtask failure propagates to parent with failure origin (A11/A12)") {
     val (reg, status, runner) = freshRunner()

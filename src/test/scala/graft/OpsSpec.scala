@@ -938,7 +938,7 @@ class OpsSpec extends SparkSpec {
     val hashDf = hashed.toSeq.map { case (f, (a, d)) => (f, a, d) }
       .toDF("fname", "ahash", "dhash")
     val banded = graft.core.CacheScope.scoped {
-      Multimodal.imageNearDupPairs(hashDf, "fname", maxHamming = 6)
+      Multimodal.bandedHammingPairs(hashDf, "fname", "ahash", "dhash", maxHamming = 6)
         .select($"d1", $"d2").collect()
         .map(r => (r.getString(0), r.getString(1))).toSet
     }

@@ -246,7 +246,8 @@ class PipelineOpsSpec extends SparkSpec {
       assert(a.getAs[Long]("n_null") == e.getAs[Long]("n_null"), s"$c: null count differs")
       assert(a.getAs[Double]("min6") == e.getAs[Double]("min6"), s"$c: min differs")
       assert(a.getAs[Double]("max6") == e.getAs[Double]("max6"), s"$c: max differs")
-      // HLL++ at rsd 0.02 (the measured-curve choice, tools/SketchCurve):
+      // HLL++ at rsd 0.02 (the measured-curve choice,
+      // `tools/SketchCurve`, removed after 7154dcb):
       // bound = 3·rsd = 6%, a 3σ design margin; estimates are
       // deterministic per dataset (observed ≤2% at sf0.1)
       val ndvE = e.getAs[Long]("ndv").toDouble

@@ -325,14 +325,25 @@ class PlanSpec extends SparkSpec {
     } finally index.unpersist(): Unit
   }
 
-  test("q163 image near-dup: the aHash band join is an equi-join with the " +
-      "exact bit_count post-filter, never cartesian") {
-    val p = plan(LlmOps.q163(spark, sfDir))
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      s"image band join exploded to all pairs:\n$p")
-    assert(p.contains("HashJoin") || p.contains("SortMergeJoin"),
-      s"no equi-join on (band, byte) in:\n$p")
-    assert(p.contains("bit_count"), s"exact Hamming post-filter missing:\n$p")
+  for (m <- graft.ops.Modality.values) {
+    val label = m.toString.toLowerCase
+    /** The registered key of this modality's `verb`, e.g. "q163_image_neardup". */
+    def keyOf(verb: String): String =
+      ModalityVerbs.all.keys.filter(_.endsWith(s"_${label}_$verb")).toSeq match {
+        case Seq(k) => k
+        case ks => fail(s"expected one $label $verb key, got $ks")
+      }
+    test(s"$label near-dup + dedup apply: equi-join band join with bit_count, never cartesian") {
+      val pairs = plan(ModalityVerbs.all(keyOf("neardup"))(spark, sfDir))
+      assert(!pairs.contains("CartesianProduct") && !pairs.contains("BroadcastNestedLoopJoin"),
+        s"$label band join exploded to all pairs:\n$pairs")
+      assert(pairs.contains("HashJoin") || pairs.contains("SortMergeJoin"),
+        s"no equi-join on (band, byte) in:\n$pairs")
+      assert(pairs.contains("bit_count"), s"exact Hamming post-filter missing:\n$pairs")
+      val applied = plan(ModalityVerbs.all(keyOf("dedup_apply"))(spark, sfDir))
+      assert(!applied.contains("CartesianProduct") && !applied.contains("BroadcastNestedLoopJoin"),
+        s"$label cluster/apply plan exploded:\n$applied")
+    }
   }
 
   test("q165 streamed int8 serve: the wave off the versioned pointer is " +
@@ -360,19 +371,6 @@ class PlanSpec extends SparkSpec {
       s"SQ8 wave over the versioned index exploded to all pairs:\n$wave")
     assert(wave.contains("HashJoin") || wave.contains("SortMergeJoin"),
       s"no equi-join in the versioned SQ8 wave:\n$wave")
-  }
-
-  test("q166/q167 media dedup: band joins and the cluster contraction " +
-      "stay equi-joins, never cartesian") {
-    val p166 = plan(LlmOps.q166(spark, sfDir))
-    assert(!p166.contains("CartesianProduct") && !p166.contains("BroadcastNestedLoopJoin"),
-      s"image cluster/apply plan exploded:\n$p166")
-    val p167 = plan(LlmOps.q167(spark, sfDir))
-    assert(!p167.contains("CartesianProduct") && !p167.contains("BroadcastNestedLoopJoin"),
-      s"audio band join exploded to all pairs:\n$p167")
-    assert(p167.contains("HashJoin") || p167.contains("SortMergeJoin"),
-      s"no equi-join on (band, byte) in:\n$p167")
-    assert(p167.contains("bit_count"), s"exact Hamming post-filter missing:\n$p167")
   }
 
   test("q169 SemDeDup: the within-cell pair generation is an equi-join " +
@@ -406,7 +404,7 @@ class PlanSpec extends SparkSpec {
     // the df-cap guard (q163's banded Hamming family): the ≤2048-row
     // live-bucket side must broadcast — a shuffled guard would double
     // the band join's exchange count
-    val pCap = plan(LlmOps.q163(spark, sfDir))
+    val pCap = plan(ModalityVerbs.all("q163_image_neardup")(spark, sfDir))
     assert(!pCap.contains("CartesianProduct") && !pCap.contains("BroadcastNestedLoopJoin"),
       s"capped banded Hamming join exploded:\n$pCap")
     assert(pCap.contains("BroadcastHashJoin") || pCap.contains("BroadcastExchange"),
@@ -489,16 +487,6 @@ class PlanSpec extends SparkSpec {
       s"winnowed postings join exploded to all pairs:\n$p")
     assert(p.contains("HashJoin") || p.contains("SortMergeJoin"),
       s"no equi-join on fingerprint in:\n$p")
-  }
-
-  test("q173 video near-dup: the temporal-fingerprint band join is an " +
-      "equi-join with the exact bit_count post-filter, never cartesian") {
-    val p = plan(LlmOps.q173(spark, sfDir))
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      s"video band join exploded to all pairs:\n$p")
-    assert(p.contains("HashJoin") || p.contains("SortMergeJoin"),
-      s"no equi-join on (band, byte) in:\n$p")
-    assert(p.contains("bit_count"), s"exact Hamming post-filter missing:\n$p")
   }
 
   test("q174 streamed PQ serve: the ADC wave off the versioned pointer " +

@@ -14,6 +14,7 @@ class RegistrySpec extends SparkSpec {
     "Windows" -> Windows.all, "SortsLimits" -> SortsLimits.all,
     "SetOps" -> SetOps.all, "Scalars" -> Scalars.all,
     "LlmOps" -> LlmOps.all, "IndexVerbs" -> IndexVerbs.all,
+    "ModalityVerbs" -> ModalityVerbs.all,
     "Streaming" -> StreamingQueries.all,
     "Extensibility" -> Extensibility.all, "Models" -> ModelQueries.all,
     "Reshape" -> Reshape.all, "Curation" -> CurationOps.all,

@@ -448,8 +448,9 @@ class VersionedTargetSpec extends SparkSpec {
     // the commit can only have completed after the child released: its
     // wall time covers the remaining hold (minus the child's startup
     // and the commit's own data write, generously margined)
-    // an uncontended commit runs ~0.5-0.9 s on this box (MergeScale's
-    // steady-state line); 2 s can only be explained by lock wait
+    // an uncontended commit runs ~0.5-0.9 s on this box (the
+    // steady-state line of `tools/MergeScale`, removed after 7154dcb);
+    // 2 s can only be explained by lock wait
     assert(commitMs > 2000,
       f"commit finished in $commitMs%.0f ms — it never blocked on the " +
         "cross-process lock")
