@@ -325,24 +325,48 @@ class PlanSpec extends SparkSpec {
     } finally index.unpersist(): Unit
   }
 
-  for (m <- graft.ops.Modality.values) {
+  /** A near-dup verb's plan: the band join is an equi-join on (band,
+    * byte) with the exact `bit_count` post-filter, never cartesian.
+    */
+  private def assertBandJoin(label: String, key: String): Unit = {
+    val p = plan(ModalityVerbs.all(key)(spark, sfDir))
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+      s"$label band join exploded to all pairs:\n$p")
+    assert(p.contains("HashJoin") || p.contains("SortMergeJoin"),
+      s"no equi-join on (band, byte) in:\n$p")
+    assert(p.contains("bit_count"), s"exact Hamming post-filter missing:\n$p")
+  }
+
+  /** A dedup-apply verb's plan: band join and cluster contraction never go cartesian. */
+  private def assertApplyNotCartesian(label: String, key: String): Unit = {
+    val p = plan(ModalityVerbs.all(key)(spark, sfDir))
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+      s"$label cluster/apply plan exploded:\n$p")
+  }
+
+  test("q163 image near-dup: the aHash band join is an equi-join with the " +
+      "exact bit_count post-filter, never cartesian") {
+    assertBandJoin("image", "q163_image_neardup")
+  }
+
+  test("q166/q167 media dedup: band joins and the cluster contraction " +
+      "stay equi-joins, never cartesian") {
+    assertApplyNotCartesian("image", "q166_image_dedup_apply")
+    assertBandJoin("audio", "q167_audio_neardup")
+  }
+
+  // image's two verbs are pinned by the q163 and q166/q167 tests above
+  for (m <- graft.ops.Modality.values if m != graft.ops.Modality.Image) {
     val label = m.toString.toLowerCase
-    /** The registered key of this modality's `verb`, e.g. "q163_image_neardup". */
+    /** The registered key of this modality's `verb`, e.g. "q173_video_neardup". */
     def keyOf(verb: String): String =
       ModalityVerbs.all.keys.filter(_.endsWith(s"_${label}_$verb")).toSeq match {
         case Seq(k) => k
         case ks => fail(s"expected one $label $verb key, got $ks")
       }
     test(s"$label near-dup + dedup apply: equi-join band join with bit_count, never cartesian") {
-      val pairs = plan(ModalityVerbs.all(keyOf("neardup"))(spark, sfDir))
-      assert(!pairs.contains("CartesianProduct") && !pairs.contains("BroadcastNestedLoopJoin"),
-        s"$label band join exploded to all pairs:\n$pairs")
-      assert(pairs.contains("HashJoin") || pairs.contains("SortMergeJoin"),
-        s"no equi-join on (band, byte) in:\n$pairs")
-      assert(pairs.contains("bit_count"), s"exact Hamming post-filter missing:\n$pairs")
-      val applied = plan(ModalityVerbs.all(keyOf("dedup_apply"))(spark, sfDir))
-      assert(!applied.contains("CartesianProduct") && !applied.contains("BroadcastNestedLoopJoin"),
-        s"$label cluster/apply plan exploded:\n$applied")
+      assertBandJoin(label, keyOf("neardup"))
+      assertApplyNotCartesian(label, keyOf("dedup_apply"))
     }
   }
 
