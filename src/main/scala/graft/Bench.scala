@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Benchmark main — runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE compact JSON line {"metric":...,"queries":{...}}.
@@ -38,7 +39,7 @@ object Bench {
     graft.tools.EngineLog.echoToConsole = false
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
-    val cpus = benchCpus
+    val cpus = GraftSession.cpus
     val spark = session(cpus)
 
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
@@ -242,32 +243,14 @@ object Bench {
     spark.stop()
   }
 
-  /** Local cores the bench session uses: SPARK_GRAFT_CPUS, else the
-    * host's, capped at 32.
-    */
-  def benchCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-    math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-
   /** The benchmark session — shared with [[graft.tools.ProfileOne]] so a
-    * profile measures the configuration the bench times.
+    * profile measures the configuration the bench times. Benchmark outputs
+    * are report-sized by contract, so the final sort is single-partition
+    * instead of a range exchange + its sampling job; single-row-group
+    * fixtures otherwise scan single-threaded (a row group is the minimum
+    * split), so one memoized ingest rewrite — absorbed by the warmups —
+    * lets every scan parallelize (see `Tables.sourcePath`).
     */
-  def session(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // benchmark outputs are report-sized by contract → single-partition
-      // final sort instead of a range exchange + its sampling job
-      .config("spark.graft.smallResultSort", "true")
-      // single-row-group fixtures otherwise scan single-threaded (a row
-      // group is the minimum split); one memoized ingest rewrite — absorbed
-      // by the warmups — lets every scan parallelize. See Tables.sourcePath.
-      .config("spark.graft.compactScans", "true")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  def session(cpus: Int = GraftSession.cpus): SparkSession =
+    GraftSession.local(cpus, smallResultSort = true, compactScans = true)
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,22 +6,12 @@ object Verify {
   def main(args: Array[String]): Unit = {
     graft.tools.EngineLog.echoToConsole = false // keep driver stdout clean
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // oracle dumps are report-sized by contract → skip the range-sort
-      // sampling job on every query's final ORDER BY
-      .config("spark.graft.smallResultSort", "true")
-      // oracle gate exercises the same ingest-compacted scan path Bench
-      // measures, proving compaction is row-identical to the raw layout
-      .config("spark.graft.compactScans", "true")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // oracle dumps are report-sized by contract → skip the range-sort
+    // sampling job on every query's final ORDER BY; the oracle gate
+    // exercises the same ingest-compacted scan path Bench measures,
+    // proving compaction is row-identical to the raw layout
+    val spark = graft.core.GraftSession.local(smallResultSort = true,
+      compactScans = true)
     new java.io.File(outDir).mkdirs()
     // Optional substring filter for fast local iteration; the driver never
     // sets this so its runs always cover the full surface.

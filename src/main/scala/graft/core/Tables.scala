@@ -72,7 +72,8 @@ object Tables {
     * matter how many cores the cluster has. When
     * `spark.graft.compactScans=true`, the first touch of such a table
     * rewrites it once into `defaultParallelism` splittable files (memoized
-    * per (dir, table, mtime, size)); every later scan — and the partial
+    * per (dir, table, mtime, size, content, file count) —
+    * [[compactedCopy]]); every later scan — and the partial
     * aggregates/joins fused into it — runs cluster-wide.
     *
     * Deliberately size-gated: inputs over the threshold (default 1 GiB) or
@@ -99,41 +100,53 @@ object Tables {
     val maxBytes = spark.conf.getOption("spark.graft.compactScans.maxBytes")
       .map(_.toLong).getOrElse(1L << 30)
     if (!f.isFile || f.length > maxBytes) return raw
+    compactedCopy(spark, dir, name, spark.sparkContext.defaultParallelism)
+  }
+
+  /** The copy of `dir/name.parquet` rewritten into `n` files, under
+    * `java.io.tmpdir/graft-compact`. The copy is keyed on the raw file's
+    * (path, mtime, size, head/tail md5) AND on `n`: a JVM at 16 cores
+    * must not serve the 4-file copy a 4-core run left in the same tmpdir.
+    */
+  private[graft] def compactedCopy(spark: SparkSession, dir: String,
+                                  name: String, n: Int): String = {
+    val raw = s"$dir/$name.parquet"
+    val f = new java.io.File(raw)
     // content fingerprint, not just (mtime, size): a regenerated fixture
     // copied with preserved timestamps must not serve a stale compacted copy
-    val key = s"$raw@${f.lastModified}:${f.length}:${headTailMd5(f)}"
+    val key = s"$raw@${f.lastModified}:${f.length}:${headTailMd5(f)}:$n"
     compactCache.computeIfAbsent(key, _ => {
-      val n = spark.sparkContext.defaultParallelism
       val digest = java.security.MessageDigest.getInstance("MD5")
         .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      // the eviction scope is (table, raw path), not just table: two JVMs
-      // reading the same table name from DIFFERENT source dirs (sf0.01 vs
-      // sf0.001) must not evict each other's live compacted copy
+      // the eviction scope is (table, raw path, n), not just table: two
+      // JVMs reading the same table name from DIFFERENT source dirs
+      // (sf0.01 vs sf0.001), or at different parallelism, must not evict
+      // each other's live compacted copy
       val pathHash = java.security.MessageDigest.getInstance("MD5")
         .digest(raw.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+      val scope = s"$name-$pathHash-$n-"
       val out = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), "graft-compact", s"$name-$pathHash-$digest")
-      // evict stale digests for the same (table, path) before writing
-      // afresh, plus any LEGACY `$name-$digest` dirs (the pre-pathHash
-      // layout: no eviction rule ever matches them again, so they would
-      // accumulate in java.io.tmpdir forever); a new-layout dir for the
-      // same table under a DIFFERENT pathHash is another live source dir
-      // and stays. Legacy dirs are swept only past a 1 h mtime TTL: a
-      // concurrently running OLDER-build JVM still reading its legacy
-      // copy must not be raced mid-read (the same cross-JVM eviction
-      // hazard the pathHash scoping closed) — after the upgrade window
-      // the dir is cold and the sweep reclaims it.
+        sys.props("java.io.tmpdir"), "graft-compact", s"$scope$digest")
+      // evict stale digests for the same scope before writing afresh,
+      // plus any LEGACY dir of the table (an earlier layout: no eviction
+      // rule ever matches them again, so they would accumulate in
+      // java.io.tmpdir forever); a current-layout dir for the same table
+      // under a DIFFERENT pathHash or n is another live copy and stays.
+      // Legacy dirs are swept only past a 1 h mtime TTL: a concurrently
+      // running OLDER-build JVM still reading its legacy copy must not be
+      // raced mid-read — after the upgrade window the dir is cold and the
+      // sweep reclaims it.
       val parent = out.getParent.toFile
       val newLayout =
-        s"^${java.util.regex.Pattern.quote(name)}-[0-9a-f]{8}-[0-9a-f]{32}$$".r
+        s"^${java.util.regex.Pattern.quote(name)}-[0-9a-f]{8}-[0-9]+-[0-9a-f]{32}$$".r
       val legacyTtlMs = 60L * 60 * 1000
       val now = System.currentTimeMillis
       Option(parent.listFiles).getOrElse(Array.empty)
         .filter(_.getName != out.getFileName.toString)
         .filter { d =>
-          val n = d.getName
-          n.startsWith(s"$name-$pathHash-") ||
-            (n.startsWith(s"$name-") && newLayout.findFirstIn(n).isEmpty &&
+          val dn = d.getName
+          dn.startsWith(scope) ||
+            (dn.startsWith(s"$name-") && newLayout.findFirstIn(dn).isEmpty &&
               now - d.lastModified > legacyTtlMs)
         }
         .foreach(deleteRecursively)

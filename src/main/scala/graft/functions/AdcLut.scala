@@ -94,7 +94,7 @@ case class AdcLut(child: Expression, codebooks: PqCodebooks)
 
 object AdcLut {
   /** `books` in subspace order, each codebook's entries in CELL-ID-SORTED
-    * order (the caller sorts — [[graft.ops.Similarity.ivfTopKServedPQ]]'s
+    * order (the caller sorts — [[graft.ops.IndexKind.PqServed]]'s
     * positional LUT contract).
     */
   def lut(vec: Column, books: Seq[Seq[Seq[Double]]], sub: Int): Column =

@@ -178,6 +178,9 @@ object NearestCell {
     * order never changes an answer.
     */
   def matrixOf(cent: Seq[(Long, Seq[Double])]): CentroidMatrix = {
+    // an empty matrix has no nearest cell: refuse it when the expression
+    // is built, instead of placing every row in a sentinel cell
+    require(cent.nonEmpty, "a quantizer needs at least one centroid")
     val sorted = cent.sortBy(_._1)
     new CentroidMatrix(sorted.map(_._1).toArray, sorted.map(_._2.toArray).toArray)
   }

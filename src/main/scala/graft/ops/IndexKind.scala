@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, element_at, sqrt, transform, typedlit}
+import org.apache.spark.sql.types.{DoubleType, IntegerType}
 import graft.core.Overlap
 import graft.ops.VersionedTarget.{Rewrite, Segmented}
 
@@ -114,18 +115,100 @@ object IndexKind {
     def payload(warnOnDrops: Boolean): DataFrame
   }
 
-  /** An index frame paired with the quantizer it was placed with. */
+  /** An index frame paired with the quantizer it was placed with, and
+    * the payload's stage of the two-stage wave
+    * ([[Similarity.ivfTopKTwoStage]]): which columns a candidate reads
+    * off the index and how they score approximately.
+    */
   sealed trait Served {
     def index: DataFrame
     def coarse: Quantizer
+
+    /** The candidate projection of `idx`: `cand_id`, `cell` and the
+      * payload columns [[approx]] reads.
+      */
+    protected def candidates(idx: DataFrame): DataFrame
+    /** The approximate cosine of a (probe, candidate) pair. */
+    protected def approx: Column
+    /** Per-probe columns [[approx]] reads, computed once per probe. */
+    protected def probeCols: Seq[(String, Column)] = Nil
+
     /** Two-stage top-`k`: approximate ranking on the payload, exact
       * re-rank of the `prefetch` winners against `corpus`.
       */
     def topK(corpus: DataFrame, probes: DataFrame, k: Int, prefetch: Int,
-        nprobe: Int): DataFrame
-    /** [[topK]] over the `allowed` ids only, knobs scaled by selectivity. */
+        nprobe: Int): DataFrame =
+      wave(index, corpus, probes, k, prefetch, nprobe)
+
+    /** [[topK]] over the `allowed` ids only, knobs scaled by selectivity
+      * ([[Similarity.ivfTopKFiltered]]).
+      */
     def topKFiltered(corpus: DataFrame, probes: DataFrame, allowed: DataFrame,
-        k: Int, prefetch: Long, nprobe: Int): DataFrame
+        k: Int, prefetch: Long, nprobe: Int): DataFrame =
+      Similarity.ivfTopKFiltered(index, allowed, IdCol, coarse.size, k,
+        prefetch, nprobe)(wave(_, corpus, probes, k, _, _))
+
+    private def wave(idx: DataFrame, corpus: DataFrame, probes: DataFrame,
+        k: Int, prefetch: Int, nprobe: Int): DataFrame =
+      Similarity.ivfTopKTwoStage(probes, candidates(idx), corpus, coarse,
+        IdCol, VecCol, k, prefetch, nprobe, approx, probeCols)
+  }
+
+  /** SQ8 payload `(vec_id, qvec, scale, cell)`: candidates rank on their
+    * DEQUANTIZED vectors (q·scale — 1 byte/dim read off the index
+    * instead of 8).
+    */
+  final case class Sq8Served(index: DataFrame, coarse: Quantizer) extends Served {
+    protected def candidates(idx: DataFrame): DataFrame =
+      idx.select(col(IdCol).as("cand_id"),
+          transform(col("qvec"), q => q.cast(DoubleType) * col("scale")).as("__dq"),
+          col("cell"))
+        .withColumn("__dn", Similarity.norm(col("__dq")))
+    protected def approx: Column =
+      Similarity.dot(col("__pv"), col("__dq")) / (col("__pn") * col("__dn"))
+  }
+
+  /** PQ payload `(vec_id, codes, cell)` ([[Similarity.pqEncode]]'s shape),
+    * ranked by ASYMMETRIC DISTANCE COMPUTATION: each probe precomputes
+    * its ADC lookup tables ONCE (lut[s][c] = ⟨probe subvector s,
+    * codebook_s[c]⟩ — m·codes dots per probe, BEFORE the cell join), so
+    * ranking a candidate costs m array lookups + adds instead of a
+    * dim-wide dot; reconstructed norms are plain per-code constants.
+    *
+    * Code/LUT pairing contract: stored codes are 1-based POSITIONS in
+    * the cell-id-sorted codebook ([[Similarity.pqEncode]]'s rule), and
+    * the LUT and normSq arrays here are built in that same `sortBy(_._1)`
+    * order — so a SPARSE codebook (a Lloyd's round emptied a cell without
+    * renumbering) still pairs every code with its own entry.
+    */
+  final case class PqServed(index: DataFrame, coarse: Quantizer,
+      books: Seq[Quantizer]) extends Served {
+    private def sorted: Seq[Seq[Seq[Double]]] = books.map(_.sortBy(_._1).map(_._2))
+
+    // the ADC tables as one array<array<double>> column via the native
+    // [[graft.functions.AdcLut]]: the codebooks are ONE reference object,
+    // so the plan carries one node instead of m·codes literal dot trees
+    // and codegen caches across waves/bundle versions
+    override protected def probeCols: Seq[(String, Column)] =
+      Seq("__lut" -> graft.functions.AdcLut.lut(col("__pv"), sorted,
+        books.head.head._2.size))
+
+    protected def candidates(idx: DataFrame): DataFrame =
+      idx.select(col(IdCol).as("cand_id"), col("codes"), col("cell"))
+
+    protected def approx: Column = {
+      // reconstructed norm² per (subspace, code): driver-side constants,
+      // the same left-to-right fold as list_dot_product(centroid, centroid)
+      val normSq: Seq[Seq[Double]] = sorted.map(_.map { cv =>
+        var acc = 0.0; cv.foreach(x => acc += x * x); acc
+      })
+      def codeAt(s: Int): Column = element_at(col("codes"), s + 1).cast(IntegerType)
+      val adot = books.indices.map(s =>
+        element_at(element_at(col("__lut"), s + 1), codeAt(s))).reduce(_ + _)
+      val anormSq = books.indices.map(s =>
+        element_at(typedlit(normSq(s)), codeAt(s))).reduce(_ + _)
+      adot / (col("__pn") * sqrt(anormSq))
+    }
   }
 
   case object Sq8 extends IndexKind("SQ8", "int8", "assignments8", "centroids",
@@ -135,17 +218,6 @@ object IndexKind {
       def coarse: Quantizer = Similarity.localize(quantizer)
       def payload(warnOnDrops: Boolean): DataFrame =
         Similarity.quantizeInt8(assign, IdCol, VecCol, warnOnDrops)
-    }
-
-    private final case class Sq8Served(index: DataFrame, coarse: Quantizer) extends Served {
-      def topK(corpus: DataFrame, probes: DataFrame, k: Int, prefetch: Int,
-          nprobe: Int): DataFrame =
-        Similarity.ivfTopKServedInt8(index, corpus, coarse, IdCol, VecCol,
-          probes, k, prefetch, nprobe)
-      def topKFiltered(corpus: DataFrame, probes: DataFrame, allowed: DataFrame,
-          k: Int, prefetch: Long, nprobe: Int): DataFrame =
-        Similarity.ivfTopKServedInt8Filtered(index, corpus, coarse, IdCol,
-          VecCol, probes, allowed, k, prefetch, nprobe)
     }
 
     def fit(base: DataFrame, dim: Int): Fit = {
@@ -194,19 +266,6 @@ object IndexKind {
         Similarity.pqBundleDF(base.sparkSession, coarse, books)
       def payload(warnOnDrops: Boolean): DataFrame =
         Similarity.pqEncode(base, IdCol, VecCol, books, coarse, dim, warnOnDrops)
-    }
-
-    private final case class PqServed(index: DataFrame, coarse: Quantizer,
-        books: Seq[Quantizer]) extends Served {
-      private def dim: Int = books.map(_.head._2.size).sum
-      def topK(corpus: DataFrame, probes: DataFrame, k: Int, prefetch: Int,
-          nprobe: Int): DataFrame =
-        Similarity.ivfTopKServedPQ(index, corpus, books, coarse, IdCol, VecCol,
-          probes, k, prefetch, nprobe, dim)
-      def topKFiltered(corpus: DataFrame, probes: DataFrame, allowed: DataFrame,
-          k: Int, prefetch: Long, nprobe: Int): DataFrame =
-        Similarity.ivfTopKServedPQFiltered(index, corpus, books, coarse, IdCol,
-          VecCol, probes, allowed, k, prefetch, nprobe, dim)
     }
 
     def fit(base: DataFrame, dim: Int): PqFit = {

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
+import graft.functions.NearestCell
+import graft.ops.IndexKind.Quantizer
 
 /** Embedding similarity search — SURVEY.md §2B.11 Q61 and the ANN
   * training-data addition.
@@ -175,7 +177,7 @@ object Similarity {
     *     its action, or the persisted corpora accumulate for the JVM
     *     lifetime.
     *   - `withVec = true` includes the (double) vector in the assignment
-    *     rows — the SELF-CONTAINED index shape ([[ivfTopKServed]]): a
+    *     rows — the SELF-CONTAINED index shape ([[ivfTopK]]): a
     *     probe wave then reads candidates straight off the index's cell
     *     layout instead of paying a corpus⋈assignments shuffle join per
     *     wave. Costs index bytes (the standard IVF trade: the index
@@ -221,7 +223,7 @@ object Similarity {
         // projected BELOW the explode — in the same select Catalyst would
         // evaluate it once per exploded element, not once per vector
         val assigned = vecs.select(
-          nearestCellExpr(col("__vec"), cent).as("__cell"), col("__vec"))
+          NearestCell.nearest(col("__vec"), cent).as("__cell"), col("__vec"))
         val expl = assigned.select(col("__cell"),
           posexplode(col("__vec")).as(Seq("__pos", "__v")))
         cent = localizeSeq(expl.groupBy(col("__cell"), col("__pos"))
@@ -239,9 +241,10 @@ object Similarity {
       val assignCols =
         if (withVec)
           Seq(col("__id").as(idCol), col("__vec").as(vecCol),
-            nearestCellExpr(col("__vec"), cent).as("cell"))
+            NearestCell.nearest(col("__vec"), cent).as("cell"))
         else
-          Seq(col("__id").as(idCol), nearestCellExpr(col("__vec"), cent).as("cell"))
+          Seq(col("__id").as(idCol),
+            NearestCell.nearest(col("__vec"), cent).as("cell"))
       val lazyAssign = vecs.select(assignCols: _*)
       val assignments =
         if (!materialize) lazyAssign
@@ -281,10 +284,10 @@ object Similarity {
                         withVec: Boolean): DataFrame =
     if (withVec)
       vecs.select(col(idCol), toDouble(col(vecCol)).as(vecCol),
-        nearestCellExpr(toDouble(col(vecCol)), cent).as("cell"))
+        NearestCell.nearest(toDouble(col(vecCol)), cent).as("cell"))
     else
       vecs.select(col(idCol),
-        nearestCellExpr(toDouble(col(vecCol)), cent).as("cell"))
+        NearestCell.nearest(toDouble(col(vecCol)), cent).as("cell"))
 
   /** The maintenance decision for a persisted IVF index, driven by the
     * measured recall report (q147's shape: one `n_hits` ∈ 0..k row per
@@ -650,7 +653,7 @@ object Similarity {
 
   /** PUBLIC localize: pin a quantizer frame onto the driver ONCE and
     * thread the k-row Seq through every placement/wave that consults it
-    * ([[assignToCentroids]]/[[ivfTopKServed]] overloads) — one collect
+    * ([[assignToCentroids]]/[[ivfTopK]]) — one collect
     * job per index lifetime instead of one per action. This is the
     * serving-node shape at 100 TB: the quantizer is pinned in memory,
     * only the candidate scan is distributed.
@@ -729,173 +732,165 @@ object Similarity {
     cent.toDF("__cell", "__centroid")
   }
 
-  /** One `(d2, cell)` struct per centroid: the SAME rounded-L2 term tree
-    * as the former broadcast-join formulation, with the centroid as an
-    * array literal (`dot(c,c)` constant-folds; the repeated `dot(v,v)`
-    * is shared by codegen subexpression elimination). Struct ordering is
-    * lexicographic, so min/sort over these reproduce the oracle's
-    * `ORDER BY d2, cell` argmin/ranking exactly.
+  /** Steps 1–6 of every IVF probe wave, whatever the payload:
+    *
+    *   1. project the probes (`probe_id`, double `__pv`, `__pn`) plus
+    *      the payload's per-probe columns `probeCols` — projected BEFORE
+    *      the explode, so they are computed once per probe, not once per
+    *      probed cell;
+    *   2. explode each probe's `nprobe` nearest cells of `cent` (the
+    *      quantizer as plan literals: map-only, no broadcast, no window);
+    *   3. equi-join the payload's candidate projection `cands`
+    *      (`cand_id`, `cell`, payload columns) on `cell`;
+    *   4. drop self-pairs;
+    *   5. score each pair to 6 dp as `scoreCol`;
+    *   6. keep the top `keep` per probe by (score desc, `cand_id` asc).
     */
-  private def cellDistStructs(vec: Column,
-                              cent: Seq[(Any, Seq[Double])]): Seq[Column] =
-    cent.map { case (cell, cv) =>
-      val c = typedlit(cv)
-      struct(
-        round(dot(vec, vec) - lit(2.0) * dot(vec, c) + dot(c, c), 6)
-          .as("__d2"),
-        lit(cell).as("__cell"))
-    }
-
-  /** Nearest centroid of a literal quantizer, map-only (tie → lowest
-    * cell). Long-keyed quantizers (every [[kmeansFit]] shape) go through
-    * the native [[graft.functions.NearestCell]] — the matrix is ONE
-    * reference object, so the generated code is identical across Lloyd's
-    * rounds/waves (codegen-cache hit, no per-action recompile) and
-    * analysis sees one node instead of k×dims literals. Non-Long cell
-    * keys keep the equivalent `array_min` over k (d2, cell) structs —
-    * both argmin the same rounded-L2 term tree.
-    */
-  private def nearestCellExpr(vec: Column,
-                              cent: Seq[(Any, Seq[Double])]): Column =
-    if (cent.nonEmpty && cent.forall(_._1.isInstanceOf[Long]))
-      graft.functions.NearestCell.nearest(vec,
-        cent.map { case (c, v) => (c.asInstanceOf[Long], v) })
-    else
-      array_min(array(cellDistStructs(vec, cent): _*)).getField("__cell")
-
-  /** The `nprobe` nearest cells of a literal quantizer, ascending
-    * (d2, cell) — the multi-probe ranking as one map-side native sort of
-    * k rows per probe ([[graft.functions.RankedCells]], same stable
-    * codegen as [[nearestCellExpr]]).
-    */
-  private def rankedCellsExpr(vec: Column, cent: Seq[(Any, Seq[Double])],
-                              nprobe: Int): Column =
-    if (cent.nonEmpty && cent.forall(_._1.isInstanceOf[Long]))
-      graft.functions.NearestCell.ranked(vec,
-        cent.map { case (c, v) => (c.asInstanceOf[Long], v) }, nprobe)
-    else
-      transform(
-        slice(array_sort(array(cellDistStructs(vec, cent): _*)), 1, nprobe),
-        s => s.getField("__cell"))
-
-  /** IVF search (nprobe=1) over an explicit (idCol, cell) assignment
-    * table: probes scan only the vectors assigned to their own cell.
-    */
-  def ivfTopKAssigned(corpus: DataFrame, assignments: DataFrame,
-                      idCol: String, vecCol: String,
-                      probeFilter: Column, k: Int): DataFrame = {
-    val assigned = corpus.join(assignments, Seq(idCol))
-    val p = assigned.filter(probeFilter)
-      .select(col(idCol).as("probe_id"), col(vecCol).as("__pv"),
-        norm(col(vecCol)).as("__pn"), col("cell"))
-    val c = assigned.select(col(idCol).as("cand_id"), col(vecCol).as("__cv"),
-      norm(col(vecCol)).as("__cn"), col("cell"))
-    val scored = p.join(c, Seq("cell"))
-      .filter(col("probe_id") =!= col("cand_id"))
-      .withColumn("cos6",
-        round(dot(col("__pv"), col("__cv")) / (col("__pn") * col("__cn")), 6))
-    TopK.perGroup(scored, k,
-        partition = Seq(col("probe_id")),
-        order = Seq(col("cos6").desc, col("cand_id").asc))
-      .select(col("probe_id"), col("cell"), col("cand_id"), col("cos6"), col("rn"))
-  }
-
-  /** Multi-probe IVF search: each probe ranks all k cells by (rounded)
-    * squared L2 to the centroid and scans the `nprobe` nearest — the
-    * standard IVF recall knob (nprobe=1 is [[ivfTopKAssigned]]; larger
-    * nprobe trades candidate-scan cost for recall; nprobe=k is exact).
-    * `centroids` is the k-row frame from [[kmeansFit]] → the cell ranking
-    * is a map-only sort of k literal-centroid structs per probe, and the
-    * candidate scan stays an equi-join on `cell`.
-    */
-  def ivfTopKProbed(corpus: DataFrame, assignments: DataFrame,
-                    centroids: DataFrame, idCol: String, vecCol: String,
-                    probeFilter: Column, k: Int, nprobe: Int): DataFrame = {
-    val probes = corpus.filter(probeFilter)
-      .select(col(idCol).as("probe_id"), toDouble(col(vecCol)).as("__pv"),
-        norm(col(vecCol)).as("__pn"))
-    // cell ranking with the quantizer as plan literals: map-only per
-    // probe (sort k structs, keep nprobe), no broadcast, no window
-    val probeCells = probes.select(col("probe_id"), col("__pv"), col("__pn"),
-      explode(rankedCellsExpr(col("__pv"), localizeSeq(centroids), nprobe))
-        .as("cell"))
-    val cands = corpus.join(assignments, Seq(idCol))
-      .select(col(idCol).as("cand_id"), col(vecCol).as("__cv"),
-        norm(col(vecCol)).as("__cn"), col("cell"))
+  private def probeWave(probeRows: DataFrame, cands: DataFrame,
+      cent: Quantizer, idCol: String, vecCol: String, nprobe: Int,
+      keep: Int, scoreCol: String, score: Column,
+      probeCols: Seq[(String, Column)]): DataFrame = {
+    val probes = probeRows.select(col(idCol).as("probe_id"),
+      toDouble(col(vecCol)).as("__pv"), norm(col(vecCol)).as("__pn"))
+    val probeCells = probeCols.foldLeft(probes) { case (p, (n, c)) => p.withColumn(n, c) }
+      .select(Seq(col("probe_id"), col("__pv"), col("__pn")) ++
+        probeCols.map(pc => col(pc._1)) :+
+        explode(NearestCell.ranked(col("__pv"), cent, nprobe)).as("cell"): _*)
     val scored = probeCells.join(cands, Seq("cell"))
       .filter(col("probe_id") =!= col("cand_id"))
-      .withColumn("cos6",
-        round(dot(col("__pv"), col("__cv")) / (col("__pn") * col("__cn")), 6))
-    TopK.perGroup(scored, k,
-        partition = Seq(col("probe_id")),
-        order = Seq(col("cos6").desc, col("cand_id").asc))
-      .select(col("probe_id"), col("cand_id"), col("cos6"), col("rn"))
+      .withColumn(scoreCol, round(score, 6))
+    TopK.perGroup(scored, keep,
+      partition = Seq(col("probe_id")),
+      order = Seq(col(scoreCol).desc, col("cand_id").asc))
   }
 
-  /** Serve a probe wave from a SELF-CONTAINED index `(idCol, vecCol,
-    * cell)` — built with `withVec = true` ([[kmeansFit]] /
-    * [[assignToCentroids]]), the 100 TB IVF serving shape: the index
-    * stores each vector WITH its assignment, so candidates read straight
-    * off the index's `cell=` layout and the wave never joins back to the
-    * corpus (the probed-over-(id,cell) shape pays a full
-    * corpus⋈assignments shuffle join per wave). Probes resolve from the
-    * index too — an indexed id is queryable by construction; an external
-    * query set would enter as its own frame. Results are identical to
-    * [[ivfTopKProbed]] over the same quantizer (exact double widening,
-    * same 6dp/tie rules).
+  /** The full-precision IVF wave: serve `probeRows` (`idCol`, `vecCol`)
+    * from a SELF-CONTAINED index `(idCol, vecCol, cell)` — built with
+    * `withVec = true` ([[kmeansFit]] / [[assignToCentroids]]) — ranking
+    * cells by the already-[[localize]]d quantizer `cent` and scanning the
+    * `nprobe` nearest (nprobe = 1 is the assigned search, nprobe = k is
+    * exact). The 100 TB IVF serving shape: candidates read straight off
+    * the index's `cell=` layout and the wave never joins back to the
+    * corpus. Probe rows may come from the index itself or from an
+    * external query set (the takedown shape: a revoked id stays legal as
+    * a QUERY but can never be returned, because candidacy reads only the
+    * index). `includeProbeCell` reports each hit's probed cell — q72's
+    * nprobe = 1 shape, where that cell is the probe's own assignment.
     */
-  def ivfTopKServed(index: DataFrame, centroids: DataFrame, idCol: String,
-                    vecCol: String, probeFilter: Column, k: Int,
-                    nprobe: Int): DataFrame =
-    ivfTopKServedFrom(index.filter(probeFilter), index, centroids,
-      idCol, vecCol, k, nprobe)
-
-  /** [[ivfTopKServed]] against an already-[[localize]]d quantizer. */
-  def ivfTopKServed(index: DataFrame, cent: Seq[(Long, Seq[Double])],
-                    idCol: String, vecCol: String, probeFilter: Column,
-                    k: Int, nprobe: Int): DataFrame =
-    ivfTopKServedFrom(index.filter(probeFilter), index, cent,
-      idCol, vecCol, k, nprobe, includeProbeCell = false)
-
-  /** [[ivfTopKServed]] with an EXTERNAL probe set `(idCol, vecCol)` —
-    * query vectors that need not be index members (the takedown shape:
-    * a revoked id stays legal as a QUERY but can never be returned,
-    * because candidacy reads only the index).
-    */
-  def ivfTopKServedFrom(probeRows: DataFrame, index: DataFrame,
-                        centroids: DataFrame, idCol: String,
-                        vecCol: String, k: Int, nprobe: Int,
-                        includeProbeCell: Boolean = false): DataFrame =
-    ivfTopKServedFrom(probeRows, index, localizeSeq(centroids),
-      idCol, vecCol, k, nprobe, includeProbeCell)
-
-  /** [[ivfTopKServedFrom]] against an already-[[localize]]d quantizer. */
-  def ivfTopKServedFrom(probeRows: DataFrame, index: DataFrame,
-                        cent: Seq[(Long, Seq[Double])], idCol: String,
-                        vecCol: String, k: Int, nprobe: Int,
-                        includeProbeCell: Boolean): DataFrame = {
-    val probes = probeRows
-      .select(col(idCol).as("probe_id"), toDouble(col(vecCol)).as("__pv"),
-        norm(col(vecCol)).as("__pn"))
-    val probeCells = probes.select(col("probe_id"), col("__pv"), col("__pn"),
-      explode(rankedCellsExpr(col("__pv"), cent, nprobe))
-        .as("cell"))
+  def ivfTopK(probeRows: DataFrame, index: DataFrame, cent: Quantizer,
+              idCol: String, vecCol: String, k: Int, nprobe: Int,
+              includeProbeCell: Boolean = false): DataFrame = {
     val cands = index.select(col(idCol).as("cand_id"), col(vecCol).as("__cv"),
       norm(col(vecCol)).as("__cn"), col("cell"))
-    val scored = probeCells.join(cands, Seq("cell"))
-      .filter(col("probe_id") =!= col("cand_id"))
-      .withColumn("cos6",
-        round(dot(col("__pv"), col("__cv")) / (col("__pn") * col("__cn")), 6))
-    val ranked = TopK.perGroup(scored, k,
-        partition = Seq(col("probe_id")),
-        order = Seq(col("cos6").desc, col("cand_id").asc))
-    // includeProbeCell: q72's nprobe=1 shape reports the probe's OWN
-    // cell (its argmin = its assignment) alongside each hit
+    val ranked = probeWave(probeRows, cands, cent, idCol, vecCol, nprobe,
+      keep = k, "cos6", dot(col("__pv"), col("__cv")) / (col("__pn") * col("__cn")),
+      probeCols = Nil)
     if (includeProbeCell)
       ranked.select(col("probe_id"), col("cell"), col("cand_id"),
         col("cos6"), col("rn"))
     else
       ranked.select(col("probe_id"), col("cand_id"), col("cos6"), col("rn"))
+  }
+
+  /** The two-stage IVF wave of a QUANTIZED payload: (1) the shared
+    * probe wave ranks the payload's candidate projection `cands` on its
+    * approximate cosine `approx` (reading the payload, not the vectors)
+    * and keeps the top `prefetch` per probe; (2) only those
+    * |probes|·prefetch winners fetch their full-precision vectors from
+    * `corpus` (a point-lookup join — the prefetch side is k-bounded, so
+    * AQE broadcasts it) and are re-scored exactly, keeping the top `k`.
+    * `prefetch` is the recall knob of the quantization stage; the
+    * returned cos6 is the EXACT score, so downstream consumers never see
+    * quantization error. Probes are full-precision by construction
+    * (query vectors arrive fresh at serving time). The payload stages —
+    * what `cands`, `approx` and `probeCols` are — live on
+    * [[IndexKind.Served]].
+    */
+  private[ops] def ivfTopKTwoStage(probeRows: DataFrame, cands: DataFrame,
+      corpus: DataFrame, cent: Quantizer, idCol: String, vecCol: String,
+      k: Int, prefetch: Int, nprobe: Int, approx: Column,
+      probeCols: Seq[(String, Column)]): DataFrame = {
+    require(prefetch >= k, s"prefetch ($prefetch) must be >= k ($k)")
+    val pref = probeWave(probeRows, cands, cent, idCol, vecCol, nprobe,
+        keep = prefetch, "approx6", approx, probeCols)
+      .select(col("probe_id"), col("__pv"), col("__pn"), col("cand_id"))
+    val full = corpus.select(col(idCol).as("cand_id"),
+      toDouble(col(vecCol)).as("__cv"), norm(col(vecCol)).as("__cn"))
+    val exact = pref.join(full, Seq("cand_id"))
+      .withColumn("cos6",
+        round(dot(col("__pv"), col("__cv")) / (col("__pn") * col("__cn")), 6))
+    TopK.perGroup(exact, k,
+        partition = Seq(col("probe_id")),
+        order = Seq(col("cos6").desc, col("cand_id").asc))
+      .select(col("probe_id"), col("cand_id"), col("cos6"), col("rn"))
+  }
+
+  /** FILTERED ANN serving — the "top-k WHERE <metadata predicate>"
+    * verb, the most common real vector-store request after plain
+    * top-k ("top-k where lang='en' and license='ok'"), for any payload:
+    * `wave(filteredIndex, effPrefetch, effNprobe)` is the payload's
+    * unfiltered wave ([[ivfTopK]] or [[ivfTopKTwoStage]]) over the
+    * pre-filtered index. `allowed` is a one-column (`idCol`) frame of
+    * candidate ids passing the caller's metadata predicate (typically a
+    * documents-side gate joined on the embedding id). The predicate
+    * applies INSIDE the cell scan — a semi-join on the index BEFORE the
+    * cell equi-join, since every wave builds its candidates from the
+    * index it is handed — never to the finished top-k: post-filtering a
+    * k-list under a predicate with pass rate s leaves ~k·s survivors,
+    * decimating recall exactly when the filter is selective.
+    *
+    * The serving knobs scale with the predicate's MEASURED selectivity
+    * s = |allowed ∩ index| / |index| (ONE slim agg over the index:
+    * left-join the distinct allowed ids, count rows + matches):
+    * `nprobe` widens to ceil(nprobe/s) clamped to `numCells` — cells are
+    * the pruning unit, and a selective predicate thins every cell,
+    * pushing a probe's k-th allowed neighbour into more distant cells —
+    * and `prefetch` widens to ceil(prefetch/s) clamped to the allowed
+    * count, so the exact re-rank keeps re-scoring a constant FRACTION of
+    * the allowed candidacy instead of a vanishing one. A single-stage
+    * (full-precision) wave ignores the prefetch and scales only
+    * `nprobe`. Degenerate contract: at s = 1 this is the unfiltered wave
+    * exactly; with effNprobe = numCells and effPrefetch = |allowed| it
+    * equals the brute-force-filtered wave (q197's oracle gate); an empty
+    * `allowed` yields an empty wave. At 100 TB the semi-join shuffles
+    * (id)-slim rows of the index once per wave — right for a one-off
+    * predicate; a fleet serving one HOT predicate repeatedly
+    * materialises the filtered index as its own versioned target instead
+    * ([[materializeFilteredIndex]] + [[refreshFilteredIndex]], the q208
+    * verb: build once, refresh O(delta) off the base's `appendedSince`
+    * feed, serve with the UNfiltered wave at s=1 — no per-wave
+    * selectivity agg, no index-wide semi-join), or bakes the metadata
+    * into the index payload so the predicate pushes down to the parquet
+    * scan.
+    */
+  def ivfTopKFiltered(index: DataFrame, allowed: DataFrame, idCol: String,
+      numCells: Int, k: Int, prefetch: Long, nprobe: Int)(
+      wave: (DataFrame, Int, Int) => DataFrame): DataFrame = {
+    val ids = allowed.select(col(idCol)).distinct()
+    val m = index.join(ids.withColumn("__ok", lit(1)), Seq(idCol), "left")
+      .agg(count(lit(1)).as("__n"), count(col("__ok")).as("__ok")).head()
+    val (n, ok) = (m.getLong(0), m.getLong(1))
+    val s = if (n == 0L || ok == 0L) 1.0 else ok.toDouble / n
+    val (effPrefetch, effNprobe) =
+      filteredKnobs(k, prefetch, nprobe, s, ok, numCells)
+    wave(index.join(ids, Seq(idCol), "left_semi"), effPrefetch, effNprobe)
+  }
+
+  /** Selectivity-scaled serving knobs: widen both by 1/s, clamp nprobe
+    * to the cell count and prefetch to [k, |allowed|]. The plumbing is
+    * Long end-to-end (callers pass |corpus|-sized prefetches for the
+    * degenerate-point contract) with a final Int.MaxValue clamp at the
+    * window-limit boundary — beyond 2^31 allowed rows an Int truncation
+    * would wrap negative and silently void the at-every-scale guarantee.
+    */
+  private def filteredKnobs(k: Int, prefetch: Long, nprobe: Int, s: Double,
+      nAllow: Long, numCells: Int): (Int, Int) = {
+    val effNprobe =
+      math.min(numCells.toLong, math.ceil(nprobe / s).toLong).toInt
+    val effPrefetch = math.min(Int.MaxValue.toLong, math.max(k.toLong,
+      math.min(if (nAllow == 0L) k.toLong else nAllow,
+        math.ceil(prefetch.toDouble / s).toLong))).toInt
+    (effPrefetch, effNprobe)
   }
 
   /** SemDeDup — SEMANTIC dedup of an embedding corpus, cell-scoped
@@ -1041,7 +1036,7 @@ object Similarity {
         val perSub = (0 until m).map { s =>
           val sv = slice(col("__vec"), s * sub + 1, sub)
           struct(lit(s).as("__s"),
-            nearestCellExpr(sv, books(s)).as("__cell"), sv.as("__subv"))
+            NearestCell.nearest(sv, books(s)).as("__cell"), sv.as("__subv"))
         }
         val expl = cached.select(explode(array(perSub: _*)).as("__e"))
           .select(col("__e.__s").as("__s"), col("__e.__cell").as("__cell"),
@@ -1118,12 +1113,12 @@ object Similarity {
       }
       for (_ <- 1 to iters) {
         val coarsePart = struct(lit(-1).cast(IntegerType).as("__s"),
-          nearestCellExpr(col("__vec"), coarse).as("__cell"),
+          NearestCell.nearest(col("__vec"), coarse).as("__cell"),
           col("__vec").as("__subv"))
         val perSub = (0 until m).map { s =>
           val sv = slice(col("__vec"), s * sub + 1, sub)
           struct(lit(s).cast(IntegerType).as("__s"),
-            nearestCellExpr(sv, books(s)).as("__cell"), sv.as("__subv"))
+            NearestCell.nearest(sv, books(s)).as("__cell"), sv.as("__subv"))
         }
         val expl = vecs.select(explode(array(coarsePart +: perSub: _*)).as("__e"))
           .select(col("__e.__s").as("__s"), col("__e.__cell").as("__cell"),
@@ -1188,7 +1183,7 @@ object Similarity {
     // the raw k-means cell id: [[kmeansFit]] numbers cells 1..codes but a
     // Lloyd's round can EMPTY a cell without renumbering (likely on
     // dedup-shaped corpora with collapsed init vectors), leaving a sparse
-    // id set — and [[ivfTopKServedPQ]] indexes its ADC LUT/normSq tables
+    // id set — and [[IndexKind.PqServed]] indexes its ADC LUT/normSq tables
     // positionally in exactly this sorted order, so a raw id past a gap
     // would silently read the WRONG codebook entry. Renumbering is
     // order-preserving, so the argmin tie-break (lowest position = lowest
@@ -1196,83 +1191,12 @@ object Similarity {
     val codeCols = books.zipWithIndex.map { case (book, s) =>
       val positioned = book.sortBy(_._1).zipWithIndex
         .map { case ((_, cv), i) => ((i + 1).toLong, cv) }
-      nearestCellExpr(slice(v, s * sub + 1, sub), positioned).cast(ByteType)
+      NearestCell.nearest(slice(v, s * sub + 1, sub), positioned).cast(ByteType)
     }
     corpus
       .filter(array_max(transform(v, x => abs(x))) > 0.0)
       .select(col(idCol), array(codeCols: _*).as("codes"),
-        nearestCellExpr(v, coarse).as("cell"))
-  }
-
-  /** Serve a probe wave from a PQ-CODED index `(idCol, codes, cell)`
-    * ([[pqEncode]]'s shape) by ASYMMETRIC DISTANCE COMPUTATION with exact
-    * re-rank — the two-stage IVF-PQ serving path: (1) each probe
-    * precomputes its ADC lookup tables ONCE (lut[s][c] = ⟨probe subvector
-    * s, codebook_s[c]⟩ — m·codes dots per probe, BEFORE the cell join),
-    * so ranking a candidate costs m array lookups + adds instead of a
-    * dim-wide dot; candidates keep the top `prefetch` per probe on the
-    * 6dp-rounded reconstructed cosine (reconstructed norms are plain
-    * per-code constants). (2) only those winners fetch full-precision
-    * vectors from `corpus` (k-bounded point-lookup join) and re-score
-    * exactly — returned cos6 carries no quantization error. `prefetch`
-    * is the recall knob of the PQ stage; the coarse cells prune exactly
-    * as in [[ivfTopKServed]].
-    *
-    * Code/LUT pairing contract: stored codes are 1-based POSITIONS in
-    * the cell-id-sorted codebook ([[pqEncode]]'s rule), and the LUT and
-    * normSq arrays here are built in that same `sortBy(_._1)` order —
-    * so a SPARSE codebook (a Lloyd's round emptied a cell without
-    * renumbering) still pairs every code with its own entry.
-    */
-  def ivfTopKServedPQ(indexPq: DataFrame, corpus: DataFrame,
-      books: Seq[Seq[(Long, Seq[Double])]], coarse: Seq[(Long, Seq[Double])],
-      idCol: String, vecCol: String, probeRows: DataFrame,
-      k: Int, prefetch: Int, nprobe: Int, dim: Int): DataFrame = {
-    import org.apache.spark.sql.types.IntegerType
-    require(prefetch >= k, s"prefetch ($prefetch) must be >= k ($k)")
-    val m = books.size
-    val sub = dim / m
-    val probes = probeRows.select(col(idCol).as("probe_id"),
-      toDouble(col(vecCol)).as("__pv"), norm(col(vecCol)).as("__pn"))
-    // ADC tables as one array<array<double>> column, computed in the
-    // probe projection (once per probe row, not once per candidate pair)
-    // — via the native [[graft.functions.AdcLut]]: the codebooks are ONE
-    // reference object, so the plan carries one node instead of m·codes
-    // literal dot trees and codegen caches across waves/bundle versions
-    // (bit-identical to the Column formulation it replaced)
-    val lutCol = graft.functions.AdcLut.lut(col("__pv"),
-      books.map(_.sortBy(_._1).map(_._2)), sub)
-    // reconstructed norm² per (subspace, code): driver-side constants,
-    // the same left-to-right fold as list_dot_product(centroid, centroid)
-    val normSq: Seq[Seq[Double]] = books.map(_.sortBy(_._1).map { case (_, cv) =>
-      var acc = 0.0; cv.foreach(x => acc += x * x); acc
-    })
-    val probeCells = probes
-      .withColumn("__lut", lutCol)
-      .select(col("probe_id"), col("__pv"), col("__pn"), col("__lut"),
-        explode(rankedCellsExpr(col("__pv"), coarse, nprobe)).as("cell"))
-    val cands = indexPq.select(col(idCol).as("cand_id"), col("codes"), col("cell"))
-    def codeAt(s: Int): Column = element_at(col("codes"), s + 1).cast(IntegerType)
-    val adot = (0 until m).map(s =>
-      element_at(element_at(col("__lut"), s + 1), codeAt(s))).reduce(_ + _)
-    val anormSq = (0 until m).map(s =>
-      element_at(typedlit(normSq(s)), codeAt(s))).reduce(_ + _)
-    val approx = probeCells.join(cands, Seq("cell"))
-      .filter(col("probe_id") =!= col("cand_id"))
-      .withColumn("approx6", round(adot / (col("__pn") * sqrt(anormSq)), 6))
-    val pref = TopK.perGroup(approx, prefetch,
-        partition = Seq(col("probe_id")),
-        order = Seq(col("approx6").desc, col("cand_id").asc))
-      .select(col("probe_id"), col("__pv"), col("__pn"), col("cand_id"))
-    val full = corpus.select(col(idCol).as("cand_id"),
-      toDouble(col(vecCol)).as("__cv"), norm(col(vecCol)).as("__cn"))
-    val exact = pref.join(full, Seq("cand_id"))
-      .withColumn("cos6",
-        round(dot(col("__pv"), col("__cv")) / (col("__pn") * col("__cn")), 6))
-    TopK.perGroup(exact, k,
-        partition = Seq(col("probe_id")),
-        order = Seq(col("cos6").desc, col("cand_id").asc))
-      .select(col("probe_id"), col("cand_id"), col("cos6"), col("rn"))
+        NearestCell.nearest(v, coarse).as("cell"))
   }
 
   /** SQ8 — symmetric int8 quantization of a self-contained index frame
@@ -1284,7 +1208,7 @@ object Similarity {
     * a memory-resident and a disk-bound serving node — the FAISS SQ8
     * staple). Zero vectors (scale = 0) cannot be represented and DROP
     * OUT of the index — the candidacy consequence is that a dropped id
-    * can never be returned by [[ivfTopKServedInt8]] (a zero vector has
+    * can never be returned by [[IndexKind.Sq8Served]] (a zero vector has
     * no cosine direction, so it ranks nowhere meaningful anyway), and
     * any recall gate comparing the int8 wave against a full-precision
     * wave must exclude zero vectors from the truth side too (q162
@@ -1323,166 +1247,12 @@ object Similarity {
     df.filter(array_max(transform(toDouble(col(vecCol)), x => abs(x))) <= 0.0)
       .count()
 
-  /** Serve a probe wave from an INT8-STORED index `(idCol, qvec, scale,
-    * cell)` ([[quantizeInt8]]'s shape) with EXACT re-rank — the two-stage
-    * SQ8 serving path: (1) candidates are ranked on the DEQUANTIZED
-    * vectors (q·scale — reading 1 byte/dim off the index instead of 8),
-    * keeping the top `prefetch` per probe; (2) only those |probes|·prefetch
-    * winners fetch their full-precision vectors from `corpus` (a
-    * point-lookup join — the prefetch side is k-bounded, so AQE
-    * broadcasts it) and are re-scored exactly, keeping the top `k`.
-    * `prefetch` is the recall knob of the quantization stage (prefetch =
-    * |cell| is exact); the returned cos6 is the EXACT score, so
-    * downstream consumers never see quantization error. Probes are
-    * full-precision by construction (query vectors arrive fresh at
-    * serving time).
-    */
-  def ivfTopKServedInt8(index8: DataFrame, corpus: DataFrame,
-      cent: Seq[(Long, Seq[Double])], idCol: String, vecCol: String,
-      probeRows: DataFrame, k: Int, prefetch: Int, nprobe: Int): DataFrame = {
-    require(prefetch >= k, s"prefetch ($prefetch) must be >= k ($k)")
-    val probes = probeRows.select(col(idCol).as("probe_id"),
-      toDouble(col(vecCol)).as("__pv"), norm(col(vecCol)).as("__pn"))
-    val probeCells = probes.select(col("probe_id"), col("__pv"), col("__pn"),
-      explode(rankedCellsExpr(col("__pv"), cent, nprobe)).as("cell"))
-    val dq = transform(col("qvec"), q => q.cast(DoubleType) * col("scale"))
-    val cands = index8
-      .select(col(idCol).as("cand_id"), dq.as("__dq"), col("cell"))
-      .withColumn("__dn", norm(col("__dq")))
-    val approx = probeCells.join(cands, Seq("cell"))
-      .filter(col("probe_id") =!= col("cand_id"))
-      .withColumn("approx6",
-        round(dot(col("__pv"), col("__dq")) / (col("__pn") * col("__dn")), 6))
-    val pref = TopK.perGroup(approx, prefetch,
-        partition = Seq(col("probe_id")),
-        order = Seq(col("approx6").desc, col("cand_id").asc))
-      .select(col("probe_id"), col("__pv"), col("__pn"), col("cand_id"))
-    val full = corpus.select(col(idCol).as("cand_id"),
-      toDouble(col(vecCol)).as("__cv"), norm(col(vecCol)).as("__cn"))
-    val exact = pref.join(full, Seq("cand_id"))
-      .withColumn("cos6",
-        round(dot(col("__pv"), col("__cv")) / (col("__pn") * col("__cn")), 6))
-    TopK.perGroup(exact, k,
-        partition = Seq(col("probe_id")),
-        order = Seq(col("cos6").desc, col("cand_id").asc))
-      .select(col("probe_id"), col("cand_id"), col("cos6"), col("rn"))
-  }
-
-  /** FILTERED ANN serving — the "top-k WHERE <metadata predicate>"
-    * verb, the most common real vector-store request after plain
-    * top-k ("top-k where lang='en' and license='ok'"). `allowed` is a
-    * one-column (`idCol`) frame of candidate ids passing the caller's
-    * metadata predicate (typically a documents-side gate joined on the
-    * embedding id). The predicate applies INSIDE the cell scan — a
-    * semi-join on the index BEFORE the cell equi-join — never to the
-    * finished top-k: post-filtering a k-list under a predicate with
-    * pass rate s leaves ~k·s survivors, decimating recall exactly when
-    * the filter is selective.
-    *
-    * The serving knobs scale with the predicate's MEASURED selectivity
-    * s = |allowed ∩ index| / |index| (ONE slim agg over the index):
-    * `nprobe` widens to ceil(nprobe/s) clamped to the cell count —
-    * cells are the pruning unit, and a selective predicate thins every
-    * cell, pushing a probe's k-th allowed neighbour into more distant
-    * cells — and `prefetch` widens to ceil(prefetch/s) clamped to the
-    * allowed count, so the exact re-rank keeps re-scoring a constant
-    * FRACTION of the allowed candidacy instead of a vanishing one.
-    * Degenerate contract: at s = 1 this is [[ivfTopKServedInt8]]
-    * exactly; with effNprobe = numCells and effPrefetch = |allowed| it
-    * equals the brute-force-filtered wave (q197's oracle gate); an
-    * empty `allowed` yields an empty wave. At 100 TB the semi-join
-    * shuffles (id)-slim rows of the index once per wave — right for a
-    * one-off predicate; a fleet serving one HOT predicate repeatedly
-    * materialises the filtered index as its own versioned target
-    * instead ([[materializeFilteredIndex]] + [[refreshFilteredIndex]],
-    * the q208 verb: build once, refresh O(delta) off the base's
-    * `appendedSince` feed, serve with the UNfiltered wave at s=1 — no
-    * per-wave selectivity agg, no index-wide semi-join), or bakes the
-    * metadata into the index payload so the predicate pushes down to
-    * the parquet scan.
-    */
-  def ivfTopKServedInt8Filtered(index8: DataFrame, corpus: DataFrame,
-      cent: Seq[(Long, Seq[Double])], idCol: String, vecCol: String,
-      probeRows: DataFrame, allowed: DataFrame, k: Int, prefetch: Long,
-      nprobe: Int): DataFrame = {
-    val (fidx, s, nAllow) = filteredIndex(index8, allowed, idCol)
-    val (effPrefetch, effNprobe) =
-      filteredKnobs(k, prefetch, nprobe, s, nAllow, cent.size)
-    ivfTopKServedInt8(fidx, corpus, cent, idCol, vecCol, probeRows,
-      k, effPrefetch, effNprobe)
-  }
-
-  /** [[ivfTopKServedInt8Filtered]] on the PQ lifecycle — same
-    * pre-filter-inside-the-cell-scan rule and selectivity-scaled
-    * knobs; only the payload changes ([[ivfTopKServedPQ]]'s ADC +
-    * exact re-rank).
-    */
-  def ivfTopKServedPQFiltered(indexPq: DataFrame, corpus: DataFrame,
-      books: Seq[Seq[(Long, Seq[Double])]], coarse: Seq[(Long, Seq[Double])],
-      idCol: String, vecCol: String, probeRows: DataFrame,
-      allowed: DataFrame, k: Int, prefetch: Long, nprobe: Int,
-      dim: Int): DataFrame = {
-    val (fidx, s, nAllow) = filteredIndex(indexPq, allowed, idCol)
-    val (effPrefetch, effNprobe) =
-      filteredKnobs(k, prefetch, nprobe, s, nAllow, coarse.size)
-    ivfTopKServedPQ(fidx, corpus, books, coarse, idCol, vecCol, probeRows,
-      k, effPrefetch, effNprobe, dim)
-  }
-
-  /** [[ivfTopKServedInt8Filtered]] on the full-precision float index —
-    * single-stage (no prefetch/re-rank split), so only `nprobe` scales
-    * with the measured selectivity.
-    */
-  def ivfTopKServedFromFiltered(probeRows: DataFrame, index: DataFrame,
-      cent: Seq[(Long, Seq[Double])], idCol: String, vecCol: String,
-      allowed: DataFrame, k: Int, nprobe: Int,
-      includeProbeCell: Boolean = false): DataFrame = {
-    val (fidx, s, _) = filteredIndex(index, allowed, idCol)
-    val effNprobe =
-      math.min(cent.size.toLong, math.ceil(nprobe / s).toLong).toInt
-    ivfTopKServedFrom(probeRows, fidx, cent, idCol, vecCol, k, effNprobe,
-      includeProbeCell)
-  }
-
-  /** Measure the predicate's selectivity over the index (one agg job:
-    * left-join the distinct allowed ids, count rows + matches) and
-    * return the PRE-FILTERED index (semi-join — applied before any
-    * cell join by construction, since every served wave builds its
-    * candidate frame from the index it is handed).
-    */
-  private def filteredIndex(index: DataFrame, allowed: DataFrame,
-      idCol: String): (DataFrame, Double, Long) = {
-    val ids = allowed.select(col(idCol)).distinct()
-    val m = index.join(ids.withColumn("__ok", lit(1)), Seq(idCol), "left")
-      .agg(count(lit(1)).as("__n"), count(col("__ok")).as("__ok")).head()
-    val (n, ok) = (m.getLong(0), m.getLong(1))
-    val s = if (n == 0L || ok == 0L) 1.0 else ok.toDouble / n
-    (index.join(ids, Seq(idCol), "left_semi"), s, ok)
-  }
-
-  /** Selectivity-scaled serving knobs: widen both by 1/s, clamp nprobe
-    * to the cell count and prefetch to [k, |allowed|]. The plumbing is
-    * Long end-to-end (callers pass |corpus|-sized prefetches for the
-    * degenerate-point contract) with a final Int.MaxValue clamp at the
-    * window-limit boundary — beyond 2^31 allowed rows an Int truncation
-    * would wrap negative and silently void the at-every-scale guarantee.
-    */
-  private def filteredKnobs(k: Int, prefetch: Long, nprobe: Int, s: Double,
-      nAllow: Long, numCells: Int): (Int, Int) = {
-    val effNprobe =
-      math.min(numCells.toLong, math.ceil(nprobe / s).toLong).toInt
-    val effPrefetch = math.min(Int.MaxValue.toLong, math.max(k.toLong,
-      math.min(if (nAllow == 0L) k.toLong else nAllow,
-        math.ceil(prefetch.toDouble / s).toLong))).toInt
-    (effPrefetch, effNprobe)
-  }
-
   /** MATERIALIZE a hot-predicate serving index (the q208 verb): commit
     * `base`'s current rows ∩ `allowed` as the FIRST version of the
     * filtered target `filtT`, inheriting the base's quantizer tag so
     * the pairing invariant ([[pairedCentroids]]) holds on the filtered
     * replica too. This is the amortization path the per-wave filtered
-    * verbs ([[ivfTopKServedInt8Filtered]] et al.) document: a fleet
+    * verb ([[ivfTopKFiltered]]) documents: a fleet
     * serving "lang='en'" a thousand times pays the index-wide semi-join
     * ONCE here, then every wave serves the filtered target with the
     * plain (unfiltered, s=1) wave — no per-wave selectivity agg, no

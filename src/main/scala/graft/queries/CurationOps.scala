@@ -226,8 +226,8 @@ object CurationOps {
       centroids.write.mode("overwrite").parquet(s"$out/centroids"))
     val idxAssign = spark.read.parquet(s"$out/assignments")
     val idxCent = spark.read.parquet(s"$out/centroids")
-    val res = Similarity.ivfTopKServed(idxAssign, idxCent,
-        "vec_id", "embedding", probeFilter = $"vec_id" < 20, k = 3, nprobe = 2)
+    val res = Similarity.ivfTopK(idxAssign.filter($"vec_id" < 20), idxAssign,
+        Similarity.localize(idxCent), "vec_id", "embedding", k = 3, nprobe = 2)
       .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
     // k-bounded result; materialise so nothing holds the index read open
     val rows = res.collect().toSeq

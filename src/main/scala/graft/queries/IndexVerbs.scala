@@ -21,9 +21,8 @@ import graft.streaming.StreamOps
   * share with the rest of the similarity family.
   *
   * The full-precision IVF-flat verbs (q153/q156/q161) are not a third
-  * kind: their wave is single-stage and probes the index's own rows
-  * through a filter ([[Similarity.ivfTopKServed]] with `probeFilter`),
-  * with no probe frame and no exact re-rank against the corpus, so every
+  * kind: their wave is single-stage ([[Similarity.ivfTopK]]), with no
+  * payload stage and no exact re-rank against the corpus, so every
   * shared body here would have to branch on them.
   */
 object IndexVerbs {
@@ -99,8 +98,8 @@ object IndexVerbs {
     val fullIdx = Similarity.assignToCentroids(
       e.filter(array_max(transform(col("embedding"), x => abs(x))) > 0),
       served.coarse, "vec_id", "embedding", withVec = true)
-    val fullWave = Similarity.ivfTopKServed(fullIdx, served.coarse,
-        "vec_id", "embedding", probeFilter = vecId < 20, k = 3, nprobe = 2)
+    val fullWave = Similarity.ivfTopK(fullIdx.filter(vecId < 20), fullIdx,
+        served.coarse, "vec_id", "embedding", k = 3, nprobe = 2)
       .select(col("probe_id"), col("cand_id"))
       .collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
     val hits = Similarity.recallHits(fullWave,

@@ -409,9 +409,9 @@ object LlmOps {
       // nprobe=1 served from the self-contained index (a probe's ranked
       // cell IS its own assignment, so this equals the assigned search
       // exactly, without the corpus⋈assignments join per wave)
-      val out = Similarity.ivfTopKServedFrom(index.filter($"vec_id" < 20),
-          index, cent, "vec_id", "embedding", k = 3, nprobe = 1,
-          includeProbeCell = true)
+      val out = Similarity.ivfTopK(index.filter($"vec_id" < 20),
+          index, Similarity.localize(cent), "vec_id", "embedding", k = 3,
+          nprobe = 1, includeProbeCell = true)
         .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
       // k-bounded result (|probes|·k = 60 rows — driver-size BY DESIGN,
       // like the centroid localize): materialise it so the cached IVF
@@ -508,7 +508,7 @@ object LlmOps {
   /** Q82 — multi-probe IVF (nprobe=2): each probe ranks the 8 k-means
     * cells by rounded centroid distance and scans the two nearest — the
     * standard IVF recall knob over the same deterministic index as q72
-    * ([[Similarity.ivfTopKProbed]]). The oracle unrolls the identical
+    * ([[Similarity.ivfTopK]]). The oracle unrolls the identical
     * k-means and ranks cells with the same 6dp/cell-ascending rule.
     */
   def q82(spark: SparkSession, dir: String): DataFrame = {
@@ -519,8 +519,9 @@ object LlmOps {
       Similarity.kmeansFit(e, "vec_id", "embedding", k = 8, iters = 2,
         materialize = true, withVec = true)
     try {
-      val out = Similarity.ivfTopKServed(assignments, centroids,
-          "vec_id", "embedding", probeFilter = $"vec_id" < 20, k = 3, nprobe = 2)
+      val out = Similarity.ivfTopK(assignments.filter($"vec_id" < 20),
+          assignments, Similarity.localize(centroids), "vec_id", "embedding",
+          k = 3, nprobe = 2)
         .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
       // k-bounded result; materialise so the cached index can be released
       // (same lifecycle pattern as q72)
@@ -561,8 +562,8 @@ object LlmOps {
     // and no corpus join: candidates read straight off the cell layout
     val idxAssign = spark.read.parquet(s"$out/assignments")
     val idxCent = spark.read.parquet(s"$out/centroids")
-    val res = Similarity.ivfTopKServed(idxAssign, idxCent,
-        "vec_id", "embedding", probeFilter = $"vec_id" < 20, k = 3, nprobe = 2)
+    val res = Similarity.ivfTopK(idxAssign.filter($"vec_id" < 20), idxAssign,
+        Similarity.localize(idxCent), "vec_id", "embedding", k = 3, nprobe = 2)
       .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
     // k-bounded result; materialise so nothing holds the index read open
     val rows = res.collect().toSeq
@@ -1155,8 +1156,8 @@ object LlmOps {
     // sides' partition pruning intact)
     val idxAssign = spark.read.parquet(s"$out/assignments/seg0")
       .unionByName(spark.read.parquet(s"$out/assignments/seg1"))
-    val res = Similarity.ivfTopKServed(idxAssign, centLocal,
-        "vec_id", "embedding", probeFilter = $"vec_id" < 20, k = 3, nprobe = 2)
+    val res = Similarity.ivfTopK(idxAssign.filter($"vec_id" < 20), idxAssign,
+        centLocal, "vec_id", "embedding", k = 3, nprobe = 2)
       .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
     // k-bounded result; materialise so nothing holds the index read open
     val rows = res.collect().toSeq
@@ -1190,8 +1191,8 @@ object LlmOps {
       Similarity.kmeansFit(e, "vec_id", "embedding", k = 8, iters = 2,
         materialize = true, withVec = true)
     try {
-      val ivf = Similarity.ivfTopKServed(assign, cent,
-          "vec_id", "embedding", probeFilter = $"vec_id" < 20, k = 3, nprobe = 2)
+      val ivf = Similarity.ivfTopK(assign.filter($"vec_id" < 20), assign,
+          Similarity.localize(cent), "vec_id", "embedding", k = 3, nprobe = 2)
         .select($"probe_id", $"cand_id")
       val truth = Similarity.bruteForceTopK(
           e.filter($"vec_id" < 20), e, "vec_id", "embedding", k = 3)
@@ -1319,9 +1320,8 @@ object LlmOps {
       // k-bounded result (|probes|·k rows — driver-size BY DESIGN, the
       // q72 lifecycle pattern): materialise so nothing holds the old
       // segment scan open across the fold
-      val res = Similarity.ivfTopKServed(idxAssign, centLocal,
-          "vec_id", "embedding", probeFilter = $"vec_id" < 20, k = 3,
-          nprobe = 2)
+      val res = Similarity.ivfTopK(idxAssign.filter($"vec_id" < 20),
+          idxAssign, centLocal, "vec_id", "embedding", k = 3, nprobe = 2)
         .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
       (res.collect().toSeq, res.schema)
     }
@@ -1497,8 +1497,8 @@ object LlmOps {
         .getOrElse(sys.error("no centroid version paired with the served index"))
       // k-bounded result (|probes|·k rows): materialise so nothing holds
       // the old index scan open across the refit (q151's pattern)
-      val res = Similarity.ivfTopKServed(idxAssign, c,
-          "vec_id", "embedding", probeFilter = $"vec_id" < 20, k = 3, nprobe = 2)
+      val res = Similarity.ivfTopK(idxAssign.filter($"vec_id" < 20),
+          idxAssign, c, "vec_id", "embedding", k = 3, nprobe = 2)
         .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
       (res.collect().toSeq, res.schema)
     }
@@ -1616,9 +1616,8 @@ object LlmOps {
     // probes come from the CORPUS — a revoked id stays legal as a QUERY
     // (an external query vector is not index membership) but can never
     // be returned, because candidacy reads only the index
-    val res = Similarity.ivfTopKServedFrom(e.filter($"vec_id" < 20),
-        idxAssign, centLocal, "vec_id", "embedding", k = 3, nprobe = 2,
-        includeProbeCell = false)
+    val res = Similarity.ivfTopK(e.filter($"vec_id" < 20),
+        idxAssign, centLocal, "vec_id", "embedding", k = 3, nprobe = 2)
       .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
     // k-bounded result (|probes|·k rows); materialise so nothing holds
     // the index read open (the q72 lifecycle pattern)
@@ -1703,8 +1702,8 @@ object LlmOps {
       "streaming ingestion must have appended at least one index segment")
     val c = Similarity.pairedQuantizer(spark, assignT, centT)
       .getOrElse(sys.error("no centroid version paired with the served index"))
-    val res = Similarity.ivfTopKServed(idxAssign, c,
-        "vec_id", "embedding", probeFilter = $"vec_id" < 20, k = 3, nprobe = 2)
+    val res = Similarity.ivfTopK(idxAssign.filter($"vec_id" < 20),
+        idxAssign, c, "vec_id", "embedding", k = 3, nprobe = 2)
       .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
     // k-bounded result; materialise so nothing holds the index scan open
     val rows = res.collect().toSeq
@@ -2116,7 +2115,7 @@ object LlmOps {
     * proves RRF fusion with a brute-force dense side (the declared
     * ground-truth baseline, O(|probes|·corpus)); THIS is the production
     * serving shape — the dense ranking comes from the q142-shape
-    * persisted index ([[Similarity.ivfTopKServed]], nprobe=2 multi-probe
+    * persisted index ([[Similarity.ivfTopK]], nprobe=2 multi-probe
     * over the cell-partitioned self-contained index, quantizer pinned
     * driver-side as plan literals), the lexical side and the fusion are
     * unchanged. At 100 TB the dense candidate scan touches only each
@@ -2149,8 +2148,8 @@ object LlmOps {
     // pinned once, candidates read straight off the cell layout
     val idxAssign = spark.read.parquet(s"$out/assignments")
     val cent = Similarity.localize(spark.read.parquet(s"$out/centroids"))
-    val dense = Similarity.ivfTopKServed(idxAssign, cent,
-        "vec_id", "embedding", probeFilter = $"vec_id" < 10, k = 10, nprobe = 2)
+    val dense = Similarity.ivfTopK(idxAssign.filter($"vec_id" < 10),
+        idxAssign, cent, "vec_id", "embedding", k = 10, nprobe = 2)
       .select($"probe_id", $"cand_id", $"rn".as("rn_d"))
     rrfFuse(dense, lexicalTopK(spark, dir))
       .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
@@ -2544,9 +2543,8 @@ object LlmOps {
         .getOrElse(sys.error("int8 index target committed no version"))
       val c = Similarity.pairedQuantizer(spark, assignT, centT)
         .getOrElse(sys.error("no centroid version paired with the served index"))
-      val res = Similarity.ivfTopKServedInt8(idx8, e, c, "vec_id",
-          "embedding", e.filter($"vec_id" < 20), k = 3, prefetch = 6,
-          nprobe = 2)
+      val res = IndexKind.Sq8Served(idx8, c)
+        .topK(e, e.filter($"vec_id" < 20), k = 3, prefetch = 6, nprobe = 2)
         .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
       val rows = res.collect().toSeq
       // a dropped arrival must be absent from the wave BY CONSTRUCTION —
@@ -3130,8 +3128,7 @@ object LlmOps {
     val cent = Similarity.localize(
       Similarity.pairedCentroids(spark, filtT, centT)
         .getOrElse(sys.error("no centroid version paired with the replica")))
-    Similarity.ivfTopKServedInt8(fidx, e, cent, "vec_id", "embedding",
-        e.filter($"vec_id" < 10), k = 10,
+    IndexKind.Sq8Served(fidx, cent).topK(e, e.filter($"vec_id" < 10), k = 10,
         prefetch = math.min(Int.MaxValue.toLong, nCorpus).toInt, nprobe = 8)
       .orderBy($"probe_id".asc_nulls_first, $"rn".asc_nulls_first)
   }

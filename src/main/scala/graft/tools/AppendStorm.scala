@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.SparkSession
-
 /** Test fixture main: a SECOND-PROCESS APPENDER for the persisted IVF
   * index pair (assignments [[graft.ops.VersionedTarget.Segmented]] +
   * centroids [[graft.ops.VersionedTarget.Rewrite]]) — runs
@@ -39,12 +37,7 @@ object AppendStorm {
     val aroot = Paths.get(args(0))
     val croot = Paths.get(args(1))
     val nAppends = args(2).toInt
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-append-storm")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local(2, "graft-append-storm")
     try {
       import spark.implicits._
       val assignT = graft.ops.VersionedTarget.Segmented(aroot,

@@ -156,15 +156,7 @@ object BoundedCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outPath = args.lift(1).getOrElse("BOUNDED.json")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-bounded")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(32, "graft-bounded")
     try {
       val bounds = all(spark, sfDir)
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),

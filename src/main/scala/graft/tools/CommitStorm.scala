@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.SparkSession
-
 /** Test fixture main: a SECOND-PROCESS WRITER for
   * [[graft.ops.VersionedTarget.Segmented]] — commits `nBatches`
   * consecutive batches (each two rows, ids `b*10` and `b*10+1`, the
@@ -27,12 +25,7 @@ object CommitStorm {
     val root = Paths.get(args(0))
     val first = args(1).toLong
     val n = args(2).toInt
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-commit-storm")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local(2, "graft-commit-storm")
     try {
       import spark.implicits._
       val target = graft.ops.VersionedTarget.Segmented(root)

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
 /** Test fixture main: RESUME the q132 incremental-dedup stream from an
@@ -24,12 +24,7 @@ import org.apache.spark.sql.streaming.Trigger
 object DedupResume {
   def main(args: Array[String]): Unit = {
     val Array(dataDir, ckpt, root, corpusPath) = args.take(4)
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-dedup-resume")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local(2, "graft-dedup-resume")
     try {
       val corpus = spark.read.parquet(corpusPath)
       val index = graft.queries.StreamingQueries.neardupIndex(corpus)

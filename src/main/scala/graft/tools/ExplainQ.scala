@@ -1,13 +1,9 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object ExplainQ {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.graft.smallResultSort", "true")
-      .config("spark.graft.compactScans", "true")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.core.GraftSession.local(8, smallResultSort = true,
+      compactScans = true)
+    spark.conf.set("spark.sql.shuffle.partitions", 32)
     spark.sparkContext.setLogLevel("ERROR")
     val df = graft.SparkEntry.queries(args(0))(spark, "/root/testdata/sf0.1")
     df.explain("formatted")

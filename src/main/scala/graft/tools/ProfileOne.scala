@@ -21,7 +21,7 @@ object ProfileOne {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.Bench.session(graft.Bench.benchCpus)
+    val spark = graft.Bench.session()
     EngineLog.echoToConsole = false
 
     val starts = new ConcurrentHashMap[Int, (Long, String)]()

@@ -275,4 +275,10 @@ class ExtensionsSpec extends SparkSpec {
     assert(b.nearest(tie, isFloat = false) == 3L)
     assert(b.ranked(tie, isFloat = false, 2).toLongArray().toSeq == Seq(3L, 8L))
   }
+
+  test("an empty quantizer is refused when its cell expression is built") {
+    val v = org.apache.spark.sql.functions.col("v")
+    intercept[IllegalArgumentException](graft.functions.NearestCell.nearest(v, Seq.empty))
+    intercept[IllegalArgumentException](graft.functions.NearestCell.ranked(v, Seq.empty, 2))
+  }
 }

@@ -55,4 +55,25 @@ class IngestSpec extends SparkSpec {
     assert(plan.contains("PushedFilters: [IsNotNull(ts), GreaterThan(ts"),
       s"ts filter not pushed to scan:\n$plan")
   }
+
+  test("compacted scan copies are keyed on their file count: two " +
+      "parallelisms get two live copies of n files each") {
+    import graft.core.Tables.compactedCopy
+    val tmp = java.nio.file.Files.createTempDirectory("graft_compact_n")
+    val dir = tmp.toString
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/embeddings.parquet"),
+      tmp.resolve("embeddings.parquet"))
+    def files(p: String): Int =
+      new java.io.File(p).listFiles.count(_.getName.endsWith(".parquet"))
+    val two = compactedCopy(spark, dir, "embeddings", 2)
+    val three = compactedCopy(spark, dir, "embeddings", 3)
+    try {
+      assert(two != three, "a 3-file scan must not be served the 2-file copy")
+      // writing the 3-file copy evicted neither: both stay live
+      assert(files(two) == 2 && files(three) == 3,
+        s"copies hold ${files(two)} and ${files(three)} files")
+      assert(compactedCopy(spark, dir, "embeddings", 2) == two)
+    } finally Seq(two, three, dir).foreach(p =>
+      graft.ops.VersionedTarget.rmTree(new java.io.File(p)))
+  }
 }

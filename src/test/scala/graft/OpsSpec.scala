@@ -476,10 +476,12 @@ class OpsSpec extends SparkSpec {
       e.filter($"vec_id" < 20), e, "vec_id", "embedding", k = 3))
     val (assign, cent) = Similarity.kmeansFit(e, "vec_id", "embedding", k = 8, iters = 2)
     try {
-      val r1 = pairs(Similarity.ivfTopKAssigned(e, assign, "vec_id", "embedding",
-        $"vec_id" < 20, k = 3))
-      val r2 = pairs(Similarity.ivfTopKProbed(e, assign, cent, "vec_id", "embedding",
-        $"vec_id" < 20, k = 3, nprobe = 2))
+      val index = e.join(assign, "vec_id")
+      val c = Similarity.localize(cent)
+      val r1 = pairs(Similarity.ivfTopK(e.filter($"vec_id" < 20), index, c,
+        "vec_id", "embedding", k = 3, nprobe = 1))
+      val r2 = pairs(Similarity.ivfTopK(e.filter($"vec_id" < 20), index, c,
+        "vec_id", "embedding", k = 3, nprobe = 2))
       val (rec1, rec2) = ((brute & r1).size.toDouble / brute.size,
         (brute & r2).size.toDouble / brute.size)
       assert(rec2 >= rec1, f"nprobe=2 recall $rec2%.3f < nprobe=1 $rec1%.3f")
@@ -510,10 +512,10 @@ class OpsSpec extends SparkSpec {
         "vec_id", "embedding", k = 3))
       // REAL serving knobs on both waves — the selectivity scaling is
       // the filtered wave's own job, not the caller's
-      val waveU = Similarity.ivfTopKServedInt8(idx8, e, cent,
-        "vec_id", "embedding", probes, k = 3, prefetch = 6, nprobe = 2)
-      val waveF = Similarity.ivfTopKServedInt8Filtered(idx8, e, cent,
-        "vec_id", "embedding", probes, allowed, k = 3, prefetch = 6, nprobe = 2)
+      val sq8 = IndexKind.Sq8Served(idx8, cent)
+      val waveU = sq8.topK(e, probes, k = 3, prefetch = 6, nprobe = 2)
+      val waveF = sq8.topKFiltered(e, probes, allowed, k = 3, prefetch = 6,
+        nprobe = 2)
       val recallU = (truthU & pairs(waveU)).size.toDouble / truthU.size
       val recallF = (truthF & pairs(waveF)).size.toDouble / truthF.size
       // the WRONG design the verb exists to replace: post-filter the
@@ -527,26 +529,36 @@ class OpsSpec extends SparkSpec {
       assert(recallF > recallPost,
         f"pre-filtering ($recallF%.3f) must beat post-filtering " +
           f"($recallPost%.3f) at a selective predicate")
-      // degenerate contract: every cell probed + prefetch covering the
-      // whole allowed set == the brute-force-filtered wave EXACTLY
-      val exhaustive = Similarity.ivfTopKServedInt8Filtered(idx8, e, cent,
-          "vec_id", "embedding", probes, allowed, k = 3,
-          prefetch = 500, nprobe = 8)
-        .orderBy($"probe_id", $"rn").collect().toSeq
+      // degenerate contracts, for every payload: every cell probed +
+      // prefetch covering the whole allowed set == the brute-force-
+      // filtered wave EXACTLY, and an empty `allowed` serves nothing.
+      // The float payload is single-stage: scores read the index's own
+      // full-precision rows and only nprobe scales.
       val bruteF = Similarity.bruteForceTopK(probes,
           e.join(allowed, Seq("vec_id"), "left_semi"), "vec_id", "embedding",
           k = 3)
         .orderBy($"probe_id", $"rn").collect().toSeq
-      assert(exhaustive == bruteF,
-        "exhaustive filtered wave must equal brute-force-filtered rows exactly")
-      // the float payload shares the factoring: exhaustive nprobe over
-      // the self-contained float index equals brute-force-filtered too
-      // (single-stage — scores read the index's own full-precision rows)
-      val floatEx = Similarity.ivfTopKServedFromFiltered(probes, assign,
-          cent, "vec_id", "embedding", allowed, k = 3, nprobe = 8)
-        .orderBy($"probe_id", $"rn").collect().toSeq
-      assert(floatEx == bruteF,
-        "exhaustive float filtered wave must equal brute-force-filtered rows")
+      val books = Similarity.pqFit(e, "vec_id", "embedding",
+        dim = 64, m = 4, codes = 16, iters = 2)
+      val pq = IndexKind.PqServed(Similarity.pqEncode(e, "vec_id", "embedding",
+        books, cent, dim = 64), cent, books)
+      type Filtered = org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame
+      val payloads = Seq[(String, Filtered)](
+        "flat" -> (ok => Similarity.ivfTopKFiltered(assign, ok, "vec_id",
+          cent.size, k = 3, prefetch = 3, nprobe = 8)((fidx, _, np) =>
+          Similarity.ivfTopK(probes, fidx, cent, "vec_id", "embedding",
+            k = 3, nprobe = np))),
+        "SQ8" -> (ok => sq8.topKFiltered(e, probes, ok, k = 3,
+          prefetch = 500, nprobe = 8)),
+        "PQ" -> (ok => pq.topKFiltered(e, probes, ok, k = 3,
+          prefetch = 500, nprobe = 8)))
+      for ((name, filtered) <- payloads) {
+        assert(filtered(allowed).orderBy($"probe_id", $"rn").collect().toSeq
+            == bruteF,
+          s"exhaustive $name filtered wave must equal brute-force-filtered rows")
+        assert(filtered(allowed.filter(lit(false))).isEmpty,
+          s"$name filtered wave over an empty allowed set must be empty")
+      }
     } finally assign.unpersist(): Unit
   }
 
@@ -584,8 +596,9 @@ class OpsSpec extends SparkSpec {
       // the two-segment serve (q144) equals one monolithic assignment
       // table over the same centroids: no row lost at the segment seam
       val monolithic = Similarity.assignToCentroids(e, cent, "vec_id", "embedding")
-      val servedMono = Similarity.ivfTopKProbed(e, monolithic, cent,
-          "vec_id", "embedding", probeFilter = $"vec_id" < 20, k = 3, nprobe = 2)
+      val servedMono = Similarity.ivfTopK(e.filter($"vec_id" < 20),
+          e.join(monolithic, "vec_id"), Similarity.localize(cent),
+          "vec_id", "embedding", k = 3, nprobe = 2)
         .orderBy($"probe_id", $"rn").collect().toSeq
       val appended = LlmOps.q144(spark, sfDir).collect().toSeq
       assert(appended == servedMono,
@@ -619,8 +632,9 @@ class OpsSpec extends SparkSpec {
     val (assign, cent) =
       Similarity.kmeansFit(e, "vec_id", "embedding", k = 8, iters = 2)
     try {
-      val ivfAll = Similarity.ivfTopKProbed(e, assign, cent,
-          "vec_id", "embedding", probeFilter = $"vec_id" < 20, k = 3, nprobe = 8)
+      val ivfAll = Similarity.ivfTopK(e.filter($"vec_id" < 20),
+          e.join(assign, "vec_id"), Similarity.localize(cent),
+          "vec_id", "embedding", k = 3, nprobe = 8)
         .select($"probe_id", $"cand_id")
       val truth = Similarity.bruteForceTopK(
           e.filter($"vec_id" < 20), e, "vec_id", "embedding", k = 3)
@@ -650,8 +664,8 @@ class OpsSpec extends SparkSpec {
         e.filter($"vec_id" < 10), e, "vec_id", "embedding", k = 10))
       // nprobe = k scans every cell, so the served dense ranking equals
       // brute force exactly and the fusion must be identical row-for-row
-      val viaServed = fusedRows(Similarity.ivfTopKServed(index, cent,
-        "vec_id", "embedding", probeFilter = $"vec_id" < 10, k = 10,
+      val viaServed = fusedRows(Similarity.ivfTopK(index.filter($"vec_id" < 10),
+        index, Similarity.localize(cent), "vec_id", "embedding", k = 10,
         nprobe = 8))
       assert(viaBrute == viaServed,
         s"fusion diverged: only-brute=${(viaBrute -- viaServed).take(5)} " +
@@ -692,9 +706,8 @@ class OpsSpec extends SparkSpec {
       // (c) the exactness law the re-rank rides on: prefetch covering
       // every candidate + nprobe=k equals brute force exactly
       val probes = e.filter($"vec_id" < 20)
-      val viaInt8 = Similarity.ivfTopKServedInt8(idx8, e,
-          Similarity.localize(cent), "vec_id", "embedding", probes,
-          k = 3, prefetch = 100000, nprobe = 8)
+      val viaInt8 = IndexKind.Sq8Served(idx8, Similarity.localize(cent))
+          .topK(e, probes, k = 3, prefetch = 100000, nprobe = 8)
         .select($"probe_id", $"cand_id", $"cos6", $"rn")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getInt(3))).toSet
@@ -757,9 +770,8 @@ class OpsSpec extends SparkSpec {
         // nprobe=k equals brute force exactly (recall is purely the
         // prefetch/nprobe trade, never a correctness loss)
         val probes = e.filter($"vec_id" < 20)
-        val viaPQ = Similarity.ivfTopKServedPQ(pq, e, books, coarse,
-            "vec_id", "embedding", probes, k = 3, prefetch = 100000,
-            nprobe = 8, dim = 64)
+        val viaPQ = IndexKind.PqServed(pq, coarse, books)
+            .topK(e, probes, k = 3, prefetch = 100000, nprobe = 8)
           .select($"probe_id", $"cand_id", $"cos6", $"rn")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
             r.getInt(3))).toSet
@@ -1206,9 +1218,8 @@ class OpsSpec extends SparkSpec {
           .collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
           .toSet
-      val viaInt8 = fusedRows(Similarity.ivfTopKServedInt8(idx8, e,
-        Similarity.localize(cent), "vec_id", "embedding",
-        e.filter($"vec_id" < 10), k = 10, prefetch = 100000, nprobe = 8))
+      val viaInt8 = fusedRows(IndexKind.Sq8Served(idx8, Similarity.localize(cent))
+        .topK(e, e.filter($"vec_id" < 10), k = 10, prefetch = 100000, nprobe = 8))
       val viaBrute = fusedRows(Similarity.bruteForceTopK(
         e.filter($"vec_id" < 10), e, "vec_id", "embedding", k = 10))
       assert(viaInt8.nonEmpty && viaInt8 == viaBrute,
@@ -1240,9 +1251,8 @@ class OpsSpec extends SparkSpec {
           .collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
           .toSet
-      val viaServed = diversified(Similarity.ivfTopKServedInt8(idx8, e,
-        Similarity.localize(cent), "vec_id", "embedding",
-        e.filter($"vec_id" < 10), k = 10, prefetch = 100000, nprobe = 8))
+      val viaServed = diversified(IndexKind.Sq8Served(idx8, Similarity.localize(cent))
+        .topK(e, e.filter($"vec_id" < 10), k = 10, prefetch = 100000, nprobe = 8))
       val viaBrute = diversified(Similarity.bruteForceTopK(
         e.filter($"vec_id" < 10), e, "vec_id", "embedding", k = 10))
       assert(viaServed.nonEmpty && viaServed == viaBrute,
@@ -1355,9 +1365,8 @@ class OpsSpec extends SparkSpec {
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
         .toSet
-    val viaServed = diversified(Similarity.ivfTopKServedPQ(idx, e, books,
-      coarse, "vec_id", "embedding", e.filter($"vec_id" < 10),
-      k = 10, prefetch = 100000, nprobe = 8, dim = 64))
+    val viaServed = diversified(IndexKind.PqServed(idx, coarse, books)
+      .topK(e, e.filter($"vec_id" < 10), k = 10, prefetch = 100000, nprobe = 8))
     val viaBrute = diversified(Similarity.bruteForceTopK(
       e.filter($"vec_id" < 10), e, "vec_id", "embedding", k = 10))
     assert(viaServed.nonEmpty && viaServed == viaBrute,
@@ -1660,8 +1669,9 @@ class OpsSpec extends SparkSpec {
         e.filter($"vec_id" % 40 === r), cent, "vec_id", "embedding"), i + 1L)
     }
     def wave(): Seq[org.apache.spark.sql.Row] =
-      Similarity.ivfTopKProbed(e, target.current(spark).get, cent,
-          "vec_id", "embedding", probeFilter = $"vec_id" < 20, k = 3, nprobe = 2)
+      Similarity.ivfTopK(e.filter($"vec_id" < 20),
+          e.join(target.current(spark).get, "vec_id"), Similarity.localize(cent),
+          "vec_id", "embedding", k = 3, nprobe = 2)
         .orderBy($"probe_id", $"rn").collect().toSeq
     val before = wave()
     assert(before.nonEmpty)
@@ -1722,8 +1732,9 @@ class OpsSpec extends SparkSpec {
       "appends must INHERIT the build's quantizer tag")
     def recallOf(): Double = {
       val c = Similarity.pairedCentroids(spark, assignT, centT).get
-      val served = Similarity.ivfTopKProbed(aug, assignT.current(spark).get, c,
-          "vec_id", "embedding", probeFilter = $"vec_id" < 20, k = 3, nprobe = 2)
+      val served = Similarity.ivfTopK(aug.filter($"vec_id" < 20),
+          aug.join(assignT.current(spark).get, "vec_id"), Similarity.localize(c),
+          "vec_id", "embedding", k = 3, nprobe = 2)
         .select($"probe_id", $"cand_id")
       val truth = Similarity.bruteForceTopK(
           aug.filter($"vec_id" < 20), aug, "vec_id", "embedding", k = 3)
@@ -2296,9 +2307,8 @@ class OpsSpec extends SparkSpec {
     // candidacy consequence: even at prefetch = |corpus| the dropped id
     // can never be returned — the wave reads only the index
     val cent = Seq((0L, Seq.fill(dim)(0.1)))
-    val served = Similarity.ivfTopKServedInt8(q8, df, cent,
-        "vec_id", "embedding", df.filter($"vec_id" === 1L),
-        k = 3, prefetch = 4, nprobe = 1)
+    val served = IndexKind.Sq8Served(q8, cent)
+      .topK(df, df.filter($"vec_id" === 1L), k = 3, prefetch = 4, nprobe = 1)
       .select("cand_id").as[Long].collect().toSet
     assert(!served.contains(2L), "a dropped zero vector was served")
     assert(served == Set(3L, 4L),
@@ -2331,9 +2341,8 @@ class OpsSpec extends SparkSpec {
     // without the drop, the zero vector's exact re-rank score would be
     // NaN, which a descending sort ranks FIRST — the wave must return
     // only real candidates even at prefetch = |corpus|
-    val served = Similarity.ivfTopKServedPQ(pq, df, books, coarse,
-        "vec_id", "embedding", df.filter($"vec_id" === 1L),
-        k = 3, prefetch = 100, nprobe = 1, dim = dim)
+    val served = IndexKind.PqServed(pq, coarse, books)
+      .topK(df, df.filter($"vec_id" === 1L), k = 3, prefetch = 100, nprobe = 1)
       .select("cand_id").as[Long].collect().toSet
     assert(!served.contains(2L), "a dropped zero vector was served")
     assert(served == Set(3L, 4L),

@@ -315,9 +315,9 @@ class PlanSpec extends SparkSpec {
       "embedding", k = 8, iters = 2, materialize = true, withVec = true)
     try {
       val idx8 = graft.ops.Similarity.quantizeInt8(index, "vec_id", "embedding")
-      val p = plan(graft.ops.Similarity.ivfTopKServedInt8(idx8, e,
-        graft.ops.Similarity.localize(cent), "vec_id", "embedding",
-        e.filter($"vec_id" < 20), k = 3, prefetch = 6, nprobe = 2))
+      val p = plan(graft.ops.IndexKind.Sq8Served(idx8,
+          graft.ops.Similarity.localize(cent))
+        .topK(e, e.filter($"vec_id" < 20), k = 3, prefetch = 6, nprobe = 2))
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
         s"SQ8 serve exploded to all pairs:\n$p")
       assert(p.contains("HashJoin") || p.contains("SortMergeJoin"),
@@ -388,9 +388,8 @@ class PlanSpec extends SparkSpec {
     val idx8 = assignT.current(spark).get
     val c = graft.ops.Similarity.pairedQuantizer(spark, assignT, centT).get
     val e = graft.core.Tables.t(spark, sfDir, "embeddings")
-    val wave = plan(graft.ops.Similarity.ivfTopKServedInt8(idx8, e, c,
-      "vec_id", "embedding", e.filter($"vec_id" < 20),
-      k = 3, prefetch = 6, nprobe = 2))
+    val wave = plan(graft.ops.IndexKind.Sq8Served(idx8, c)
+      .topK(e, e.filter($"vec_id" < 20), k = 3, prefetch = 6, nprobe = 2))
     assert(!wave.contains("CartesianProduct") && !wave.contains("BroadcastNestedLoopJoin"),
       s"SQ8 wave over the versioned index exploded to all pairs:\n$wave")
     assert(wave.contains("HashJoin") || wave.contains("SortMergeJoin"),
@@ -529,9 +528,8 @@ class PlanSpec extends SparkSpec {
     val idx = assignT.current(spark).get
     val (sc, sb) = graft.ops.Similarity.pairedPqBundle(spark, assignT, bundleT).get
     val e = graft.core.Tables.t(spark, sfDir, "embeddings")
-    val wave = plan(graft.ops.Similarity.ivfTopKServedPQ(idx, e, sb, sc,
-      "vec_id", "embedding", e.filter($"vec_id" < 20),
-      k = 3, prefetch = 48, nprobe = 2, dim = 64))
+    val wave = plan(graft.ops.IndexKind.PqServed(idx, sc, sb)
+      .topK(e, e.filter($"vec_id" < 20), k = 3, prefetch = 48, nprobe = 2))
     assert(!wave.contains("CartesianProduct") && !wave.contains("BroadcastNestedLoopJoin"),
       s"ADC wave over the versioned index exploded to all pairs:\n$wave")
     assert(wave.contains("HashJoin") || wave.contains("SortMergeJoin"),

@@ -7,18 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the suite runtime dominated by actual work, not session spin-up).
   */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.core.GraftSession.local(4, "graft-test")
   val sfDir = "/root/testdata/sf0.001"
 }
 
